@@ -59,23 +59,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation
 
 from camden_spark.config import DedupConfig
-from camden_spark.plans.caches import track_release
+from camden_spark.plans.caches import _persistent_rdd_ids, track_blocks_since
 
 #: seeds tried for injective 64-bit node ids before the url-string fallback
 #: (module-level so tests can monkeypatch it to force the fallback path)
 ID_SEEDS: tuple[int, ...] = tuple(range(42, 48))
-
-
-def _persistent_rdds(spark) -> dict:
-    """id → java RDD handle for every RDD currently holding storage blocks
-    (the JVM-side map behind the Storage UI tab)."""
-    jmap = spark.sparkContext._jsc.sc().getPersistentRDDs()
-    it = jmap.iterator()
-    out = {}
-    while it.hasNext():
-        t = it.next()
-        out[t._1()] = t._2()
-    return out
 
 
 def connected_components(
@@ -104,17 +92,13 @@ def connected_components(
     spark = edges.sparkSession
 
     # localCheckpoint-mode block bookkeeping (cache-hygiene, VERDICT r2 #7):
-    # each eager localCheckpoint leaves executor-storage blocks that
-    # DataFrame.unpersist cannot reach (the storage belongs to the internal
-    # checkpointed RDD, and its lineage is truncated).  ONE diff of the
-    # session's persistent-RDD map around the whole CC run records every
-    # block it created; freeing is deferred entirely to the session cache
-    # registry (release_caches, once consumers are done with the returned
-    # frame).  Deliberately NOT per-iteration: bookkeeping must add zero
-    # work inside the hot loop (a per-truncate diff + eager frees measured
-    # ~1.5x on the full-pipeline wall), and the intermediates it would free
-    # early are small (url, label) tables.
-    before_cc = set(_persistent_rdds(spark)) if checkpoint_dir is None else set()
+    # ONE diff of the session's persistent-RDD map around the whole CC run
+    # registers every block it created for release_caches (once consumers
+    # are done with the returned frame).  Deliberately NOT per-iteration:
+    # bookkeeping must add zero work inside the hot loop (a per-truncate
+    # diff + eager frees measured ~1.5x on the full-pipeline wall), and the
+    # intermediates it would free early are small (url, label) tables.
+    before_cc = _persistent_rdd_ids(spark) if checkpoint_dir is None else set()
 
     def truncate(df: DataFrame, name: str) -> DataFrame:
         """Materialize + truncate lineage; the action also collects any
@@ -266,21 +250,7 @@ def connected_components(
         status["checkpoint"] = "local" if checkpoint_dir is None else "reliable"
         status["node_id"] = node_id_mode
     if checkpoint_dir is None:
-        created = {
-            i: r
-            for i, r in _persistent_rdds(spark).items()
-            if i not in before_cc
-        }
-        if created:
-
-            def _free_cc_blocks(blocking: bool) -> None:
-                for rdd in created.values():
-                    try:
-                        rdd.unpersist(blocking)
-                    except Exception:
-                        pass
-
-            track_release(_free_cc_blocks)
+        track_blocks_since(spark, before_cc)
     # restore url-keyed, min-URL cluster semantics: ONE groupBy(component) →
     # min(url) after convergence replaces per-iteration string shuffles
     comp_urls = labels.join(nodes, "nid").select("url", "label")

@@ -19,7 +19,8 @@ Reference semantics reproduced here:
 At 10^12 rows the grouped relation is kept LONG (one row per url with a
 cluster id), never materialized as per-key arrays: ``collect_list`` on a
 mega-cluster would concentrate a hot key on one task.  Both windows below
-share one hash partitioning on ``checksum`` → a single shuffle.
+share one hash partitioning on ``checksum`` → a single shuffle, which also
+yields ``canon_url``, the group's min (= ``rn == 1``) url: its cluster id.
 """
 
 from __future__ import annotations
@@ -45,7 +46,7 @@ def exact_dedup_clusters(
     pages: DataFrame, cfg: DedupConfig | None = None
 ) -> DataFrame:
     """Full exact-dup clustering: one row per url with
-    (url, checksum, cluster_size, rn, is_canonical).
+    (url, checksum, cluster_size, rn, canon_url, is_canonical).
 
     ``rn == 1`` rows are canonical (kept), ``rn > 1`` are duplicates (the
     reference's moved files, src/operations.rs:50).  A precomputed
@@ -63,6 +64,7 @@ def exact_dedup_clusters(
         "checksum",
         F.count("*").over(w_all).cast("long").alias("cluster_size"),
         F.row_number().over(w_order).cast("long").alias("rn"),
+        F.min("url").over(w_all).alias("canon_url"),
     ).withColumn("is_canonical", F.col("rn") == F.lit(1))
 
 

@@ -100,6 +100,13 @@ def materialize_barrier(df: DataFrame) -> DataFrame:
     spark = df.sparkSession
     before = _persistent_rdd_ids(spark)
     out = df.localCheckpoint(eager=True)
+    track_blocks_since(spark, before)
+    return out
+
+
+def track_blocks_since(spark, before: set) -> None:
+    """Register every RDD persisted since ``before`` (a
+    :func:`_persistent_rdd_ids` snapshot) with :func:`track_release`."""
     jmap = spark.sparkContext._jsc.sc().getPersistentRDDs()
     it = jmap.iterator()
     created = []
@@ -117,7 +124,6 @@ def materialize_barrier(df: DataFrame) -> DataFrame:
                     pass
 
         track_release(_free)
-    return out
 
 
 def track_release(callback) -> None:

@@ -41,8 +41,9 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 
 
 #: bump when snapshot semantics change (e.g. a stage's dataflow is fixed) —
-#: old-version manifests are treated as absent, never resumed.
-MANIFEST_VERSION = 2
+#: old-version manifests are treated as absent, never resumed.  v3: ``exact``
+#: carries ``canon_url``; ``clusters`` no longer runs CC over exact stars.
+MANIFEST_VERSION = 3
 
 
 def hadoop_file_stat(spark: SparkSession, uri: str) -> tuple[int, int]:

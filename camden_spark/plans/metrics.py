@@ -20,10 +20,12 @@ class StageCounters:
     def __init__(self) -> None:
         self._observations: dict[str, Observation] = {}
 
-    def observe_rows(self, df: DataFrame, name: str) -> DataFrame:
+    def observe_rows(self, df: DataFrame, name: str, where=None) -> DataFrame:
+        """Count the rows of ``df`` (matching Column ``where``) as ``name``."""
         obs = Observation(name)
         self._observations[name] = obs
-        return df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        n = F.count(F.lit(1)) if where is None else F.count_if(where)
+        return df.observe(obs, n.alias("rows"))
 
     def get(self) -> dict[str, int]:
         """Non-blocking: returns only counters whose frame has been acted on.

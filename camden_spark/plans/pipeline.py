@@ -2,17 +2,17 @@
 
 Stage graph (each stage optionally snapshot-checkpointed, F9):
 
-  pages ─ normalize ─┬─ exact:    checksum → window cluster          [stage 1]
-                     └─ sig:      shingles + MinHash + SimHash       [stage 2]
-                          ├─ lsh_pairs:     band join + Jaccard gate [stage 3]
-                          ├─ simhash_pairs: pigeonhole Hamming join  [stage 4]
-                          └─ substr_pairs:  winnow join + SA verify  [stage 5]
-  exact pairs ∪ near pairs → connected components → clusters         [stage 6]
+  pages ─ checksum ─┬─ exact:    window → (rn, canon_url)             [stage 1]
+      (near stages) └─ normalize → canonicals' sig: MinHash, SimHash  [stage 2]
+                              ├─ lsh_pairs:     band join + Jaccard   [stage 3]
+                              ├─ simhash_pairs: pigeonhole Hamming    [stage 4]
+                              └─ substr_pairs:  winnow join + SA      [stage 5]
+  near pairs between canonicals → CC; members inherit via canon_url;
+  exact-only runs skip CC                                             [stage 6]
 
-The exact stage feeds the near stages only through its canonical members:
-rows that are byte-identical to a canonical are excluded from shingling (F7,
-left_anti) — they inherit the canonical's cluster, so a 10^12-doc corpus with
-heavy exact duplication pays near-dup cost only on distinct texts.
+A checksum group already is a component with its min url as canonical, so
+rows byte-identical to a canonical are never shingled (F7) and take their
+canonical's component id — exact: a component's min canonical is its min url.
 """
 
 from __future__ import annotations
@@ -21,10 +21,10 @@ import os
 from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 
 from camden_spark.config import DedupConfig
-from camden_spark.operators.components import assign_clusters
+from camden_spark.operators.components import connected_components
 from camden_spark.operators.exact import exact_dedup_clusters
 from camden_spark.operators.lsh import candidate_pairs_lsh, verify_pairs_jaccard
 from camden_spark.operators.simhash import candidate_pairs_simhash
@@ -52,7 +52,6 @@ def _estimated_scan_partitions(df: DataFrame) -> int:
     decide the fan-out.  Returns -1 when unknown (in-memory source, or files
     we cannot stat, e.g. object-store URIs): callers must then leave the
     source partitioning alone rather than risk a full-corpus shuffle."""
-    import os
     from urllib.parse import urlparse
 
     try:
@@ -184,11 +183,15 @@ class DedupPipeline:
         # needs no SEPARATE warming action: exact's warm count scans norm
         # through its cache and populates it in the same job (one fewer
         # count barrier per run — VERDICT r6 ask #3).
-        norm = track_cache(
-            normalize_pages(
-                with_checksum(base, cfg), cfg.lowercase, cfg.collapse_whitespace
-            ).select("url", "warc_ts", "checksum", "norm_text")
-        )
+        n_branches = sum((self.enable_lsh, self.enable_simhash, self.enable_substr))
+        norm = with_checksum(base, cfg).select("url", "warc_ts", "checksum", "text")
+        if n_branches:
+            norm = track_cache(
+                normalize_pages(norm, cfg.lowercase, cfg.collapse_whitespace)
+                .select("url", "warc_ts", "checksum", "norm_text")
+            )
+        else:  # exact only: the checksum is all the run reads
+            norm = norm.drop("text")
 
         # ---- stage 1: exact (camden semantics) -------------------------
         exact = warm_cache(
@@ -200,26 +203,27 @@ class DedupPipeline:
         )
 
         # exact-dup pairs: every non-canonical pairs with its canonical
-        canon = exact.filter(F.col("rn") == 1).select(
-            F.col("checksum"), F.col("url").alias("canon_url")
+        exact_pairs = exact.filter(F.col("rn") > 1).select(
+            F.least("canon_url", "url").alias("url_a"),
+            F.greatest("canon_url", "url").alias("url_b"),
+            F.lit("exact").alias("source"),
         )
-        exact_pairs = (
-            exact.filter(F.col("rn") > 1)
-            .select("checksum", "url")
-            .join(canon, "checksum")
-            .select(
-                F.least("canon_url", "url").alias("url_a"),
-                F.greatest("canon_url", "url").alias("url_b"),
-                F.lit("exact").alias("source"),
-            )
-        )
+        # url keys need not be unique (re-crawls, canonicalize_urls): a url in
+        # two checksum groups joins them, so bridge each group's canonical to
+        # the url's min canonical (none when every url is a single row)
+        bridges = exact.select(
+            F.min("canon_url").over(Window.partitionBy("url")).alias("url_a"),
+            F.col("canon_url").alias("url_b"),
+            F.lit("bridge").alias("source"),
+        ).filter(F.col("url_a") != F.col("url_b"))
 
         # near stages run on distinct texts only (canonicals + singletons).
         # Derived from the cached `norm` (no second full-width cache): the
         # semi join broadcasts the url set.
-        distinct_pages = norm.select("url", "norm_text").join(
-            exact.filter(F.col("is_canonical")).select("url"), "url", "left_semi"
-        )
+        if n_branches:
+            distinct_pages = norm.select("url", "norm_text").join(
+                exact.filter(F.col("is_canonical")).select("url"), "url", "left_semi"
+            )
 
         pair_frames = [exact_pairs]
 
@@ -325,9 +329,6 @@ class DedupPipeline:
             )
 
         lsh_pairs = sim_pairs = fp_pre = None
-        n_branches = sum(
-            (self.enable_lsh, self.enable_simhash, self.enable_substr)
-        )
         if store is None and n_branches > 1:
             # Overlap the independent candidate branches from driver
             # threads: each branch's actions leave executors idle during
@@ -426,37 +427,42 @@ class DedupPipeline:
         all_pairs = pair_frames[0]
         for pf in pair_frames[1:]:
             all_pairs = all_pairs.unionByName(pf)
-        # materialize the final pair set ONCE: CC consumes it through its
-        # edge truncation and callers force PipelineResult.pairs afterwards —
-        # with a plain cache() both re-ran every verify stage per action
-        # (materialize_barrier docstring).  Small frame (url pairs + source).
         all_pairs = counters.observe_rows(
-            materialize_barrier(all_pairs.dropDuplicates(["url_a", "url_b"])),
-            "pairs_total",
+            all_pairs.dropDuplicates(["url_a", "url_b"]), "pairs_total"
         )
+        # materialize the pairs and CC's edges (near pairs + bridges) ONCE:
+        # CC consumes them through its truncations and callers force
+        # PipelineResult.pairs afterwards — with a plain cache() both re-ran
+        # every verify stage per action (materialize_barrier docstring).
+        both = materialize_barrier(
+            counters.observe_rows(
+                all_pairs.unionByName(bridges),
+                "cc_edges",
+                where=F.col("source") != "exact",
+            )
+        )
+        all_pairs = both.filter(F.col("source") != "bridge")
+        edges = both.filter(F.col("source") != "exact").select("url_a", "url_b")
 
         def build_clusters() -> DataFrame:
-            cc_status: dict = {}
-            # with a checkpoint dir configured, CC's per-iteration state uses
-            # the RELIABLE parquet path (survives executor loss) instead of
-            # memory-backed localCheckpoint — same store, run-scoped scratch
-            cc_ckpt = (
-                os.path.join(
+            cc_status: dict = {"converged": True, "iterations": 0}
+            out = exact.selectExpr("url", "canon_url AS cluster_id")
+            # no edge, no CC (an uncounted barrier: no job ran, so run it);
+            # a checkpoint dir keeps CC state on the RELIABLE parquet path
+            if counters.get().get("cc_edges", 1):
+                cc_ckpt = None if self.checkpoint_dir is None else os.path.join(
                     self.checkpoint_dir, cfg.config_hash(), "cc_scratch"
                 )
-                if self.checkpoint_dir is not None
-                else None
-            )
-            out = assign_clusters(
-                norm.select("url"),
-                all_pairs.select("url_a", "url_b"),
-                cfg,
-                status=cc_status,
-                checkpoint_dir=cc_ckpt,
-            )
+                comp = connected_components(
+                    edges, cfg, status=cc_status, checkpoint_dir=cc_ckpt
+                ).withColumnRenamed("url", "canon_url")
+                # one join with the small component table
+                out = exact.join(comp, "canon_url", "left").selectExpr(
+                    "url", "coalesce(cluster_id, canon_url) AS cluster_id"
+                )
             # surfaced, never silent: a capped-out CC returns split clusters
             metrics["cc"] = cc_status
-            return out
+            return out.withColumn("is_canonical", F.col("url") == F.col("cluster_id"))
 
         clusters = counters.observe_rows(
             staged(

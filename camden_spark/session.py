@@ -10,6 +10,7 @@ master URL, which is injectable.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -153,7 +154,18 @@ def get_spark(
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # a running session silently keeps its launch-time confs: surface that
+    live = spark.sparkContext.getConf()
+    stale = {
+        k: (v, live.get(k, None)) for k, v in builder._options.items()
+        if k.startswith(("spark.executorEnv.", "spark.sql.codegen.cache."))
+        and live.get(k, None) != v
+    }
+    if stale:
+        msg = f"get_spark: running session ignores (requested, effective) {stale}"
+        warnings.warn(msg, RuntimeWarning, stacklevel=2)
+    return spark
 
 
 #: affinity mask of this process BEFORE pin_executor_fleet first pinned it

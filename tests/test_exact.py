@@ -30,6 +30,12 @@ def test_micro_two_same_one_diff(spark):
     assert by_url["u/a"]["cluster_size"] == 2 and by_url["u/a"]["is_canonical"]
     assert by_url["u/b"]["cluster_size"] == 2 and not by_url["u/b"]["is_canonical"]
     assert by_url["u/c"]["cluster_size"] == 1 and by_url["u/c"]["is_canonical"]
+    assert [by_url[u]["canon_url"] for u in ("u/a", "u/b", "u/c")] == [
+        "u/a", "u/a", "u/c"
+    ]
+    # count, row_number and canon_url share one shuffle on checksum
+    plan = exact_dedup_clusters(df)._jdf.queryExecution().executedPlan()
+    assert plan.toString().count("Exchange ") == 1
     groups = duplicate_groups(exact_dedup_clusters(df)).collect()
     assert {r["url"] for r in groups} == {"u/a", "u/b"}
     stats = dedup_stats(exact_dedup_clusters(df)).first()

@@ -380,3 +380,119 @@ def test_connected_components_status_reports_hashed_ids(spark):
 
     connected_components(edges, status=status).collect()
     assert status["node_id"] == "xxhash64"
+
+
+def _contraction_corpus(spark):
+    """Exact groups whose canonical is also in a near pair, plus one url
+    whose rows sit in two checksum groups.
+
+    * ``u/b1 == u/b2`` (byte-identical) near-dup ``u/a``: b2 must inherit
+      another group's url, ``u/a``;
+    * ``u/c1 == u/c2`` near-dup ``u/d``: ``u/d`` inherits ``u/c1``;
+    * ``u/i`` is a member of ``{u/h, u/i}`` and the canonical of
+      ``{u/i, u/j}``: both groups are one cluster, ``u/h``.
+    """
+    import datetime as _dt
+    import random
+
+    rng = random.Random(7)
+    words = [f"w{i}" for i in range(500)]
+
+    def text(n: int = 60) -> str:
+        return " ".join(rng.choice(words) for _ in range(n))
+
+    def edit(t: str) -> str:
+        toks = t.split()
+        toks[len(toks) // 2] = "edited"
+        return " ".join(toks)
+
+    t_a, t_c = text(), text()
+    ts = _dt.datetime(2025, 1, 1)
+    later = _dt.datetime(2025, 1, 2)
+    t_h, t_i = text(), text()
+    rows = [
+        ("u/a", ts, None, t_a, "en"),
+        ("u/b1", ts, None, edit(t_a), "en"),
+        ("u/b2", ts, None, edit(t_a), "en"),
+        ("u/c1", ts, None, t_c, "en"),
+        ("u/c2", ts, None, t_c, "en"),
+        ("u/d", ts, None, edit(t_c), "en"),
+        ("u/h", ts, None, t_h, "en"),
+        ("u/i", ts, None, t_h, "en"),
+        ("u/i", later, None, t_i, "en"),
+        ("u/j", ts, None, t_i, "en"),
+    ] + [(f"u/s{k}", ts, None, text(), "en") for k in range(6)]
+    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
+    return rows, spark.createDataFrame(rows, schema)
+
+
+def _exact_stars(rows) -> set:
+    """(canonical, member) for every non-first row of each text group."""
+    groups: dict[str, list] = {}
+    for url, ts, _, text, _ in rows:
+        groups.setdefault(text, []).append((url, ts))
+    return {
+        (min(m)[0], url)
+        for m in groups.values()
+        for url, _ in sorted(m)[1:]
+    }
+
+
+NEAR_OFF = dict(enable_lsh=False, enable_simhash=False, enable_substr=False)
+
+
+@pytest.mark.parametrize("flags", [{}, NEAR_OFF], ids=["default", "exact_only"])
+def test_pipeline_equals_cc_over_exact_stars_and_near_pairs(spark, flags):
+    """The pipeline contracts exact groups out of CC; its clusters must still
+    equal CC over every url with exact stars ∪ verified near pairs as edges,
+    and its pair set must still carry every exact pair exactly once."""
+    rows, df = _contraction_corpus(spark)
+    res = DedupPipeline(cfg=CFG, **flags).run(df)
+    got = sorted(map(tuple, res.clusters.collect()))
+    pairs = [tuple(r) for r in res.pairs.select("url_a", "url_b", "source").collect()]
+    counters = res.counters.get()
+    stars = _exact_stars(rows)
+    near = [(a, b) for a, b, s in pairs if s != "exact"]
+    edges = spark.createDataFrame(sorted(stars) + near, "url_a string, url_b string")
+    want = sorted(
+        map(tuple, assign_clusters(df.select("url"), edges, CFG).collect())
+    )
+    res.release()
+    assert got == want
+    labels = dict((u, c) for u, c, _ in got)
+    assert labels["u/j"] == "u/h"  # bridged through the shared url u/i
+    if not flags:
+        assert labels["u/b2"] == "u/a" and labels["u/d"] == "u/c1"
+    assert {(a, b) for a, b, s in pairs if s == "exact"} == stars
+    assert len({(a, b) for a, b, _ in pairs}) == len(pairs)
+    assert counters["pairs_total"] == len(pairs)
+    assert counters["clusters_total"] == len(rows)
+
+
+def test_exact_only_run_skips_cc_and_normalization(spark, pages_df, monkeypatch):
+    """With every near stage off and unique urls, clusters are a projection
+    of the exact stage: no CC, no normalization, identical output to CC
+    over the exact stars."""
+    import camden_spark.plans.pipeline as pipeline_mod
+
+    def forbidden(*_args, **_kwargs):
+        raise AssertionError("exact-only run must not call this")
+
+    monkeypatch.setattr(pipeline_mod, "connected_components", forbidden)
+    monkeypatch.setattr(pipeline_mod, "normalize_pages", forbidden)
+    res = DedupPipeline(cfg=CFG, **NEAR_OFF).run(pages_df)
+    got = sorted(map(tuple, res.clusters.collect()))
+    assert res.metrics["cc"]["iterations"] == 0
+    assert res.counters.get()["cc_edges"] == 0
+    plan = res.clusters._jdf.queryExecution().executedPlan().toString()
+    assert "regexp_replace" not in plan and "lower(" not in plan
+    pdf = pages_df.select("url", "warc_ts", "text").toPandas()
+    stars = _exact_stars(
+        [(u, t, None, x, None) for u, t, x in pdf.itertuples(index=False)]
+    )
+    edges = spark.createDataFrame(sorted(stars), "url_a string, url_b string")
+    want = sorted(
+        map(tuple, assign_clusters(pages_df.select("url"), edges, CFG).collect())
+    )
+    res.release()
+    assert got == want

@@ -674,3 +674,42 @@ def test_warm_cache_populates_before_consumers(spark):
     assert df.count() == 1000
     release_caches()
     assert _storage_rdd_count(spark) == baseline
+
+
+def test_snapshot_from_older_manifest_version_recomputes(spark, tmp_path):
+    """A v2 checkpoint (``exact`` without ``canon_url``, CC over exact stars)
+    must read as absent: the stage recomputes instead of resuming into a
+    missing column."""
+    from camden_spark.plans.checkpoint import MANIFEST_VERSION
+
+    assert MANIFEST_VERSION == 3
+    store = SnapshotStore(str(tmp_path), "c")
+    store.write(spark.range(10), "exact")
+    path = os.path.join(str(tmp_path), "c", "exact", "_MANIFEST.json")
+    with open(path) as f:
+        manifest = json.load(f)
+    manifest["version"] = 2
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+    assert not store.has("exact")
+    assert store.stage(spark, "exact", lambda: spark.range(7)).count() == 7
+    assert store.has("exact")
+
+
+def test_get_spark_warns_when_static_conf_is_ignored(spark, monkeypatch):
+    """getOrCreate on a running session keeps its launch-time confs; a
+    second get_spark asking for different ones must say so."""
+    import warnings
+
+    from camden_spark.session import get_spark
+
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    with warnings.catch_warnings(record=True) as seen:
+        warnings.simplefilter("always")
+        same = get_spark("camden_spark_tests", cores=cores, shuffle_partitions=8)
+    assert same is spark
+    assert not [w for w in seen if "get_spark" in str(w.message)]  # same request
+    monkeypatch.setenv("SPARK_GRAFT_CODEGEN_CACHE", "123")
+    with pytest.warns(RuntimeWarning, match="codegen.cache.maxEntries"):
+        get_spark("camden_spark_tests", cores=cores, shuffle_partitions=8)
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") != "123"
