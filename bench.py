@@ -92,8 +92,8 @@ def main() -> None:
     from camden_spark.session import get_spark
 
     spark = get_spark("camden_spark_bench", cores=cores)
-    # warm the JVM + python workers once so per-query times measure the
-    # plan, not session/worker startup
+    # warm the JVM once so per-query times measure the plan, not session
+    # startup (warm_python_workers forks no python worker: see its docstring)
     from camden_spark.session import warm_python_workers
 
     spark.range(1000).selectExpr("sum(id)").collect()

@@ -17,8 +17,11 @@ all heavy per-document computation runs through vectorized pandas/Arrow UDFs
 (never per-row Python UDFs).
 """
 
-from camden_spark.config import DedupConfig
-from camden_spark.plans.caches import release_caches
+from camden_spark import _zipimport
 
-__all__ = ["DedupConfig", "release_caches"]
+_zipimport.install()
+
+from camden_spark.config import DedupConfig  # noqa: E402
+
+__all__ = ["DedupConfig"]
 __version__ = "0.1.0"

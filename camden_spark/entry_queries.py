@@ -2438,8 +2438,9 @@ def q_embedding_near_dup_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the sizing count is answered by parquet footers on this bare scan;
     # training is TakeOrdered (layout-independent).  NO input resplit here:
     # the numpy cell UDF on a small corpus is faster on few fat tasks than
-    # on 32 thin ones (per-task python round-trip dominates — measured
-    # 0.4 s serial vs 1.0 s at 32 tasks), and the expensive stages
+    # on 32 thin ones (measured 0.4 s serial vs 1.0 s at 32 tasks; that
+    # per-task cost was mostly the worker re-reading pyspark.zip, which
+    # camden_spark/_zipimport.py now skips), and the expensive stages
     # (candidate join, dedupe, verify) get their parallelism from the
     # operator's keyed repartitions, not the scan split.
     n_cells, n_probe = auto_ivf_params(raw.count())

@@ -138,13 +138,3 @@ def jaccard_on_shingles(left: str = "shingles_a", right: str = "shingles_b"):
         F.lit(0.0)
     )
 
-
-def minhash_estimate(left: str = "minhash_a", right: str = "minhash_b"):
-    """Estimated Jaccard = fraction of matching signature slots (JVM-side
-    zip_with + aggregate — no UDF)."""
-    matches = F.aggregate(
-        F.zip_with(F.col(left), F.col(right), lambda a, b: (a == b).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    return matches.cast("double") / F.size(F.col(left)).cast("double")

@@ -29,6 +29,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql.types import LongType
 
+#: Quantizer training-sample bound, and so the most cells k-means can emit:
+#: the default of both ``train_ivf_centroids(sample_rows)`` and
+#: ``auto_ivf_params(max_cells)``.
+IVF_SAMPLE_ROWS = 20_000
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -205,7 +210,7 @@ def _spherical_kmeans(
 
 
 def auto_ivf_params(
-    n_rows: int, max_cells: int = 20_000
+    n_rows: int, max_cells: int = IVF_SAMPLE_ROWS
 ) -> tuple[int, int]:
     """Corpus-size-scaled IVF operating point: ``n_cells ≈ 1.4·√n`` (the
     √n rule every IVF library documents — cells stay O(√n) rows so the
@@ -227,9 +232,9 @@ def auto_ivf_params(
     count while ``n_probe`` kept scaling with the UNclamped value, so the
     effective probe fraction drifted from 1/8 toward exhaustive (the
     all-pairs cliff this function exists to avoid) at exactly the corpus
-    sizes the engine targets.  Clamp FIRST, then derive n_probe, and keep
-    the caller's ``train_ivf_centroids(sample_rows=...)`` in sync (pass
-    the same value here as ``max_cells``)."""
+    sizes the engine targets.  Clamp FIRST, then derive n_probe.  A caller
+    raising ``train_ivf_centroids(sample_rows=...)`` passes the same value
+    here; a request above the sample bound raises in the trainer."""
     n_cells = max(8, min(max_cells, round(1.4 * math.sqrt(max(1, n_rows)))))
     n_probe = min(n_cells, max(6, round(n_cells / 8)))
     return n_cells, n_probe
@@ -238,7 +243,7 @@ def auto_ivf_params(
 def train_ivf_centroids(
     vectors: DataFrame,
     n_cells: int = 64,
-    sample_rows: int = 20_000,
+    sample_rows: int = IVF_SAMPLE_ROWS,
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -273,6 +278,12 @@ def train_ivf_centroids(
     not mix stored cell assignments across trainer versions; rebuild the
     index (centroids + assignments) together.
     """
+    if n_cells > sample_rows:
+        raise ValueError(
+            f"train_ivf_centroids: n_cells={n_cells} exceeds sample_rows="
+            f"{sample_rows}; k-means cannot emit more centroids than sampled "
+            "rows (pass max_cells=sample_rows to auto_ivf_params)"
+        )
     base = vectors.select(id_col, vec_col)
     total = base.count()
     if total > 10 * sample_rows:

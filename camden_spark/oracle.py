@@ -63,10 +63,6 @@ def jaccard_pairs(
     return out
 
 
-def hamming64(a: int, b: int) -> int:
-    return bin((a ^ b) & ((1 << 64) - 1)).count("1")
-
-
 def substring_pairs(
     docs: dict[str, str], min_len: int = 120, min_frac: float = 0.5
 ) -> set[tuple[str, str]]:
@@ -106,45 +102,3 @@ def substring_pairs(
                 out.add((urls[i], urls[j]))
     return out
 
-
-def union_find_clusters(
-    nodes: list[str], pairs: set[tuple[str, str]]
-) -> dict[str, str]:
-    """node → cluster representative (min member), via union-find."""
-    parent = {n: n for n in nodes}
-
-    def find(x: str) -> str:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            lo, hi = sorted((ra, rb))
-            parent[hi] = lo
-    # resolve to min member of each component
-    comp: dict[str, list[str]] = {}
-    for n in nodes:
-        comp.setdefault(find(n), []).append(n)
-    out = {}
-    for members in comp.values():
-        rep = min(members)
-        for m in members:
-            out[m] = rep
-    return out
-
-
-def pair_recall(
-    found: set[tuple[str, str]], truth: set[tuple[str, str]]
-) -> float:
-    """Dup-pair recall; pairs are unordered (url1 < url2).  Transitive closure
-    of `found` is applied first: the metric is over final cluster co-membership,
-    matching how the reference's groups are compared."""
-    if not truth:
-        return 1.0
-    nodes = sorted({u for p in truth | found for u in p})
-    labels = union_find_clusters(nodes, found)
-    hit = sum(1 for a, b in truth if labels.get(a) == labels.get(b))
-    return hit / len(truth)

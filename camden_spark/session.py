@@ -190,8 +190,9 @@ def pin_executor_fleet(
     parent ``taskset`` gives every executor the UNION of cores and lets the
     scheduler float them; per-TID ``sched_setaffinity`` over every thread in
     ``/proc/<pid>/task`` (taskset -a semantics — a bare pid call would bind
-    only the JVM's main thread) removes that freedom.  Python UDF daemons fork from their executor AFTER this runs
-    (call before warm_python_workers) and inherit the executor's slice.
+    only the JVM's main thread) removes that freedom.  Python UDF daemons
+    fork from their executor at its first UDF task, after this runs, and
+    inherit the executor's slice.
 
     Returns {executor_pid: [cores]} or None when the master is not
     local-cluster.  Raises if fewer executors than the master string
@@ -322,12 +323,15 @@ def pin_executor_fleet(
 
 
 def warm_python_workers(spark: SparkSession, cores: int | None = None) -> None:
-    """Pre-fork one Python UDF worker per core and pre-import numpy/pandas.
+    """Run one tiny Spark job.  Despite the name it starts NO Python worker.
 
-    The first Arrow-UDF stage otherwise pays a simultaneous-import storm
-    (N workers x `import numpy, pandas`), which lands in whatever stage runs
-    first and distorts scaling.  One tiny job moves that cost to session
-    startup — the executor-provisioning phase on a real cluster.
+    It was meant to pre-fork one UDF worker per core and pre-import
+    numpy/pandas, but under ``count()`` Catalyst prunes the unused ``_warm``
+    column, so no UDF runs: no ``pyspark.daemon`` exists after the call,
+    while an ``agg(sum(_warm(id)))`` starts one per core.  The first Arrow-UDF
+    stage therefore still pays the daemon fork and the per-worker
+    ``import numpy, pandas``.  Left as is: a real warm-up would move that
+    cost into every run's set-up, including runs that never use a UDF.
     """
     import pyspark.sql.functions as F
 

@@ -71,7 +71,7 @@ def run(argv: list[str]) -> dict:
 
     # executor-shape scaling legs: SPARK_GRAFT_PIN_EXECUTORS=<cores/exec>
     # pins each local-cluster executor JVM to its own CPU slice (and the
-    # driver to a reserved one) BEFORE python daemons fork
+    # driver to a reserved one) before any UDF task forks a python daemon
     import os as _os
 
     pin_cpe = _os.environ.get("SPARK_GRAFT_PIN_EXECUTORS")

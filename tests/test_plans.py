@@ -304,16 +304,27 @@ def test_auto_ivf_params_sample_clamp():
     most sample_rows distinct centroids, and deriving n_probe from the
     UNclamped 1.4·√n (n ≳ 2e8) silently drifted the probe fraction from
     1/8 toward exhaustive (the all-pairs cliff) at target corpus sizes."""
-    from camden_spark.operators.ann import auto_ivf_params
+    from camden_spark.operators.ann import IVF_SAMPLE_ROWS, auto_ivf_params
 
+    assert IVF_SAMPLE_ROWS == 20_000
     for n in (10**9, 4 * 10**10, 10**12):
         nc, np_ = auto_ivf_params(n)
-        assert nc == 20_000  # the default train_ivf_centroids sample bound
+        assert nc == IVF_SAMPLE_ROWS  # the default train_ivf_centroids bound
         assert np_ == max(6, round(nc / 8))  # derived from the CLAMPED count
     # a caller raising sample_rows gets the matching unclamped point
     nc, np_ = auto_ivf_params(10**9, max_cells=100_000)
     assert nc == round(1.4 * (10**9) ** 0.5)
     assert np_ == max(6, round(nc / 8))
+
+
+def test_train_ivf_centroids_rejects_cells_above_sample(spark):
+    """Asking for more cells than the training sample holds raises before
+    any Spark job, instead of clamping inside k-means."""
+    from camden_spark.operators.ann import train_ivf_centroids
+
+    vecs = spark.createDataFrame([(1, [1.0, 0.0])], "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="exceeds sample_rows"):
+        train_ivf_centroids(vecs, n_cells=9, sample_rows=8)
 
 
 def test_spherical_kmeans_clamp_warns():
