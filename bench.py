@@ -93,11 +93,8 @@ def main() -> None:
 
     spark = get_spark("camden_spark_bench", cores=cores)
     # warm the JVM once so per-query times measure the plan, not session
-    # startup (warm_python_workers forks no python worker: see its docstring)
-    from camden_spark.session import warm_python_workers
-
+    # startup
     spark.range(1000).selectExpr("sum(id)").collect()
-    warm_python_workers(spark)
 
     n_docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).count()
     overrides = {"near_dup_clusters": _near_dup_clusters_bench}

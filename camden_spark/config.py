@@ -99,6 +99,10 @@ class DedupConfig:
     canonicalize_urls: bool = False
 
     # --- execution ------------------------------------------------------
+    #: unused by the engine: the pipeline resplits to defaultParallelism
+    #: (plans/pipeline.spread_input); only the benchmark's traced twin
+    #: (perfbench/traced.py) still reads it.  Kept so config_hash, and with
+    #: it checkpoint resume, does not change.
     shuffle_partitions: int = 32
     #: target partition count for band/block/fingerprint-key repartitions
     #: before the self-joins; 0 = auto (2x the session's defaultParallelism —

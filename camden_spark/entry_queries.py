@@ -40,7 +40,7 @@ from camden_spark.operators.substr import (
     verify_pairs_substr,
     with_fingerprints,
 )
-from camden_spark.plans.pipeline import DedupPipeline
+from camden_spark.plans.pipeline import DedupPipeline, spread_input
 from camden_spark.sources.pages import normalize_pages, pages_from_documents
 
 CFG = DedupConfig()
@@ -103,34 +103,6 @@ _SHINGLES_5GRAM_SQL = _shingles_kgram_sql(5)
 
 def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-
-
-def _spread_input(df: DataFrame, udf_bound: bool = False) -> DataFrame:
-    """Byte-aware input resplit for queries with heavy PER-ROW stages
-    (tokenize → 5-gram shingling, Arrow signature UDFs): a small or
-    unsplittable parquet input arrives as a handful of scan tasks (one 0.6 MB
-    documents.parquet = ONE task under maxPartitionBytes), which serializes
-    the expensive map work on a single core — measured 2×3-4 s single-task
-    stages in decontaminate/dedup_incremental at sf0.1.  Same estimator as
-    the pipeline's input resplit (plans/pipeline.py): repartition only when
-    the file-byte-derived scan fan-out is below the session parallelism, so
-    a production corpus that already splits into thousands of tasks is left
-    untouched (no extra full-corpus shuffle at scale).  Row content is
-    unchanged — results are partitioning-invariant.
-
-    ``udf_bound``: the downstream heavy stage is an Arrow/pandas UDF whose
-    per-TASK python round-trip (~50-100 ms) outweighs per-row work on thin
-    partitions — spread to a quarter of the parallelism instead of all of
-    it (measured on q_lsh_pairs at sf0.1: 8 parts 4.70 s, 1 part 4.96 s,
-    32 parts 5.98 s); pure-Catalyst shingling keeps the full fan-out."""
-    from camden_spark.plans.pipeline import _estimated_scan_partitions
-
-    n = df.sparkSession.sparkContext.defaultParallelism
-    if udf_bound:
-        n = max(2, n // 4)
-    if 0 < _estimated_scan_partitions(df) < n:
-        return df.repartition(n)
-    return df
 
 
 def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -718,7 +690,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     index side of a real deployment is the pre-computed posting table, so
     nothing here rescans admitted docs' text).  Emits the ADMITTED rows.
     Index = doc_id < 250, batch = doc_id ≥ 250 (deterministic split)."""
-    docs = _spread_input(_documents(spark, sf_dir))
+    docs = spread_input(_documents(spark, sf_dir))
     toks = docs.select(
         "doc_id",
         F.sha2("text", 256).alias("checksum"),
@@ -810,7 +782,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus × benchmark pairs."""
     from camden_spark.operators.decontam import decontaminate
 
-    docs = _spread_input(_documents(spark, sf_dir))
+    docs = spread_input(_documents(spark, sf_dir))
     toks = docs.select(
         "doc_id", F.split(F.trim(F.lower("text")), _WS + "+").alias("t")
     )
@@ -864,7 +836,7 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 128-slot signature is exposed as a deterministic 64-bit digest; the
     array-returning ``with_signatures`` stays the internal API."""
     pages = normalize_pages(
-        _spread_input(pages_from_documents(spark, sf_dir), udf_bound=True)
+        spread_input(pages_from_documents(spark, sf_dir), udf_bound=True)
     )
     sig = with_signatures(pages, CFG)
     minhash_digest = F.xxhash64(
@@ -1884,7 +1856,7 @@ def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from camden_spark.plans.caches import materialize_barrier
 
     pages = normalize_pages(
-        _spread_input(pages_from_documents(spark, sf_dir), udf_bound=True)
+        spread_input(pages_from_documents(spark, sf_dir), udf_bound=True)
     )
     # empty docs never near-dup (policy): n_shingles carries the filter the
     # shingle arrays used to
@@ -1912,7 +1884,7 @@ def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = normalize_pages(
-        _spread_input(pages_from_documents(spark, sf_dir), udf_bound=True)
+        spread_input(pages_from_documents(spark, sf_dir), udf_bound=True)
     )
     # include_shingles=False: this query only reads (url, simhash) — the
     # shingle arrays would otherwise ride the Arrow socket just to be
@@ -1931,7 +1903,7 @@ def q_substr_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from camden_spark.plans.caches import warm_cache
 
     pages = normalize_pages(
-        _spread_input(pages_from_documents(spark, sf_dir), udf_bound=True)
+        spread_input(pages_from_documents(spark, sf_dir), udf_bound=True)
     )
     # warm the fingerprint frame exactly like the pipeline's _substr_fp:
     # candidate_pairs_substr scans it for group sizing AND both self-join
@@ -2098,7 +2070,7 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     never leaves the row."""
     from camden_spark.functions.text import repetition_stats
 
-    return repetition_stats(_spread_input(_documents(spark, sf_dir)))
+    return repetition_stats(spread_input(_documents(spark, sf_dir)))
 
 
 SQL_REPETITION_STATS = rf"""

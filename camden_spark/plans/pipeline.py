@@ -84,6 +84,33 @@ def _estimated_scan_partitions(df: DataFrame) -> int:
     return total
 
 
+def spread_input(df: DataFrame, udf_bound: bool = False) -> DataFrame:
+    """Byte-aware input resplit to the session's cores.  A small or
+    unsplittable parquet input arrives as a handful of scan tasks (one
+    0.6 MB documents.parquet is ONE task), which serializes the heavy
+    per-row stages (Arrow UDFs, 5-gram shingling) on one core — measured
+    2×3-4 s single-task stages in decontaminate/dedup_incremental at sf0.1.
+    Repartition to ``defaultParallelism`` only when the file-byte scan
+    fan-out is below it: file COUNT is the wrong measure (one large parquet
+    splits into many scan tasks), and a production corpus that already
+    splits into thousands of tasks takes no extra full-corpus shuffle.
+    In-memory frames and non-stattable stores keep their partitioning.  No
+    more than the core count: every Arrow task pays a fixed Python round
+    trip, so thinner tasks only add waves (the pipeline on web_mixed,
+    4 cores: 4 partitions beat 8 and 32).  Rows are unchanged — results
+    are partitioning-invariant.
+
+    ``udf_bound``: spread to a quarter of the parallelism (floor 2) for a
+    query whose heavy stage is an Arrow UDF (q_lsh_pairs at sf0.1: 8 parts
+    4.70 s, 1 part 4.96 s, 32 parts 5.98 s)."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    if udf_bound:
+        n = max(2, n // 4)
+    if 0 < _estimated_scan_partitions(df) < n:
+        return df.repartition(n)
+    return df
+
+
 @dataclass
 class PipelineResult:
     clusters: DataFrame          # (url, cluster_id, is_canonical)
@@ -158,16 +185,8 @@ class DedupPipeline:
             from camden_spark.functions.web import canonicalize_url
 
             base = base.withColumn("url", canonicalize_url(F.col("url")))
-        # Spread the input across the cluster when it arrives under-split
-        # (a tiny/unsplittable input would run every Arrow UDF on a handful
-        # of cores).  Estimated from file BYTES vs maxPartitionBytes — file
-        # COUNT is wrong (one 1 GB parquet splits into ~70 scan tasks and
-        # must NOT be re-shuffled) and .rdd would materialize the plan.
-        # In-memory frames / non-stattable stores keep source parallelism.
-        if 0 < _estimated_scan_partitions(pages) < max(
-            2, cfg.shuffle_partitions // 2
-        ):
-            base = base.repartition(cfg.shuffle_partitions)
+        # an under-split input would run every Arrow UDF stage on a few cores
+        base = spread_input(base)
         # one scan computes the exact-dup checksum AND the normalized text,
         # then the raw text (and html) are dropped — the cached working set
         # carries exactly what downstream stages read

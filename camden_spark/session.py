@@ -330,8 +330,9 @@ def warm_python_workers(spark: SparkSession, cores: int | None = None) -> None:
     column, so no UDF runs: no ``pyspark.daemon`` exists after the call,
     while an ``agg(sum(_warm(id)))`` starts one per core.  The first Arrow-UDF
     stage therefore still pays the daemon fork and the per-worker
-    ``import numpy, pandas``.  Left as is: a real warm-up would move that
-    cost into every run's set-up, including runs that never use a UDF.
+    ``import numpy, pandas``.  Nothing in the engine, CLI, bench or tools
+    calls it; it stays only because the benchmark harness
+    (perfbench/worker.py) imports it.
     """
     import pyspark.sql.functions as F
 

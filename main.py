@@ -67,7 +67,6 @@ def run(argv: list[str]) -> dict:
     )
 
     spark = get_spark("camden_spark_main", cores=args.cores)
-    from camden_spark.session import warm_python_workers
 
     # executor-shape scaling legs: SPARK_GRAFT_PIN_EXECUTORS=<cores/exec>
     # pins each local-cluster executor JVM to its own CPU slice (and the
@@ -85,7 +84,6 @@ def run(argv: list[str]) -> dict:
         )
         if assign:
             print(f"pinned executors: {assign}", file=sys.stderr)
-    warm_python_workers(spark)
     overrides = {}
     if args.jaccard_threshold is not None:
         overrides["jaccard_threshold"] = args.jaccard_threshold

@@ -458,6 +458,53 @@ def test_empty_input(spark):
     assert res.pairs.count() == 0
 
 
+def _one_file_parquet(df, path):
+    df.coalesce(1).write.parquet(path)
+    return df.sparkSession.read.parquet(path)
+
+
+def test_spread_input_sizes_to_session_cores(spark, tmp_path):
+    from camden_spark.plans.pipeline import spread_input
+
+    n = spark.sparkContext.defaultParallelism
+    assert n >= 2
+    one = _one_file_parquet(spark.range(1000), str(tmp_path / "one"))
+    assert spread_input(one).rdd.getNumPartitions() == n
+    assert spread_input(one, udf_bound=True).rdd.getNumPartitions() == max(2, n // 4)
+    # an estimated scan fan-out of n files already fills the cores
+    spark.range(1000).repartition(n).write.parquet(str(tmp_path / "many"))
+    many = spark.read.parquet(str(tmp_path / "many"))
+    assert spread_input(many) is many
+    # in-memory frames keep their source partitioning
+    mem = spark.range(1000)
+    assert spread_input(mem) is mem
+
+
+def test_pipeline_resplits_one_file_input_to_session_cores(
+    spark, pages_df, tmp_path, monkeypatch
+):
+    import camden_spark.operators.exact as exact_mod
+
+    seen = []
+    real = exact_mod.with_checksum
+
+    def spy(df, cfg):
+        seen.append(df)
+        return real(df, cfg)
+
+    monkeypatch.setattr(exact_mod, "with_checksum", spy)
+    pages = _one_file_parquet(pages_df, str(tmp_path / "pages"))
+    res = DedupPipeline(
+        enable_lsh=False, enable_simhash=False, enable_substr=False,
+        collect_metrics=False,
+    ).run(pages)
+    assert res.clusters.count() == pages_df.select("url").distinct().count()
+    res.release()
+    n = spark.sparkContext.defaultParallelism
+    plan = seen[0]._jdf.queryExecution().executedPlan().toString()
+    assert f"RoundRobinPartitioning({n})" in plan, plan
+
+
 def _storage_rdd_count(spark) -> int:
     """Number of RDDs currently occupying block storage (cached frames that
     have actually materialized)."""

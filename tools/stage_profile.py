@@ -6,32 +6,17 @@ whose effective parallelism is far below the core count are the ones that
 cap strong scaling; gaps between stages are driver/bookkeeping time.
 
 Usage: python tools/stage_profile.py /tmp/evlog8 [--cores 8] [--top 25]
+
+The log is an event file or a ``SPARK_GRAFT_EVENTLOG_DIR`` directory; a
+directory resolves to its newest app, rolled and zstd parts included
+(``scaling_decompose.load_events``).
 """
 
 from __future__ import annotations
 
 import argparse
-import json
-import os
 
-
-def load_events(path: str):
-    if os.path.isdir(path):
-        files = [
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if not f.startswith(".")
-        ]
-        files.sort(key=os.path.getmtime)
-        path = files[-1]
-    with open(path) as fh:
-        for line in fh:
-            line = line.strip()
-            if line:
-                try:
-                    yield json.loads(line)
-                except json.JSONDecodeError:
-                    continue
+from scaling_decompose import load_events
 
 
 def main() -> None:
