@@ -77,7 +77,9 @@ def _near_dup_clusters_bench(spark, sf_dir):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from camden_spark.session import default_cores, get_spark
+
+    cores = default_cores()
 
     # shuffle local dirs on tmpfs when available: the sandbox's single
     # virtual disk otherwise adds device contention a multi-node cluster
@@ -89,7 +91,6 @@ def main() -> None:
         os.environ["SPARK_LOCAL_DIRS"] = shm
 
     from camden_spark.entry_queries import QUERIES, RETIRED_ROWS_ONLY
-    from camden_spark.session import get_spark
 
     spark = get_spark("camden_spark_bench", cores=cores)
     # warm the JVM once so per-query times measure the plan, not session

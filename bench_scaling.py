@@ -1,18 +1,18 @@
 """Scaling-efficiency evidence (north rule: ≥0.8 from N to 4N executors).
 
 No real cluster exists in the sandbox, so the same job runs at several
-parallelism levels on the same input — local[2] / local[8] / local[32] by
-default — in separate processes (fresh JVM each, no warm caches shared).
-Efficiency per adjacent pair = (T_lo / T_hi) / (hi / lo) on the full dedup
-pipeline; the headline ≥0.8 pair is 2→8 (see the generated BASELINE.md for
-why 8→32 measures the box's DRAM-bandwidth wall, not the engine).
+parallelism levels on the same input — local[N/4] and local[N] by default,
+N = session.default_cores() — in separate processes (fresh JVM each, no
+warm caches shared).  A leg above N would only measure oversubscription, so
+it is refused.  Efficiency per adjacent pair = (T_lo / T_hi) / (hi / lo) on
+the full dedup pipeline; the headline ≥0.8 pair is the first one.
 Results → BENCH/scaling.json + BENCH/BASELINE.md.
 
 All legs of one invocation run back-to-back in the same session — absolute
 wall times drift with box state (page cache, thermal), so only same-session
 ratios are meaningful.
 
-Usage: python bench_scaling.py [--docs 60000] [--cores 2 8 32]
+Usage: python bench_scaling.py [--docs 60000] [--cores 1 4]
 """
 
 from __future__ import annotations
@@ -50,17 +50,9 @@ def ensure_corpus(n_docs: int, words: tuple[int, int], path: str) -> str:
 
 
 def run_once(
-    cores: int,
-    corpus: str,
-    out: str,
-    extra_env: dict[str, str] | None = None,
-    taskset_cores: int | None = None,
-    label: str | None = None,
-    eventlog_dir: str | None = None,
-    checkpoint_dir: str | None = None,
+    cores: int, corpus: str, out: str, eventlog_dir: str | None = None
 ) -> dict:
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cores), SPARK_DRIVER_MEM=os.environ.get("SPARK_DRIVER_MEM", "32g"))
-    env.update(extra_env or {})
     # Shuffle/spill local dirs on tmpfs: every leg shares this box's ONE
     # virtual disk, so disk-backed shuffle measures device contention that
     # a real N→4N scale-out does not have (each added node brings its own
@@ -80,9 +72,8 @@ def run_once(
     # stages, inflating the low leg and corrupting the N→4N ratio.  A real
     # 2-core executor has no spare silicon to borrow.
     prefix = []
-    pin_n = taskset_cores if taskset_cores is not None else cores
     if shutil.which("taskset"):
-        prefix = ["taskset", "-c", f"0-{pin_n - 1}"]
+        prefix = ["taskset", "-c", f"0-{cores - 1}"]
     if eventlog_dir:
         # per-(leg, rep) event log for stage-level decomposition via
         # tools/stage_profile.py (shuffle/compute/stage-tail attribution)
@@ -90,13 +81,6 @@ def run_once(
         env["SPARK_GRAFT_EVENTLOG_DIR"] = eventlog_dir
     cmd = [sys.executable, os.path.join(REPO, "main.py"),
            "--input", corpus, "--output", out, "--skip-metrics"]
-    if checkpoint_dir:
-        # reliable-checkpoint leg: CC iterations + stage snapshots go through
-        # parquet (the 100x-scale resumability mode) instead of memory-backed
-        # localCheckpoint.  A FRESH dir per run — resume would skip stages
-        # and measure nothing.
-        shutil.rmtree(checkpoint_dir, ignore_errors=True)
-        cmd += ["--checkpoint-dir", checkpoint_dir]
     proc = subprocess.run(
         prefix + cmd,
         env=env,
@@ -107,12 +91,12 @@ def run_once(
     wall = time.time() - t0
     if proc.returncode != 0:
         print(proc.stdout[-2000:], proc.stderr[-2000:], file=sys.stderr)
-        raise RuntimeError(f"run at {label or f'local[{cores}]'} failed")
+        raise RuntimeError(f"run at local[{cores}] failed")
     with open(os.path.join(out, "summary.json")) as f:
         summary = json.load(f)
     summary["wall_sec_incl_startup"] = round(wall, 1)
     summary["cores"] = cores
-    summary["label"] = label or f"local[{cores}]"
+    summary["label"] = f"local[{cores}]"
     summary["pinned"] = bool(prefix)
     # persist the merged summary so --from-existing keeps the pin flag
     with open(os.path.join(out, "summary.json"), "w") as f:
@@ -136,25 +120,17 @@ def _repeat_note(result: dict) -> str:
 
 
 def main() -> None:
+    from camden_spark.session import default_cores
+
+    n_cpus = default_cores()
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", type=int, default=60000)
     ap.add_argument("--words-lo", type=int, default=120)
     ap.add_argument("--words-hi", type=int, default=300)
-    ap.add_argument("--cores", type=int, nargs="+", default=[2, 8, 32])
     ap.add_argument(
-        "--exec-legs",
-        type=int,
-        nargs="+",
-        default=None,
-        help="EXECUTOR-SHAPE legs (the north rule's literal N→4N executor "
-        "semantics, cross-executor netty shuffle included): executor counts "
-        "per leg, e.g. --exec-legs 1 4 runs local-cluster[1,C,M] vs "
-        "local-cluster[4,C,M] with each executor JVM pinned to its own "
-        "C-core slice and the driver on a reserved slice",
+        "--cores", type=int, nargs="+", default=[max(1, n_cpus // 4), n_cpus],
+        help=f"local[N] legs, each at most this box's {n_cpus} CPUs",
     )
-    ap.add_argument("--cores-per-exec", type=int, default=2)
-    ap.add_argument("--exec-mem-mb", type=int, default=6144)
-    ap.add_argument("--driver-cores", type=int, default=2)
     ap.add_argument(
         "--repeat",
         type=int,
@@ -175,12 +151,6 @@ def main() -> None:
         "(ev_<label>_rep<i>/) for tools/stage_profile.py decomposition",
     )
     ap.add_argument(
-        "--reliable-ckpt",
-        action="store_true",
-        help="run each leg with a FRESH parquet checkpoint dir (CC reliable "
-        "mode + stage snapshots) — measures the resumability mode's cost",
-    )
-    ap.add_argument(
         "--out-json",
         default=None,
         help="write results to this path instead of BENCH/scaling.json and "
@@ -188,46 +158,25 @@ def main() -> None:
         "must not clobber the headline)",
     )
     args = ap.parse_args()
+    over = [c for c in args.cores if c > n_cpus]
+    if over:
+        # taskset accepts CPU ids the box lacks, so such a leg would silently
+        # measure oversubscription, not scaling
+        ap.error(f"legs {over} exceed this box's {n_cpus} CPUs")
 
     work = os.environ.get("BENCH_WORKDIR", "/tmp/camden_bench")
-    cpe, mem, dc = args.cores_per_exec, args.exec_mem_mb, args.driver_cores
-    if args.exec_legs:
-        # the rule's literal shape: N vs 4N executor JVMs, each pinned to
-        # its own cpe-core slice, the driver on a reserved dc-core slice
-        # (a real cluster's driver is a separate machine), cross-executor
-        # shuffle over netty included
-        legs = [
-            {
-                "cores": n * cpe,
-                "label": f"local-cluster[{n},{cpe},{mem}]",
-                "out": f"out_lc{n}x{cpe}",
-                "extra_env": {
-                    "SPARK_GRAFT_MASTER": f"local-cluster[{n},{cpe},{mem}]",
-                    "SPARK_GRAFT_PIN_EXECUTORS": str(cpe),
-                    "SPARK_GRAFT_DRIVER_CORES": str(dc),
-                },
-                "taskset": dc + n * cpe,
-            }
-            for n in args.exec_legs
-        ]
-    else:
-        legs = [
-            {"cores": c, "label": f"local[{c}]", "out": f"out{c}",
-             "extra_env": {}, "taskset": c}
-            for c in args.cores
-        ]
-    levels = [leg["cores"] for leg in legs]
+    levels = args.cores
     if args.from_existing:
         runs = []
-        for leg in legs:
-            p = os.path.join(work, leg["out"], "summary.json")
+        for c in args.cores:
+            p = os.path.join(work, f"out{c}", "summary.json")
             if not os.path.exists(p):  # older workdirs may lack some legs
-                print(f"skipping {leg['label']}: no {p}", file=sys.stderr)
+                print(f"skipping local[{c}]: no {p}", file=sys.stderr)
                 continue
             with open(p) as f:
                 s = json.load(f)
-            s["cores"] = leg["cores"]
-            s.setdefault("label", leg["label"])
+            s["cores"] = c
+            s.setdefault("label", f"local[{c}]")
             runs.append(s)
         if len(runs) < 2:
             raise SystemExit("need at least two existing legs for a report")
@@ -236,41 +185,28 @@ def main() -> None:
         corpus = ensure_corpus(
             args.docs, (args.words_lo, args.words_hi), os.path.join(work, "corpus")
         )
-        # interleave repetitions ([2,8,32], [2,8,32], ...) rather than
-        # repeating each leg back-to-back, so slow host drift hits every
-        # leg equally instead of biasing one
-        samples: dict[str, list[dict]] = {leg["label"]: [] for leg in legs}
+        # interleave repetitions ([1,4], [1,4], ...) rather than repeating
+        # each leg back-to-back, so slow host drift hits every leg equally
+        # instead of biasing one
+        samples: dict[int, list[dict]] = {c: [] for c in args.cores}
         for _rep in range(max(1, args.repeat)):
-            for leg in legs:
-                safe = leg["label"].replace("[", "_").replace("]", "").replace(",", "x")
-                samples[leg["label"]].append(
+            for c in args.cores:
+                samples[c].append(
                     run_once(
-                        leg["cores"], corpus, os.path.join(work, leg["out"]),
-                        extra_env=leg["extra_env"],
-                        taskset_cores=leg["taskset"],
-                        label=leg["label"],
+                        c, corpus, os.path.join(work, f"out{c}"),
                         eventlog_dir=(
                             os.path.join(
-                                work, f"ev_{args.docs}_{safe}_rep{_rep}"
+                                work, f"ev_{args.docs}_local_{c}_rep{_rep}"
                             )
                             if args.eventlog else None
-                        ),
-                        checkpoint_dir=(
-                            os.path.join(work, f"ckpt_{leg['out']}")
-                            if args.reliable_ckpt else None
                         ),
                     )
                 )
         runs = []
-        for leg in legs:
-            best = min(samples[leg["label"]], key=lambda s: s["elapsed_sec"])
+        for c in args.cores:
+            best = min(samples[c], key=lambda s: s["elapsed_sec"])
             runs.append(
-                dict(
-                    best,
-                    samples_sec=[
-                        s["elapsed_sec"] for s in samples[leg["label"]]
-                    ],
-                )
+                dict(best, samples_sec=[s["elapsed_sec"] for s in samples[c]])
             )
     args.docs = runs[0].get("docs", args.docs)
 
@@ -299,7 +235,6 @@ def main() -> None:
     all_pinned = all(r.get("pinned") for r in runs)
     result = {
         "n_docs": args.docs,
-        "mode": "executor-shape" if args.exec_legs else "single-jvm-cores",
         "levels": levels,
         "labels": [r.get("label", f"local[{r['cores']}]") for r in runs],
         "repeat": getattr(args, "repeat", 1),
@@ -320,7 +255,6 @@ def main() -> None:
         "speedup": head["speedup"],
         "target": 0.8,
         "pass": envelope_ok and is_4x and head["scaling_efficiency"] >= 0.8,
-        "reliable_ckpt": bool(getattr(args, "reliable_ckpt", False)),
     }
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     out_json = args.out_json or os.path.join(REPO, "BENCH", "scaling.json")
@@ -362,30 +296,13 @@ def main() -> None:
         )
         for p in pairs
     )
-    mode_note = ""
-    if args.exec_legs:
-        mode_note = (
-            "\nEXECUTOR-SHAPE legs: each level is a separate executor FLEET "
-            f"inside ONE job — local-cluster[N,{cpe},{mem}] runs N executor "
-            f"JVMs x {cpe} cores, each executor JVM sched_setaffinity-pinned "
-            "PER-TID (every thread in /proc/<pid>/task — taskset -a "
-            "semantics; a bare pid call would bind only the JVM main thread "
-            "and let existing GC/netty/task threads float) to its OWN "
-            "disjoint core slice (python UDF daemons fork after pinning and "
-            "inherit it) with the driver (python + gateway JVM "
-            f"holding master/workers) on a reserved {dc}-core slice, mirroring "
-            "a real cluster's separate driver node.  This is literally the "
-            "same job on the same input at N and 4N executors, cross-executor "
-            "netty shuffle included — the north rule's stated semantics, not "
-            "a thread-count proxy.\n"
-        )
     md = f"""# BENCH — measured scaling evidence
 
 Sandbox stand-in for the N → 4N executor scaling rule (no real cluster):
 the SAME full dedup pipeline (exact + MinHash/LSH + SimHash + substring + CC)
 on the SAME seeded {args.docs:,}-doc corpus at each parallelism level,
 fresh JVM per run, idle machine.  {pin_note}
-{mode_note}{_repeat_note(result)}
+{_repeat_note(result)}
 
 | parallelism | pipeline wall (s) | docs/sec |
 |---|---|---|

@@ -69,26 +69,6 @@ class DedupConfig:
     min_overlap_frac: float = 0.5
     max_fingerprint_group: int = 200
 
-    # --- signature backend -----------------------------------------------
-    #: "arrow" (default): the vectorized pandas-UDF kernel
-    #: (functions/shingles.py).  "jvm": shingles/MinHash/SimHash as pure
-    #: Catalyst builtins (functions/jvm_sig.py) — zero python workers in the
-    #: hot stage.  Both compute the same distinct 5-token-window shingle
-    #: SETS (tested: exact Jaccard parity), but the hash families differ, so
-    #: cluster assignments are backend-keyed — hence a config field (it
-    #: feeds config_hash / checkpoint identity).
-    #:
-    #: Why arrow is the default: the round-3 scaling miss was hypothesized
-    #: to be JVM<->python-worker socket traffic, so round 4 built the jvm
-    #: path and measured both in one interleaved pinned session (500k and
-    #: 200k docs, BENCH/backend_ab.json).  Result: jvm is ~1.4x slower
-    #: absolute (its shingle explode is an interpreted-HOF Generate emitting
-    #: ~200 rows/doc; the numpy kernel vectorizes the same arithmetic) AND
-    #: scales worse 2->8 (0.57 vs 0.65 — the extra allocation/GC pressure
-    #: contends harder than the Arrow socket it removed).  The jvm backend
-    #: stays available for environments where python workers are banned.
-    sig_backend: str = "arrow"
-
     # --- text normalization --------------------------------------------
     lowercase: bool = True
     collapse_whitespace: bool = True
@@ -122,8 +102,6 @@ class DedupConfig:
             )
         if self.checksum_algo not in ("sha256", "xxhash64"):
             raise ValueError(f"unknown checksum_algo {self.checksum_algo!r}")
-        if self.sig_backend not in ("jvm", "arrow"):
-            raise ValueError(f"unknown sig_backend {self.sig_backend!r}")
 
     def config_hash(self) -> str:
         """Stable hash of all semantic knobs — keys checkpoint manifests."""

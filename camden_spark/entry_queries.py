@@ -33,7 +33,7 @@ from camden_spark.operators.exact import (
     duplicate_groups,
     exact_dedup_clusters,
 )
-from camden_spark.operators.lsh import candidate_pairs_lsh, verify_pairs_jaccard
+from camden_spark.operators.lsh import candidate_pairs_lsh, pair_urls, verify_pairs_jaccard
 from camden_spark.operators.simhash import candidate_pairs_simhash
 from camden_spark.operators.substr import (
     candidate_pairs_substr,
@@ -1870,13 +1870,8 @@ def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join — without it both consumers recompute the band-join subtree
     # (same rationale/measurement as the pipeline's build_lsh)
     cand = materialize_barrier(cand)
-    pair_urls = (
-        cand.select(F.col("url_a").alias("url"))
-        .union(cand.select(F.col("url_b").alias("url")))
-        .distinct()
-    )
     sh = with_shingles(
-        pages.select("url", "norm_text").join(pair_urls, "url", "left_semi"),
+        pages.select("url", "norm_text").join(pair_urls(cand), "url", "left_semi"),
         CFG,
     )
     return verify_pairs_jaccard(cand, sh, CFG)

@@ -107,33 +107,38 @@ def candidate_pairs_lsh(
     return pairs, metrics
 
 
-def verify_pairs_jaccard(
-    pairs: DataFrame, sig: DataFrame, cfg: DedupConfig | None = None
-) -> DataFrame:
-    """Exact-Jaccard verification of candidate pairs against the distinct
-    shingle sets — JVM-side array_intersect/array_union, no UDF.
-
-    Returns (url_a, url_b, jaccard) for pairs ≥ cfg.jaccard_threshold.
-    """
-    cfg = cfg or DedupConfig()
-    pairs = track_cache(pairs)  # consumed 3x below (url set x2 + the join)
-    # prune the (wide, shingle-array-carrying) signature table to urls that
-    # actually appear in candidate pairs BEFORE the shuffle joins — the full
-    # corpus's shingle arrays must never ride an exchange for a small pair set
-    pair_urls = (
+def pair_urls(pairs: DataFrame) -> DataFrame:
+    """Distinct ``url`` of either side of a (url_a, url_b) pair set — the
+    semi-join key that prunes a corpus-wide table to the candidates before
+    a wide column (shingle arrays, text bodies) rides an exchange."""
+    return (
         pairs.select(F.col("url_a").alias("url"))
         .union(pairs.select(F.col("url_b").alias("url")))
         .distinct()
     )
+
+
+def verify_pairs_jaccard(
+    pairs: DataFrame, sh: DataFrame, cfg: DedupConfig | None = None
+) -> DataFrame:
+    """Exact-Jaccard verification of candidate pairs against the distinct
+    shingle sets — JVM-side array_intersect/array_union, no UDF.
+
+    ``sh`` carries ``(url, shingles)``.  The caller prunes it to
+    ``pair_urls(pairs)`` BEFORE shingling, so the full corpus's shingle
+    arrays are never computed or shuffled for a small pair set; an unpruned
+    ``sh`` gives the same rows, it only moves more bytes.
+
+    Returns (url_a, url_b, jaccard) for pairs ≥ cfg.jaccard_threshold.
+    """
+    cfg = cfg or DedupConfig()
     # barrier, not bare lazy reuse: sh is joined TWICE below (side a and
     # side b) and AQE materializes the two join branches as concurrent
     # jobs — cold, they each recompute the shingle subtree (the duplicated
     # ~108 MB Arrow stages measured on the multi-executor scaling legs).
     # sh is pair-pruned, i.e. orders of magnitude smaller than the corpus,
     # which is exactly materialize_barrier's intended size class.
-    sh = materialize_barrier(
-        sig.select("url", "shingles").join(pair_urls, "url", "left_semi")
-    )
+    sh = materialize_barrier(sh.select("url", "shingles"))
     a = sh.select(
         F.col("url").alias("url_a"), F.col("shingles").alias("shingles_a")
     )

@@ -29,6 +29,7 @@ from pyspark.sql.types import (
 )
 
 from camden_spark.config import DedupConfig
+from camden_spark.operators.lsh import pair_urls
 from camden_spark.plans.caches import track_cache
 from camden_spark.functions.substr import (
     batch_winnow,
@@ -116,13 +117,8 @@ def verify_pairs_substr(
     cfg = cfg or DedupConfig()
     pairs = track_cache(pairs)  # consumed 3x below (url set x2 + the join)
     # prune the corpus to candidate urls before shuffling text bodies
-    pair_urls = (
-        pairs.select(F.col("url_a").alias("url"))
-        .union(pairs.select(F.col("url_b").alias("url")))
-        .distinct()
-    )
     texts = pages.select("url", F.col(text_col).alias("_t")).join(
-        pair_urls, "url", "left_semi"
+        pair_urls(pairs), "url", "left_semi"
     )
     a = texts.select(F.col("url").alias("url_a"), F.col("_t").alias("text_a"))
     b = texts.select(F.col("url").alias("url_b"), F.col("_t").alias("text_b"))

@@ -26,14 +26,13 @@ from pyspark.sql import DataFrame, Window
 from camden_spark.config import DedupConfig
 from camden_spark.operators.components import connected_components
 from camden_spark.operators.exact import exact_dedup_clusters
-from camden_spark.operators.lsh import candidate_pairs_lsh, verify_pairs_jaccard
+from camden_spark.operators.lsh import candidate_pairs_lsh, pair_urls, verify_pairs_jaccard
 from camden_spark.operators.simhash import candidate_pairs_simhash
 from camden_spark.operators.substr import (
     candidate_pairs_substr,
     verify_pairs_substr,
     with_fingerprints,
 )
-from camden_spark.functions.jvm_sig import with_shingles_jvm, with_signatures_jvm
 from camden_spark.functions.shingles import with_shingles, with_signatures
 from camden_spark.plans.caches import (
     materialize_barrier,
@@ -246,26 +245,12 @@ class DedupPipeline:
 
         pair_frames = [exact_pairs]
 
-        # signature/shingle backend dispatch (cfg.sig_backend): "jvm" keeps
-        # the whole signature stage inside Catalyst codegen — no python
-        # workers, no JVM<->worker Arrow socket (the measured 2->8 scaling
-        # bottleneck); "arrow" is the vectorized pandas-UDF twin.
-        if cfg.sig_backend == "jvm":
-            def build_sig() -> DataFrame:
-                return with_signatures_jvm(distinct_pages, cfg).select(
-                    "url", "minhash", "simhash"
-                )
-
-            shingle_fn = with_shingles_jvm
-        else:
-            def build_sig() -> DataFrame:
-                return (
-                    with_signatures(distinct_pages, cfg, include_shingles=False)
-                    .filter(F.col("n_shingles") > 0)
-                    .select("url", "minhash", "simhash")
-                )
-
-            shingle_fn = with_shingles
+        def build_sig() -> DataFrame:
+            return (
+                with_signatures(distinct_pages, cfg, include_shingles=False)
+                .filter(F.col("n_shingles") > 0)
+                .select("url", "minhash", "simhash")
+            )
 
         needs_sig = self.enable_lsh or self.enable_simhash
         if needs_sig:
@@ -278,9 +263,9 @@ class DedupPipeline:
             # would otherwise band every empty page together (and flip with
             # corpus size once the mega-band cap kicks in).  They remain
             # singletons unless the exact stage clustered them byte-identical.
-            # (arrow path: include_shingles=False keeps the shingle arrays —
-            # ~60% of the stage's bytes — off the Arrow wire; oversized
-            # in-flight bursts arm the socket flow-control stall, session.py)
+            # (include_shingles=False keeps the shingle arrays — ~60% of
+            # the stage's bytes — off the Arrow wire; oversized in-flight
+            # bursts arm the socket flow-control stall, session.py)
             # warm, for the same concurrent-branch reason as norm/exact:
             # candidate_pairs_lsh's band-size-count and band-join branches
             # both scan sig, and simhash scans it again
@@ -299,13 +284,8 @@ class DedupPipeline:
             cand = materialize_barrier(cand)
             if self.collect_metrics:
                 metrics["lsh"] = m.first().asDict()
-            pair_urls = (
-                cand.select(F.col("url_a").alias("url"))
-                .union(cand.select(F.col("url_b").alias("url")))
-                .distinct()
-            )
-            sh = shingle_fn(
-                distinct_pages.join(pair_urls, "url", "left_semi"), cfg
+            sh = with_shingles(
+                distinct_pages.join(pair_urls(cand), "url", "left_semi"), cfg
             )
             return verify_pairs_jaccard(cand, sh, cfg)
 

@@ -15,6 +15,12 @@ import warnings
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """$SPARK_GRAFT_CPUS (the driver contract), else the CPUs this process
+    may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "camden_spark",
     cores: int | None = None,
@@ -23,7 +29,7 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``cores`` defaults to $SPARK_GRAFT_CPUS (driver contract) or 32.
+    ``cores`` defaults to ``default_cores()``.
     Key scale settings:
 
     * AQE on (runtime shuffle-partition coalescing + skew-join splitting —
@@ -33,7 +39,7 @@ def get_spark(
       documents have bounded memory
     * UTC session timezone so timestamp semantics match the DuckDB oracle
     """
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or default_cores()
     shuffle_partitions = shuffle_partitions or max(cores * 2, 8)
     # single-threaded BLAS in python workers: Spark is the parallelism
     # layer — N concurrent pandas-UDF tasks each spawning an OpenBLAS/OMP
@@ -47,10 +53,9 @@ def get_spark(
     for var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
         os.environ.setdefault(var, "1")
         blas_env[var] = os.environ[var]
-    # master override for the executor-shape scaling legs: e.g.
+    # master override, a deployment setting: e.g.
     # SPARK_GRAFT_MASTER=local-cluster[4,2,6144] runs 4 executor JVMs x 2
-    # cores x 6144 MB — real cross-executor netty shuffle, the N→4N shape
-    # of the north rule, still on one box (see bench_scaling.py --exec-legs)
+    # cores x 6144 MB — real cross-executor netty shuffle on one box
     master = os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cores}]"
     builder = (
         SparkSession.builder.appName(app_name)
@@ -95,16 +100,6 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             os.environ.get("SPARK_GRAFT_ARROW_BATCH", "512"),
         )
-        # the sig_backend="jvm" signature stage is ONE HashAggregate with 193
-        # output fields (128 MinHash min-slots + 64 SimHash bit sums +
-        # count); the default maxFields=100 silently knocks it out of
-        # whole-stage codegen.  512 restores codegen for wide aggregates
-        # (Spark splits the generated code into sub-64KB methods, so the
-        # ceiling is safe).  Measured effect on that stage is small — its
-        # cost lives in the interpreted-HOF shingle Generate, which no
-        # codegen setting reaches — but interpreted wide aggregates burn
-        # memory bandwidth this box shares across cores, so keep it on.
-        .config("spark.sql.codegen.maxFields", "512")
         # the generated-class cache defaults to 100 entries; one pass over
         # this engine's query suite generates several hundred codegen units,
         # so every repeat run recompiled everything — and Janino compilation
@@ -166,160 +161,6 @@ def get_spark(
         msg = f"get_spark: running session ignores (requested, effective) {stale}"
         warnings.warn(msg, RuntimeWarning, stacklevel=2)
     return spark
-
-
-#: affinity mask of this process BEFORE pin_executor_fleet first pinned it
-#: (see the validation comment inside pin_executor_fleet)
-_ORIG_AFFINITY: set[int] | None = None
-
-
-def pin_executor_fleet(
-    spark: SparkSession,
-    cores_per_exec: int,
-    driver_cores: int = 2,
-    timeout_s: float = 120.0,
-) -> dict[int, list[int]] | None:
-    """Pin each local-cluster executor JVM to its OWN disjoint CPU slice and
-    the driver (this python process + the in-process gateway JVM holding
-    master/workers/driver) to a separate reserved slice.
-
-    Why: the N→4N executor-shape scaling legs must give each executor
-    exactly ``cores_per_exec`` cores — like a real node — and keep the
-    driver off executor silicon (a real cluster's driver is a separate
-    machine).  Executor JVMs are children of the gateway JVM, so a plain
-    parent ``taskset`` gives every executor the UNION of cores and lets the
-    scheduler float them; per-TID ``sched_setaffinity`` over every thread in
-    ``/proc/<pid>/task`` (taskset -a semantics — a bare pid call would bind
-    only the JVM's main thread) removes that freedom.  Python UDF daemons
-    fork from their executor at its first UDF task, after this runs, and
-    inherit the executor's slice.
-
-    Returns {executor_pid: [cores]} or None when the master is not
-    local-cluster.  Raises if fewer executors than the master string
-    promises register within ``timeout_s``.
-    """
-    import re
-    import subprocess
-    import time
-
-    sc = spark.sparkContext
-    m = re.match(r"local-cluster\[(\d+),", sc.master)
-    if m is None:
-        return None
-    n_exec = int(m.group(1))
-    # one Catalyst-only job (no python workers forked yet) blocks until the
-    # fleet has registered and can run tasks
-    spark.range(0, n_exec * cores_per_exec, 1, n_exec * cores_per_exec).count()
-    app_id = sc.applicationId
-    deadline = time.time() + timeout_s
-    pids: list[int] = []
-    while time.time() < deadline:
-        out = subprocess.run(
-            ["pgrep", "-f", "CoarseGrainedExecutorBackend"],
-            capture_output=True, text=True,
-        ).stdout.split()
-        pids = []
-        for pid in out:
-            try:
-                with open(f"/proc/{pid}/cmdline") as f:
-                    cmd = f.read()
-            except OSError:
-                continue
-            if app_id in cmd:
-                pids.append(int(pid))
-        if len(pids) >= n_exec:
-            break
-        time.sleep(0.5)
-    if len(pids) < n_exec:
-        raise RuntimeError(
-            f"pin_executor_fleet: {len(pids)}/{n_exec} executors registered "
-            f"for {app_id} within {timeout_s}s"
-        )
-    if len(pids) > n_exec:
-        # more live backends than the master string promises (e.g. a worker
-        # relaunched an executor between registration and pinning) — a
-        # truncated sorted()[:n_exec] could pin a dead pid while a live
-        # executor floats unpinned, silently skewing a leg.  Refuse.
-        raise RuntimeError(
-            f"pin_executor_fleet: {len(pids)} live executor backends match "
-            f"{app_id} but master promises {n_exec} — fleet unstable, "
-            "refusing to pin a possibly-stale subset"
-        )
-    # validate the full requested core range against what this process may
-    # actually use BEFORE touching any thread: sched_setaffinity raises
-    # OSError(EINVAL) for CPUs outside the machine/cgroup set, and a blanket
-    # per-TID swallow would leave the fleet silently unpinned while the
-    # caller still reports "pinned".
-    need = driver_cores + n_exec * cores_per_exec
-    # validate against the ORIGINAL affinity mask, snapshotted before any
-    # self-pinning: this very function pins the calling process to the
-    # driver slice, so a later call reading the CURRENT mask would
-    # spuriously fail even though re-pinning the fleet is possible
-    # (round-7 advisor fix; works across calls within one process)
-    global _ORIG_AFFINITY
-    if _ORIG_AFFINITY is None:
-        _ORIG_AFFINITY = set(os.sched_getaffinity(0))
-    avail = _ORIG_AFFINITY
-    missing = set(range(need)) - avail
-    if missing:
-        raise RuntimeError(
-            f"pin_executor_fleet: need cores 0..{need - 1} "
-            f"({n_exec} executors × {cores_per_exec} + {driver_cores} driver) "
-            f"but CPUs {sorted(missing)} are outside this process's "
-            f"affinity set ({len(avail)} usable)"
-        )
-
-    def pin_all_threads(proc_pid: int, cpu_set: set[int]) -> None:
-        # sched_setaffinity(pid) binds ONLY that one thread (the TGID's main
-        # thread); a JVM has already spawned its GC/netty/task-launch threads
-        # by the time the fleet registers, and those keep the launcher's
-        # taskset envelope — letting executors float onto the driver slice
-        # and each other's cores.  Pin every existing TID (taskset -a
-        # semantics); threads created afterwards inherit from their (pinned)
-        # creator.
-        try:
-            tids = os.listdir(f"/proc/{proc_pid}/task")
-        except OSError:
-            tids = [str(proc_pid)]
-        for tid in tids:
-            try:
-                os.sched_setaffinity(int(tid), cpu_set)
-            except ProcessLookupError:
-                pass  # thread exited between listdir and the syscall
-            # any other OSError (EINVAL/EPERM) is a real pin failure: the
-            # range check above makes EINVAL unreachable, so let it raise
-            # rather than report a shape that wasn't applied
-
-    def alive_and_matching(proc_pid: int) -> bool:
-        try:
-            with open(f"/proc/{proc_pid}/cmdline") as f:
-                return app_id in f.read()
-        except OSError:
-            return False
-
-    drv = set(range(driver_cores))
-    pin_all_threads(os.getpid(), drv)
-    gateway = subprocess.run(
-        ["pgrep", "-P", str(os.getpid()), "java"],
-        capture_output=True, text=True,
-    ).stdout.split()
-    for p in gateway:
-        pin_all_threads(int(p), drv)
-    assign: dict[int, list[int]] = {}
-    for i, pid in enumerate(sorted(pids)):
-        # re-validate at pin time: the pgrep snapshot is stale by now
-        if not alive_and_matching(pid):
-            raise RuntimeError(
-                f"pin_executor_fleet: executor pid {pid} exited between "
-                "discovery and pinning — fleet unstable, rerun the leg"
-            )
-        cpu_set = set(
-            range(driver_cores + i * cores_per_exec,
-                  driver_cores + (i + 1) * cores_per_exec)
-        )
-        pin_all_threads(pid, cpu_set)
-        assign[pid] = sorted(cpu_set)
-    return assign
 
 
 def warm_python_workers(spark: SparkSession, cores: int | None = None) -> None:

@@ -7,10 +7,11 @@ Usage (cluster)::
         --input /path/to/pages --output /path/to/out \
         --checkpoint-dir /path/to/ckpt
 
-Sandbox (two parallelism levels for the scaling run)::
+Sandbox (cores: --cores, else $SPARK_GRAFT_CPUS, else every CPU this
+process may use)::
 
-    SPARK_GRAFT_CPUS=8  python main.py --input ... --output ...
-    SPARK_GRAFT_CPUS=32 python main.py --input ... --output ...
+    SPARK_GRAFT_CPUS=1 python main.py --input ... --output ...
+    SPARK_GRAFT_CPUS=4 python main.py --input ... --output ...
 
 Mirrors the reference CLI (reference src/cli.rs:27-96: root, target,
 --no-thread, extension list) as: --input (root), --output (target),
@@ -38,10 +39,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     # default None → DedupConfig's 0.65 owns the default (one source of
     # truth: CLI runs must cluster identically to entry()/tests)
     p.add_argument("--jaccard-threshold", type=float, default=None)
-    p.add_argument("--sig-backend", default=None, choices=["jvm", "arrow"],
-                   help="signature stage backend: jvm (Catalyst builtins, no "
-                        "python workers) or arrow (vectorized pandas UDF); "
-                        "default = DedupConfig's")
     p.add_argument("--no-lsh", action="store_true")
     p.add_argument("--no-simhash", action="store_true")
     p.add_argument("--no-substr", action="store_true")
@@ -67,28 +64,9 @@ def run(argv: list[str]) -> dict:
     )
 
     spark = get_spark("camden_spark_main", cores=args.cores)
-
-    # executor-shape scaling legs: SPARK_GRAFT_PIN_EXECUTORS=<cores/exec>
-    # pins each local-cluster executor JVM to its own CPU slice (and the
-    # driver to a reserved one) before any UDF task forks a python daemon
-    import os as _os
-
-    pin_cpe = _os.environ.get("SPARK_GRAFT_PIN_EXECUTORS")
-    if pin_cpe:
-        from camden_spark.session import pin_executor_fleet
-
-        assign = pin_executor_fleet(
-            spark,
-            int(pin_cpe),
-            int(_os.environ.get("SPARK_GRAFT_DRIVER_CORES", "2")),
-        )
-        if assign:
-            print(f"pinned executors: {assign}", file=sys.stderr)
     overrides = {}
     if args.jaccard_threshold is not None:
         overrides["jaccard_threshold"] = args.jaccard_threshold
-    if args.sig_backend is not None:
-        overrides["sig_backend"] = args.sig_backend
     cfg = DedupConfig(**overrides)
     pages = load_pages(spark, args.input)
     t0 = time.time()

@@ -8,14 +8,14 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from camden_spark.datagen import Corpus, generate_corpus
-from camden_spark.session import get_spark
+from camden_spark.session import default_cores, get_spark
 
 
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(
         "camden_spark_tests",
-        cores=int(os.environ.get("SPARK_GRAFT_CPUS", "8")),
+        cores=default_cores(),
         shuffle_partitions=8,
     )
     yield s

@@ -9,7 +9,7 @@ import pytest
 from camden_spark.config import DedupConfig
 from camden_spark.functions.shingles import with_signatures
 from camden_spark.operators.components import assign_clusters, connected_components
-from camden_spark.operators.lsh import candidate_pairs_lsh, verify_pairs_jaccard
+from camden_spark.operators.lsh import candidate_pairs_lsh, pair_urls, verify_pairs_jaccard
 from camden_spark.operators.simhash import candidate_pairs_simhash
 from camden_spark.operators.substr import (
     candidate_pairs_substr,
@@ -50,7 +50,14 @@ def test_signatures_deterministic(spark, pages_df):
 def test_lsh_finds_planted_near_dups(sig_df, corpus):
     pairs, metrics = candidate_pairs_lsh(sig_df, CFG)
     verified = verify_pairs_jaccard(pairs, sig_df, CFG)
-    found = {(r["url_a"], r["url_b"]) for r in verified.collect()}
+    rows = sorted(map(tuple, verified.collect()))
+    found = {(a, b) for a, b, _ in rows}
+    # the verify contract: shingles pruned to the pair urls give the same
+    # (url_a, url_b, jaccard) rows as the full signature table
+    pruned = sig_df.join(pair_urls(pairs), "url", "left_semi")
+    assert pruned.count() < sig_df.count()
+    verified_pruned = verify_pairs_jaccard(pairs, pruned, CFG)
+    assert sorted(map(tuple, verified_pruned.collect())) == rows
     docs = dict(zip(corpus.pages["url"], corpus.pages["text"]))
     truth = oracle.jaccard_pairs(docs, CFG.shingle_k, CFG.jaccard_threshold)
     # recall on true high-Jaccard pairs

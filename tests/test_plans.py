@@ -657,18 +657,19 @@ def test_decontaminate_broadcast_gate(spark):
         spark.conf.set(key, old)
 
 
-def test_sig_backend_flips_checkpoint_identity(tmp_path, spark):
-    """cfg.sig_backend feeds config_hash, so flipping backends must NOT
-    resume from the other backend's snapshots: each backend gets its own
-    config-hash directory and recomputes, and the two runs agree on
-    clusters (backend is an execution detail, not a semantic knob)."""
+def test_config_change_flips_checkpoint_identity(tmp_path, spark):
+    """Every DedupConfig field feeds config_hash, so a run under a changed
+    config must NOT resume from the other config's snapshots: each config
+    gets its own config-hash directory and recomputes.  max_band_group
+    leaves these 6 rows' clusters unchanged (their band groups are far
+    below either cap), so both runs must agree."""
     import datetime as _dt
 
     from camden_spark.config import DedupConfig
 
     assert (
-        DedupConfig(sig_backend="arrow").config_hash()
-        != DedupConfig(sig_backend="jvm").config_hash()
+        DedupConfig().config_hash()
+        != DedupConfig(max_band_group=100).config_hash()
     )
 
     ts = _dt.datetime(2025, 1, 1)
@@ -682,36 +683,21 @@ def test_sig_backend_flips_checkpoint_identity(tmp_path, spark):
         rows, "url string, warc_ts timestamp, html binary, text string, lang string"
     )
 
-    def run(backend):
-        p = DedupPipeline(
-            cfg=DedupConfig(sig_backend=backend),
-            checkpoint_dir=str(tmp_path),
-        )
+    def run(cfg):
+        p = DedupPipeline(cfg=cfg, checkpoint_dir=str(tmp_path))
         res = p.run(df)
         out = sorted((r["url"], r["cluster_id"]) for r in res.clusters.collect())
         res.release()
         return out, p.cfg.config_hash()
 
-    out_arrow, hash_arrow = run("arrow")
-    dirs_after_arrow = set(os.listdir(tmp_path))
-    assert hash_arrow in dirs_after_arrow
-    out_jvm, hash_jvm = run("jvm")
-    # a fresh config-hash directory appeared: the jvm run recomputed rather
-    # than reusing stale arrow-keyed signature snapshots
-    assert hash_jvm in set(os.listdir(tmp_path)) - dirs_after_arrow
-    assert out_arrow == out_jvm
-
-
-def test_pin_executor_fleet_noop_on_local_master(spark):
-    """pin_executor_fleet is exec-shape-leg machinery: on a plain local[N]
-    master it must return None without touching any process affinity."""
-    import os as _os
-
-    from camden_spark.session import pin_executor_fleet
-
-    before = _os.sched_getaffinity(0)
-    assert pin_executor_fleet(spark, 2) is None
-    assert _os.sched_getaffinity(0) == before
+    out_default, hash_default = run(DedupConfig())
+    dirs_after_default = set(os.listdir(tmp_path))
+    assert hash_default in dirs_after_default
+    out_capped, hash_capped = run(DedupConfig(max_band_group=100))
+    # a fresh config-hash directory appeared: the second run recomputed
+    # rather than reusing the first config's stale snapshots
+    assert hash_capped in set(os.listdir(tmp_path)) - dirs_after_default
+    assert out_default == out_capped
 
 
 def test_warm_cache_populates_before_consumers(spark):
@@ -759,9 +745,9 @@ def test_get_spark_warns_when_static_conf_is_ignored(spark, monkeypatch):
     second get_spark asking for different ones must say so."""
     import warnings
 
-    from camden_spark.session import get_spark
+    from camden_spark.session import default_cores, get_spark
 
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    cores = default_cores()
     with warnings.catch_warnings(record=True) as seen:
         warnings.simplefilter("always")
         same = get_spark("camden_spark_tests", cores=cores, shuffle_partitions=8)
@@ -771,3 +757,14 @@ def test_get_spark_warns_when_static_conf_is_ignored(spark, monkeypatch):
     with pytest.warns(RuntimeWarning, match="codegen.cache.maxEntries"):
         get_spark("camden_spark_tests", cores=cores, shuffle_partitions=8)
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") != "123"
+
+
+def test_default_cores_env_override_else_affinity(monkeypatch):
+    """$SPARK_GRAFT_CPUS wins; unset, the core count is the CPUs this
+    process may run on, not a fixed number."""
+    from camden_spark.session import default_cores
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cores() == 3
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert default_cores() == len(os.sched_getaffinity(0))

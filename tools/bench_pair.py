@@ -21,6 +21,10 @@ import subprocess
 import sys
 import time
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from camden_spark.session import default_cores  # noqa: E402
+
 
 def run_bench(repo: str, sf: str, cpus: str) -> dict:
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf, SPARK_GRAFT_CPUS=cpus)
@@ -50,7 +54,7 @@ def main() -> None:
                     help="name=path pairs, e.g. r4=/tmp/r4snap r6=/root/repo")
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--cpus", default="32")
+    ap.add_argument("--cpus", default=str(default_cores()))
     ap.add_argument("--out", default=None)
     args = ap.parse_args()
 

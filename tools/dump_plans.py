@@ -16,10 +16,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     tag = sys.argv[1]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from camden_spark.session import default_cores, get_spark
+
+    cores = default_cores()
     import bench
     from camden_spark.entry_queries import QUERIES, RETIRED_ROWS_ONLY
-    from camden_spark.session import get_spark
 
     names = sys.argv[2:] or bench.HEADLINE
     spark = get_spark("camden_spark_plans", cores=cores)

@@ -17,12 +17,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from camden_spark.session import default_cores, get_spark
+
+    cores = default_cores()
     out_path = sys.argv[1] if len(sys.argv) > 1 else "/tmp/query_checksums.json"
     import bench
     from camden_spark.entry_queries import QUERIES, RETIRED_ROWS_ONLY
     from camden_spark.plans.caches import release_caches
-    from camden_spark.session import get_spark
 
     lookup = {**RETIRED_ROWS_ONLY, **QUERIES}
     names = sys.argv[2:] or list(lookup)

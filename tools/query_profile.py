@@ -33,7 +33,9 @@ EVDIR = os.environ.get("QP_EVDIR", "/tmp/qp_evlog")
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from camden_spark.session import default_cores, get_spark
+
+    cores = default_cores()
     if os.path.isdir("/dev/shm") and "SPARK_LOCAL_DIRS" not in os.environ:
         shm = "/dev/shm/spark_local"
         os.makedirs(shm, exist_ok=True)
@@ -46,7 +48,6 @@ def main() -> None:
     import bench
     from camden_spark.entry_queries import QUERIES, RETIRED_ROWS_ONLY
     from camden_spark.plans.caches import release_caches
-    from camden_spark.session import get_spark
     from tools.scaling_decompose import load_events
 
     names = sys.argv[1:] or bench.HEADLINE
