@@ -21,7 +21,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from camden_spark.config import DedupConfig
-from camden_spark.functions.shingles import with_signatures
+from camden_spark.functions.shingles import nonempty_signatures, with_signatures
 from camden_spark.functions.text import lang_id_udf, with_text_stats
 from camden_spark.operators.ann import (
     ann_near_dup_pairs,
@@ -1853,18 +1853,16 @@ def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify.  Identical results by construction (same kernels, same
     candidate set, same verify inputs) — checksum-verified."""
     from camden_spark.functions.shingles import with_shingles
-    from camden_spark.plans.caches import materialize_barrier
+    from camden_spark.plans.caches import materialize_barrier, warm_cache
 
     pages = normalize_pages(
         spread_input(pages_from_documents(spark, sf_dir), udf_bound=True)
     )
-    # empty docs never near-dup (policy): n_shingles carries the filter the
-    # shingle arrays used to
-    sig = (
-        with_signatures(pages, CFG, include_shingles=False)
-        .filter(F.col("n_shingles") > 0)
-        .select("url", "minhash")
-    )
+    # empty docs never near-dup (policy): dropped inside the one-pass
+    # kernel.  Warm, like the pipeline's sig: candidate_pairs_lsh scans it
+    # for band sizing AND both band-join sides, which would otherwise
+    # re-run the kernel per consumer
+    sig = warm_cache(nonempty_signatures(pages, CFG).select("url", "minhash"))
     cand, _ = candidate_pairs_lsh(sig, CFG)
     # barrier: the candidate set feeds the pair-url pruning AND the verify
     # join — without it both consumers recompute the band-join subtree
@@ -1878,18 +1876,15 @@ def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from camden_spark.plans.caches import warm_cache
+
     pages = normalize_pages(
         spread_input(pages_from_documents(spark, sf_dir), udf_bound=True)
     )
-    # include_shingles=False: this query only reads (url, simhash) — the
-    # shingle arrays would otherwise ride the Arrow socket just to be
-    # dropped (non-prunable UDF struct fields); n_shingles carries the
-    # empty-docs-never-near-dup policy filter
-    sig = (
-        with_signatures(pages, CFG, include_shingles=False)
-        .filter(F.col("n_shingles") > 0)
-        .select("url", "simhash")
-    )
+    # the one-pass kernel never ships shingle arrays and drops empty docs
+    # (never near-dup, policy) without a second UDF evaluation; warm, as in
+    # q_lsh_pairs: block sizing and both block-join sides scan sig
+    sig = warm_cache(nonempty_signatures(pages, CFG).select("url", "simhash"))
     pairs, _ = candidate_pairs_simhash(sig, CFG)
     return pairs
 
@@ -1900,7 +1895,7 @@ def q_substr_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = normalize_pages(
         spread_input(pages_from_documents(spark, sf_dir), udf_bound=True)
     )
-    # warm the fingerprint frame exactly like the pipeline's _substr_fp:
+    # warm the fingerprint frame exactly like the pipeline's build_substr:
     # candidate_pairs_substr scans it for group sizing AND both self-join
     # sides, which would otherwise re-run the winnowing UDF per consumer
     fp = warm_cache(

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
     LongType,
+    StringType,
     StructField,
     StructType,
 )
@@ -97,6 +98,52 @@ def with_signatures(
     return pages.withColumn("_sig", udf(F.col(text_col))).select(
         "*", *[F.col(f"_sig.{c}").alias(c) for c in cols]
     ).drop("_sig")
+
+
+_NONEMPTY_SIG_SCHEMA = StructType(
+    [
+        StructField("url", StringType(), True),
+        StructField("minhash", ArrayType(LongType()), False),
+        StructField("simhash", LongType(), False),
+    ]
+)
+
+
+def nonempty_signatures(
+    pages: DataFrame, cfg: DedupConfig | None = None, text_col: str = "norm_text"
+) -> DataFrame:
+    """(url, minhash, simhash) for every doc with at least one shingle, from
+    ONE Python evaluation per row.
+
+    Zero-shingle docs (empty/whitespace-only after normalization) are
+    dropped inside the kernel: they are never near-dups (the
+    ``jaccard_on_shingles`` policy) and their sentinel signatures would band
+    every empty page together.  Filtering ``with_signatures``'s struct on
+    ``n_shingles`` instead lets Catalyst push the filter below the
+    projection, which plans the UDF twice (ArrowEvalPython → Filter →
+    ArrowEvalPython); a ``mapInPandas`` node is one evaluation."""
+    cfg = cfg or DedupConfig()
+    k, perms, seed = cfg.shingle_k, cfg.minhash_perms, cfg.minhash_seed
+
+    def sig_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            flat, counts = batch_shingle_hashes(pdf[text_col], k)
+            mh = minhash_flat(flat, counts, perms, seed).view(np.int64)
+            sim = simhash_flat(flat, counts).view(np.int64)
+            keep = counts > 0
+            # dtype=object: an all-empty batch must still convert to
+            # list<long> (an empty default-dtype column does not)
+            yield pd.DataFrame(
+                {
+                    "url": pdf["url"].to_numpy(dtype=object)[keep],
+                    "minhash": pd.Series(list(mh[keep]), dtype=object),
+                    "simhash": sim[keep],
+                }
+            )
+
+    return pages.select("url", text_col).mapInPandas(
+        sig_rows, schema=_NONEMPTY_SIG_SCHEMA
+    )
 
 
 def with_shingles(

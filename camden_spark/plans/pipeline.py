@@ -6,9 +6,15 @@ Stage graph (each stage optionally snapshot-checkpointed, F9):
       (near stages) └─ normalize → canonicals' sig: MinHash, SimHash  [stage 2]
                               ├─ lsh_pairs:     band join + Jaccard   [stage 3]
                               ├─ simhash_pairs: pigeonhole Hamming    [stage 4]
-                              └─ substr_pairs:  winnow join + SA      [stage 5]
+                              └─ substr_pairs:  winnow join ─┐        [stage 5]
+                                     (waits on lsh_pairs) anti-join + SA
   near pairs between canonicals → CC; members inherit via canon_url;
   exact-only runs skip CC                                             [stage 6]
+
+Without a checkpoint dir the three candidate branches run on driver threads
+and each returns its verified pairs; the substring branch waits on the LSH
+branch's future only for its anti-join, after its own candidate work.  The
+main thread keeps the pair union, CC and the sinks.
 
 A checksum group already is a component with its min url as canonical, so
 rows byte-identical to a canonical are never shingled (F7) and take their
@@ -33,7 +39,7 @@ from camden_spark.operators.substr import (
     verify_pairs_substr,
     with_fingerprints,
 )
-from camden_spark.functions.shingles import with_shingles, with_signatures
+from camden_spark.functions.shingles import nonempty_signatures, with_shingles
 from camden_spark.plans.caches import (
     materialize_barrier,
     release_caches,
@@ -246,11 +252,7 @@ class DedupPipeline:
         pair_frames = [exact_pairs]
 
         def build_sig() -> DataFrame:
-            return (
-                with_signatures(distinct_pages, cfg, include_shingles=False)
-                .filter(F.col("n_shingles") > 0)
-                .select("url", "minhash", "simhash")
-            )
+            return nonempty_signatures(distinct_pages, cfg)
 
         needs_sig = self.enable_lsh or self.enable_simhash
         if needs_sig:
@@ -263,9 +265,6 @@ class DedupPipeline:
             # would otherwise band every empty page together (and flip with
             # corpus size once the mega-band cap kicks in).  They remain
             # singletons unless the exact stage clustered them byte-identical.
-            # (include_shingles=False keeps the shingle arrays — ~60% of
-            # the stage's bytes — off the Arrow wire; oversized in-flight
-            # bursts arm the socket flow-control stall, session.py)
             # warm, for the same concurrent-branch reason as norm/exact:
             # candidate_pairs_lsh's band-size-count and band-join branches
             # both scan sig, and simhash scans it again
@@ -318,30 +317,62 @@ class DedupPipeline:
                 sp = materialize_barrier(sp)
             return sp
 
-        def _substr_fp() -> DataFrame:
+        def build_substr(lsh_verified) -> DataFrame:
             # warm: the self-join scans fp on BOTH sides plus the
             # group-sizing branch — cold-cache branch race otherwise
-            return warm_cache(
-                with_fingerprints(distinct_pages, cfg).select(
-                    "url", "fingerprints"
-                )
+            fp = warm_cache(
+                with_fingerprints(distinct_pages, cfg).select("url", "fingerprints")
             )
+            cand, m = candidate_pairs_substr(fp, cfg)
+            # barrier, as in build_lsh: the verify reads the candidate set
+            # three times (both url prunes and the text join)
+            cand = materialize_barrier(cand)
+            if self.collect_metrics:
+                metrics["substr"] = m.first().asDict()
+            # pairs already confirmed by LSH join the same CC component —
+            # skip their (expensive) suffix-array verification.  The wait
+            # for the LSH pairs comes only now, after this branch's own
+            # candidate work.
+            lp = lsh_verified()
+            if lp is not None:
+                cand = cand.join(
+                    lp.select("url_a", "url_b"), ["url_a", "url_b"], "left_anti"
+                )
+            return verify_pairs_substr(cand, distinct_pages, cfg)
 
-        lsh_pairs = sim_pairs = fp_pre = None
+        def _substr_branch(lsh_verified) -> DataFrame:
+            """``lsh_verified``: zero-argument callable returning the
+            verified LSH pairs, or None when LSH is off.  A callable, so a
+            resumed substr snapshot never waits on (or reads) them."""
+            sp = staged(
+                "substr_pairs",
+                lambda: build_substr(lsh_verified),
+                upstream=["exact"],
+            )
+            if store is None:
+                # barrier, like simhash's: on a driver thread the verify
+                # must run HERE, not later inside the pair-union barrier
+                sp = materialize_barrier(sp)
+            return sp
+
+        lsh_pairs = sim_pairs = sub_pairs = None
         if store is None and n_branches > 1:
-            # Overlap the independent candidate branches from driver
-            # threads: each branch's actions leave executors idle during
-            # its own driver/AQE planning gaps (~20 s per pipeline run,
-            # measured in BENCH/BASELINE.md round-6) and its sub-core-count
-            # stage tails — a concurrent sibling fills both.  Safe because
-            # every shared input (norm/exact/sig) is warm-cached ABOVE, so
-            # threads read populated blocks instead of racing to compute
-            # them (caches.warm_cache docstring).  Concurrent
-            # materialize_barrier bookkeeping may cross-attribute created
-            # RDD ids between branches; harmless — release callbacks fire
-            # in bulk and unpersist is idempotent.  The checkpoint-store
-            # path stays sequential: staged() snapshot commits define
-            # resume lineage order.
+            # Run the independent candidate branches to their verified pairs
+            # on driver threads: each branch's actions leave executors idle
+            # during its own driver/AQE planning gaps (~20 s per pipeline
+            # run, measured in BENCH/BASELINE.md round-6) and its
+            # sub-core-count stage tails — a concurrent sibling fills both.
+            # Safe because every shared input (norm/exact/sig) is
+            # warm-cached ABOVE, so threads read populated blocks instead of
+            # racing to compute them (caches.warm_cache docstring).  The
+            # substring branch gates only its LSH anti-join + suffix-array
+            # verify on the LSH future; LSH is submitted first and every
+            # branch has its own worker, so that wait cannot starve.
+            # Concurrent materialize_barrier bookkeeping may cross-attribute
+            # created RDD ids between branches; harmless — release callbacks
+            # fire in bulk and unpersist is idempotent.  The checkpoint-store
+            # path stays sequential: staged() snapshot commits define resume
+            # lineage order.
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(max_workers=3) as pool:
@@ -351,7 +382,11 @@ class DedupPipeline:
                 if self.enable_simhash:
                     futs["simhash"] = pool.submit(_simhash_branch)
                 if self.enable_substr:
-                    futs["fp"] = pool.submit(_substr_fp)
+                    lsh_fut = futs.get("lsh")
+                    futs["substr"] = pool.submit(
+                        _substr_branch,
+                        lsh_fut.result if lsh_fut is not None else lambda: None,
+                    )
                 # retrieve EVERY branch's outcome before raising: a fixed
                 # await order would drop sibling exceptions on a
                 # multi-branch failure and report only one cause
@@ -361,7 +396,10 @@ class DedupPipeline:
                     try:
                         results[name] = fut.result()
                     except Exception as exc:  # noqa: BLE001 - aggregated below
-                        errors[name] = exc
+                        # substr re-raises a failed LSH branch's exception
+                        # from its wait: report it once, under lsh
+                        if not any(exc is e for e in errors.values()):
+                            errors[name] = exc
                 if errors:
                     detail = "; ".join(
                         f"{n}: {type(e).__name__}: {str(e)[:300]}"
@@ -373,53 +411,24 @@ class DedupPipeline:
                     ) from first
                 lsh_pairs = results.get("lsh")
                 sim_pairs = results.get("simhash")
-                fp_pre = results.get("fp")
+                sub_pairs = results.get("substr")
         else:
             if self.enable_lsh:
                 lsh_pairs = _lsh_branch()
             if self.enable_simhash:
                 sim_pairs = _simhash_branch()
-            # store path: fp is built inside build_substr so a resumed
-            # substr snapshot never computes fingerprints it won't use
+            if self.enable_substr:
+                sub_pairs = _substr_branch(lambda: lsh_pairs)
 
-        if self.enable_lsh:
-            pair_frames.append(
-                lsh_pairs.select(
-                    "url_a", "url_b", F.lit("minhash_lsh").alias("source")
+        for pairs, source in (
+            (lsh_pairs, "minhash_lsh"),
+            (sim_pairs, "simhash"),
+            (sub_pairs, "substr"),
+        ):
+            if pairs is not None:
+                pair_frames.append(
+                    pairs.select("url_a", "url_b", F.lit(source).alias("source"))
                 )
-            )
-        if self.enable_simhash:
-            pair_frames.append(
-                sim_pairs.select(
-                    "url_a", "url_b", F.lit("simhash").alias("source")
-                )
-            )
-
-        if self.enable_substr:
-            def build_substr() -> DataFrame:
-                # cache: the fingerprint UDF output feeds four consumers
-                # (group sizing + both sides of the self-join)
-                fp = fp_pre if fp_pre is not None else _substr_fp()
-                cand, m = candidate_pairs_substr(fp, cfg)
-                if self.collect_metrics:
-                    metrics["substr"] = m.first().asDict()
-                # pairs already confirmed by LSH join the same CC component —
-                # skip their (expensive) suffix-array verification
-                if self.enable_lsh:
-                    cand = cand.join(
-                        lsh_pairs.select("url_a", "url_b"),
-                        ["url_a", "url_b"],
-                        "left_anti",
-                    )
-                return verify_pairs_substr(cand, distinct_pages, cfg)
-            sub_pairs = staged(
-                "substr_pairs", build_substr, upstream=["exact"]
-            )
-            pair_frames.append(
-                sub_pairs.select(
-                    "url_a", "url_b", F.lit("substr").alias("source")
-                )
-            )
 
         # ---- union (F8) + connected components (F6) --------------------
         counters = StageCounters()

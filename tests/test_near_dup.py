@@ -3,11 +3,13 @@ and full-pipeline recall ≥ 0.99 against planted ground truth."""
 
 from __future__ import annotations
 
+import threading
+
 import pyspark.sql.functions as F
 import pytest
 
 from camden_spark.config import DedupConfig
-from camden_spark.functions.shingles import with_signatures
+from camden_spark.functions.shingles import nonempty_signatures, with_signatures
 from camden_spark.operators.components import assign_clusters, connected_components
 from camden_spark.operators.lsh import candidate_pairs_lsh, pair_urls, verify_pairs_jaccard
 from camden_spark.operators.simhash import candidate_pairs_simhash
@@ -503,3 +505,158 @@ def test_exact_only_run_skips_cc_and_normalization(spark, pages_df, monkeypatch)
     )
     res.release()
     assert got == want
+
+
+def test_nonempty_signatures_equal_struct_filter(spark, pages_df):
+    """The one-pass kernel returns exactly the rows of the struct-filter
+    form it replaces, empty and whitespace-only docs dropped."""
+    import datetime as _dt
+
+    blanks = spark.createDataFrame(
+        [(f"u://blank{i}", _dt.datetime(2025, 1, 1), None, t, "en")
+         for i, t in enumerate(["", "   ", "\t\n"])],
+        pages_df.schema,
+    )
+    norm = normalize_pages(pages_df.unionByName(blanks))
+    old = (
+        with_signatures(norm, CFG, include_shingles=False)
+        .filter(F.col("n_shingles") > 0)
+        .select("url", "minhash", "simhash")
+    )
+    new = nonempty_signatures(norm, CFG)
+    assert sorted(map(tuple, new.collect())) == sorted(map(tuple, old.collect()))
+    assert new.count() == pages_df.count()
+
+
+def test_pipeline_signature_frame_evaluates_kernel_once(spark, pages_df, monkeypatch):
+    """The signature frame the pipeline caches has exactly one Python
+    evaluation node; the plan audit flags the struct-filter shape that ran
+    the kernel twice per row."""
+    import camden_spark.plans.pipeline as pipeline_mod
+    from tools.plan_audit import audit, plan_text, python_eval_udfs
+
+    class _Captured(Exception):
+        pass
+
+    real_warm = pipeline_mod.warm_cache
+    seen = []
+
+    def spy(df):
+        if "minhash" in df.columns:
+            seen.append(df)
+            raise _Captured
+        return real_warm(df)
+
+    monkeypatch.setattr(pipeline_mod, "warm_cache", spy)
+    with pytest.raises(_Captured):
+        DedupPipeline(cfg=CFG).run(pages_df)
+    text = plan_text(seen[0])
+    assert len(python_eval_udfs(text)) == 1, text
+    assert audit("signatures", text) == []
+    norm = normalize_pages(pages_df)
+    twice = plan_text(
+        with_signatures(norm, CFG, include_shingles=False)
+        .filter(F.col("n_shingles") > 0)
+        .select("url", "minhash", "simhash")
+    )
+    assert len(python_eval_udfs(twice)) == 2
+    assert audit("signatures", twice)
+
+
+_AQE_PLAN = """== Physical Plan ==
+AdaptiveSparkPlan (5)
++- == Final Plan ==
+   MapInPandas (2)
+   +- Scan (1)
++- == Initial Plan ==
+   MapInPandas (4)
+   +- Scan (1)
+
+
+(1) Scan
+Output [1]: [t#1]
+
+(2) MapInPandas
+Input [1]: [t#1]
+Arguments: f(lower(t#1))#9, [u#10], false
+
+(4) MapInPandas
+Input [1]: [t#1]
+Arguments: f(lower(t#1))#9, [u#10], false
+"""
+
+
+def test_plan_audit_repeated_udf_skips_initial_aqe_plan():
+    """An executed AQE plan prints its initial plan next to the final one;
+    only nodes of the final plan count as evaluations."""
+    from tools.plan_audit import audit, python_eval_udfs
+
+    assert python_eval_udfs(_AQE_PLAN) == [["f#9"]]
+    assert audit("q", _AQE_PLAN) == []
+    both_final = _AQE_PLAN.replace(
+        "+- == Initial Plan ==\n   MapInPandas (4)", "   +- MapInPandas (4)"
+    )
+    assert python_eval_udfs(both_final) == [["f#9"], ["f#9"]]
+    assert audit("q", both_final)
+
+
+def _run_bounded(fn, timeout_s: float = 300.0) -> dict:
+    """Run ``fn`` on a daemon thread; fail if it has not returned in time."""
+    out: dict = {}
+
+    def target():
+        try:
+            out["result"] = fn()
+        except Exception as exc:  # noqa: BLE001 - handed to the test
+            out["error"] = exc
+
+    t = threading.Thread(target=target, daemon=True)
+    t.start()
+    t.join(timeout_s)
+    assert not t.is_alive(), f"run() did not return within {timeout_s} s"
+    return out
+
+
+@pytest.mark.parametrize("failing", ["lsh", "substr"])
+def test_branch_failure_is_reported_without_hanging(
+    spark, pages_df, monkeypatch, failing
+):
+    """The substring branch waits on the LSH future inside the pool: an LSH
+    failure must surface as the run's error (named once, under lsh) instead
+    of hanging that wait, and a substring failure alone names substr."""
+    import camden_spark.plans.pipeline as pipeline_mod
+
+    def boom(*_args, **_kwargs):
+        raise ValueError(f"injected {failing} failure")
+
+    target = {"lsh": "candidate_pairs_lsh", "substr": "candidate_pairs_substr"}
+    monkeypatch.setattr(pipeline_mod, target[failing], boom)
+    out = _run_bounded(lambda: DedupPipeline(cfg=CFG).run(pages_df))
+    from camden_spark.plans.caches import release_caches
+
+    release_caches()
+    err = out.get("error")
+    assert isinstance(err, RuntimeError), out
+    msg = str(err)
+    assert f"{failing}: ValueError: injected {failing} failure" in msg
+    other = {"lsh": "substr", "substr": "lsh"}[failing]
+    assert f"{other}:" not in msg and "simhash:" not in msg
+
+
+def test_threaded_and_sequential_runs_agree(spark, pages_df, tmp_path):
+    """The driver-thread pool (no checkpoint dir) and the sequential
+    checkpoint-store path build the same branches: identical clusters and
+    identical (url_a, url_b, source) pairs."""
+    outs = []
+    for ckpt in (None, str(tmp_path)):
+        res = DedupPipeline(cfg=CFG, checkpoint_dir=ckpt).run(pages_df)
+        clusters = sorted(map(tuple, res.clusters.collect()))
+        pairs = sorted(
+            map(tuple, res.pairs.select("url_a", "url_b", "source").collect())
+        )
+        res.release()
+        outs.append((clusters, pairs))
+    (c_pool, p_pool), (c_seq, p_seq) = outs
+    assert c_pool == c_seq
+    assert p_pool == p_seq
+    assert {s for _, _, s in p_pool} >= {"exact", "minhash_lsh", "substr"}
