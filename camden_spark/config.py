@@ -84,10 +84,6 @@ class DedupConfig:
     #: (perfbench/traced.py) still reads it.  Kept so config_hash, and with
     #: it checkpoint resume, does not change.
     shuffle_partitions: int = 32
-    #: target partition count for band/block/fingerprint-key repartitions
-    #: before the self-joins; 0 = auto (2x the session's defaultParallelism —
-    #: at production scale set explicitly to O(executors x cores x 3))
-    band_partitions: int = 0
     cc_max_iterations: int = 50     #: connected-components fixpoint cap
 
     def __post_init__(self) -> None:

@@ -6,13 +6,9 @@ builtin that accepts array columns, so banding never leaves codegen), exploded
 to ``(url, band, band_hash)`` rows, and candidates come from a self-equi-join
 on ``(band, band_hash)``.
 
-Skew story (explicit, per the north rule): boilerplate-heavy corpora produce
-mega-bands — a single band key shared by thousands of pages — which would turn
-the self-join into an O(group²) hot task.  We therefore (1) count band-group
-sizes with one aggregation, (2) DROP groups larger than ``cfg.max_band_group``
-(surfaced in the returned metrics, never silent — recall accounting includes
-them), (3) repartition on the band key before the join, and (4) leave AQE
-skew-join splitting on as the second line of defense.
+The skew-capped self-join itself is :func:`capped_key_join`, shared by every
+candidate operator (LSH bands, SimHash blocks, substring fingerprints, IVF
+cells, SRP buckets).
 """
 
 from __future__ import annotations
@@ -42,11 +38,52 @@ def band_hashes(sig: DataFrame, cfg: DedupConfig) -> DataFrame:
     return sig.select("url", F.posexplode(bands).alias("band", "band_hash"))
 
 
+def capped_key_join(
+    rows: DataFrame, keys: list[str], cap: int, kind: str, id_col: str = "url"
+) -> tuple[DataFrame, DataFrame]:
+    """Skew-capped self-equi-join of ``rows`` on ``keys``: every pair of rows
+    sharing a key group, sides aliased ``l`` and ``r``, with
+    ``l.{id_col} < r.{id_col}``.  The caller projects and dedupes (a pair
+    may share several groups).  Also returns a lazy 1-row metrics frame
+    (``{kind}_total``, ``{kind}_dropped``, ``rows_in_dropped_{kind}``).
+
+    Skew story (explicit, per the north rule): boilerplate-heavy corpora
+    produce mega-groups — a single band key shared by thousands of pages —
+    which would turn the self-join into an O(group²) hot task.  We therefore
+    (1) count group sizes with one cached aggregation (one row per distinct
+    key; metrics and keep reuse it), (2) DROP groups larger than ``cap``
+    (counted in the metrics, never silent — recall accounting includes
+    them) along with groups of 1, which cannot pair, (3) prune ``rows`` to
+    the kept keys with a semi-join and repartition on the key to 2x the
+    session's parallelism — the rows are tiny in BYTES but the join emits
+    O(group²) rows, so AQE's byte-based coalescing alone would run it on
+    1-2 tasks (measured: a 2-task 4.7 s IVF stage at sf0.1), and both sides
+    share the exchange via ReusedExchange — and (4) leave AQE skew-join
+    splitting on as the second line of defense.
+    """
+    sized = track_cache(rows.groupBy(*keys).agg(F.count("*").alias("_n")))
+    over = F.col("_n") > cap
+    metrics = sized.agg(
+        F.count("*").cast("long").alias(f"{kind}_total"),
+        F.sum(over.cast("long")).alias(f"{kind}_dropped"),
+        F.sum(F.when(over, F.col("_n")).otherwise(0))
+        .cast("long")
+        .alias(f"rows_in_dropped_{kind}"),
+    )
+    keep = sized.filter((F.col("_n") > 1) & ~over).select(*keys)
+    n_parts = rows.sparkSession.sparkContext.defaultParallelism * 2
+    joinable = rows.join(keep, keys, "left_semi").repartition(n_parts, *keys)
+    left, right = joinable.alias("l"), joinable.alias("r")
+    on = [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
+    joined = left.join(right, on=on + [F.col(f"l.{id_col}") < F.col(f"r.{id_col}")])
+    return joined, metrics
+
+
 def candidate_pairs_lsh(
     sig: DataFrame, cfg: DedupConfig | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """LSH candidate pairs (url_a < url_b), plus a 1-row metrics DataFrame
-    (bands_total, bands_dropped, docs_in_dropped_bands).
+    (bands_total, bands_dropped, rows_in_dropped_bands).
 
     ``sig`` must carry ``url`` and ``minhash``.
     """
@@ -57,53 +94,12 @@ def candidate_pairs_lsh(
     from camden_spark.functions.hashing import EMPTY_SIG_SLOT
 
     sig = sig.filter(F.col("minhash")[0] != F.lit(EMPTY_SIG_SLOT))
-    bands = band_hashes(sig, cfg)
-
-    # one aggregation computes group sizes; groups of 1 can't produce pairs,
-    # groups above the cap are dropped mega-bands (boilerplate skew).
-    sized = track_cache(
-        bands.groupBy("band", "band_hash").agg(
-            F.count("*").alias("band_group_size")
-        )
-    )  # tiny (one row per distinct band key); metrics + keep reuse it
-    metrics = sized.agg(
-        F.count("*").cast("long").alias("bands_total"),
-        F.sum(
-            (F.col("band_group_size") > cfg.max_band_group).cast("long")
-        ).alias("bands_dropped"),
-        F.sum(
-            F.when(
-                F.col("band_group_size") > cfg.max_band_group,
-                F.col("band_group_size"),
-            ).otherwise(0)
-        ).cast("long").alias("docs_in_dropped_bands"),
+    joined, metrics = capped_key_join(
+        band_hashes(sig, cfg), ["band", "band_hash"], cfg.max_band_group, "bands"
     )
-    keep = sized.filter(
-        (F.col("band_group_size") > 1)
-        & (F.col("band_group_size") <= cfg.max_band_group)
-    ).select("band", "band_hash")
-
-    # semi-join prunes the exploded relation to joinable bands, then the
-    # self-equi-join runs on an explicit band-key repartition sized to the
-    # session's parallelism (cfg.band_partitions=0 → 2x defaultParallelism)
-    n_parts = cfg.band_partitions or sig.sparkSession.sparkContext.defaultParallelism * 2
-    joinable = bands.join(keep, ["band", "band_hash"], "left_semi").repartition(
-        n_parts, "band", "band_hash"
-    )
-    left = joinable.alias("l")
-    right = joinable.alias("r")
-    pairs = (
-        left.join(
-            right,
-            on=[
-                F.col("l.band") == F.col("r.band"),
-                F.col("l.band_hash") == F.col("r.band_hash"),
-                F.col("l.url") < F.col("r.url"),
-            ],
-        )
-        .select(F.col("l.url").alias("url_a"), F.col("r.url").alias("url_b"))
-        .dropDuplicates(["url_a", "url_b"])
-    )
+    pairs = joined.select(
+        F.col("l.url").alias("url_a"), F.col("r.url").alias("url_b")
+    ).dropDuplicates(["url_a", "url_b"])
     return pairs, metrics
 
 

@@ -6,8 +6,9 @@ must agree EXACTLY on at least one of ``blocks`` bit-blocks when
 ``blocks`` equal blocks, equi-join per block, then verify with the builtin
 ``bit_count(a ^ b) <= radius`` — all JVM-side, no UDF anywhere.
 
-Same skew discipline as LSH: block-value groups above ``max_simhash_group``
-(e.g. the all-zeros block from boilerplate) are dropped and counted.
+The block join is ``operators/lsh.capped_key_join`` (its docstring has the
+skew story): block-value groups above ``max_simhash_group`` (e.g. the
+all-zeros block from boilerplate) are dropped and counted.
 """
 
 from __future__ import annotations
@@ -16,7 +17,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from camden_spark.config import DedupConfig
-from camden_spark.plans.caches import track_cache
+from camden_spark.operators.lsh import capped_key_join
 
 
 def simhash_blocks(sig: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -40,41 +41,17 @@ def candidate_pairs_simhash(
     sig: DataFrame, cfg: DedupConfig | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """Verified Hamming-ball pairs (url_a, url_b, hamming ≤ radius) plus a
-    1-row metrics DataFrame (blocks_total, blocks_dropped)."""
+    1-row metrics DataFrame (blocks_total, blocks_dropped,
+    rows_in_dropped_blocks)."""
     cfg = cfg or DedupConfig()
-    blocks = simhash_blocks(sig, cfg)
-
-    sized = track_cache(
-        blocks.groupBy("block", "block_val").agg(
-            F.count("*").alias("group_size")
-        )
-    )  # tiny; metrics + keep reuse it
-    metrics = sized.agg(
-        F.count("*").cast("long").alias("blocks_total"),
-        F.sum((F.col("group_size") > cfg.max_simhash_group).cast("long")).alias(
-            "blocks_dropped"
-        ),
+    joined, metrics = capped_key_join(
+        simhash_blocks(sig, cfg),
+        ["block", "block_val"],
+        cfg.max_simhash_group,
+        "blocks",
     )
-    keep = sized.filter(
-        (F.col("group_size") > 1) & (F.col("group_size") <= cfg.max_simhash_group)
-    ).select("block", "block_val")
-
-    n_parts = cfg.band_partitions or sig.sparkSession.sparkContext.defaultParallelism * 2
-    joinable = blocks.join(keep, ["block", "block_val"], "left_semi").repartition(
-        n_parts, "block", "block_val"
-    )
-    left = joinable.alias("l")
-    right = joinable.alias("r")
     pairs = (
-        left.join(
-            right,
-            on=[
-                F.col("l.block") == F.col("r.block"),
-                F.col("l.block_val") == F.col("r.block_val"),
-                F.col("l.url") < F.col("r.url"),
-            ],
-        )
-        .select(
+        joined.select(
             F.col("l.url").alias("url_a"),
             F.col("r.url").alias("url_b"),
             F.bit_count(

@@ -5,7 +5,8 @@ Stage layout:
 1. **Fingerprint** — vectorized pandas UDF adds a ``fingerprints`` column of
    winnowed rolling-hash values (functions/substr.py).  Arrow batches only.
 2. **Candidate join** — explode fingerprints, equi-self-join on the value
-   (same mega-group capping + explicit repartition as the LSH band join).
+   through ``operators/lsh.capped_key_join`` (its docstring has the skew
+   story: mega-group capping + explicit key repartition).
 3. **Verify** — ``applyInPandas`` over candidate pairs computes the TRUE
    longest common substring with the suffix-array + Kasai LCP kernel; pairs
    with overlap ≥ cfg.min_overlap_chars survive.  Runs ONLY on candidate
@@ -29,7 +30,7 @@ from pyspark.sql.types import (
 )
 
 from camden_spark.config import DedupConfig
-from camden_spark.operators.lsh import pair_urls
+from camden_spark.operators.lsh import capped_key_join, pair_urls
 from camden_spark.plans.caches import track_cache
 from camden_spark.functions.substr import (
     batch_winnow,
@@ -59,36 +60,18 @@ def with_fingerprints(
 def candidate_pairs_substr(
     fp: DataFrame, cfg: DedupConfig | None = None
 ) -> tuple[DataFrame, DataFrame]:
-    """Fingerprint-equality candidate pairs (url_a < url_b) + metrics row."""
+    """Fingerprint-equality candidate pairs (url_a < url_b) + metrics row
+    (fingerprints_total, fingerprints_dropped, rows_in_dropped_fingerprints)."""
     cfg = cfg or DedupConfig()
-    exploded = fp.select("url", F.explode("fingerprints").alias("fp"))
-    sized = track_cache(
-        exploded.groupBy("fp").agg(F.count("*").alias("group_size"))
+    joined, metrics = capped_key_join(
+        fp.select("url", F.explode("fingerprints").alias("fp")),
+        ["fp"],
+        cfg.max_fingerprint_group,
+        "fingerprints",
     )
-    metrics = sized.agg(
-        F.count("*").cast("long").alias("fingerprints_total"),
-        F.sum(
-            (F.col("group_size") > cfg.max_fingerprint_group).cast("long")
-        ).alias("fingerprints_dropped"),
-    )
-    keep = sized.filter(
-        (F.col("group_size") > 1)
-        & (F.col("group_size") <= cfg.max_fingerprint_group)
-    ).select("fp")
-    n_parts = cfg.band_partitions or fp.sparkSession.sparkContext.defaultParallelism * 2
-    joinable = exploded.join(keep, "fp", "left_semi").repartition(n_parts, "fp")
-    left, right = joinable.alias("l"), joinable.alias("r")
-    pairs = (
-        left.join(
-            right,
-            on=[
-                F.col("l.fp") == F.col("r.fp"),
-                F.col("l.url") < F.col("r.url"),
-            ],
-        )
-        .select(F.col("l.url").alias("url_a"), F.col("r.url").alias("url_b"))
-        .dropDuplicates(["url_a", "url_b"])
-    )
+    pairs = joined.select(
+        F.col("l.url").alias("url_a"), F.col("r.url").alias("url_b")
+    ).dropDuplicates(["url_a", "url_b"])
     return pairs, metrics
 
 
@@ -122,7 +105,7 @@ def verify_pairs_substr(
     )
     a = texts.select(F.col("url").alias("url_a"), F.col("_t").alias("text_a"))
     b = texts.select(F.col("url").alias("url_b"), F.col("_t").alias("text_b"))
-    n_parts = cfg.band_partitions or pages.sparkSession.sparkContext.defaultParallelism * 2
+    n_parts = pages.sparkSession.sparkContext.defaultParallelism * 2
     joined = pairs.join(a, "url_a").join(b, "url_b").repartition(
         n_parts, "url_a", "url_b"
     )

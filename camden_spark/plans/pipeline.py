@@ -11,8 +11,9 @@ Stage graph (each stage optionally snapshot-checkpointed, F9):
   near pairs between canonicals → CC; members inherit via canon_url;
   exact-only runs skip CC                                             [stage 6]
 
-Without a checkpoint dir the three candidate branches run on driver threads
-and each returns its verified pairs; the substring branch waits on the LSH
+The three candidate branches run on driver threads and each returns its
+verified pairs, behind its snapshot when a checkpoint dir is set and a
+materialization barrier otherwise; the substring branch waits on the LSH
 branch's future only for its anti-join, after its own candidate work.  The
 main thread keeps the pair union, CC and the sinks.
 
@@ -24,6 +25,7 @@ canonical's component id — exact: a component's min canonical is its min url.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
@@ -106,8 +108,11 @@ def spread_input(df: DataFrame, udf_bound: bool = False) -> DataFrame:
     are partitioning-invariant.
 
     ``udf_bound``: spread to a quarter of the parallelism (floor 2) for a
-    query whose heavy stage is an Arrow UDF (q_lsh_pairs at sf0.1: 8 parts
-    4.70 s, 1 part 4.96 s, 32 parts 5.98 s)."""
+    query whose heavy stage is an Arrow UDF (q_lsh_pairs at sf0.1 on 32
+    cores: 8 parts 4.70 s, 1 part 4.96 s, 32 parts 5.98 s).  Re-measured on
+    4 cores (2 parts vs 4, 10 interleaved process pairs at sf0.1): equal
+    medians, but the full fan-out was slower for lsh_pairs and substr_pairs
+    in 7 of 10 pairs, so the flag stays."""
     n = df.sparkSession.sparkContext.defaultParallelism
     if udf_bound:
         n = max(2, n // 4)
@@ -288,34 +293,11 @@ class DedupPipeline:
             )
             return verify_pairs_jaccard(cand, sh, cfg)
 
-        def _lsh_branch() -> DataFrame:
-            lp = staged("lsh_pairs", build_lsh, upstream=["signatures"])
-            if self.enable_substr and store is None:
-                # The verified LSH pair set feeds TWO consumers (the pair
-                # union AND substr's anti-join); without a barrier both
-                # subtrees compute the Jaccard-verify join (re-shingle +
-                # join) redundantly, and cache() does not stop that (the
-                # materialize_barrier docstring quirk).  With a store the
-                # staged() parquet snapshot already is the barrier.
-                lp = materialize_barrier(lp)
-            return lp
-
         def build_simhash() -> DataFrame:
             pairs, m = candidate_pairs_simhash(sig, cfg)
             if self.collect_metrics:
                 metrics["simhash"] = m.first().asDict()
             return pairs
-
-        def _simhash_branch() -> DataFrame:
-            sp = staged(
-                "simhash_pairs", build_simhash, upstream=["signatures"]
-            )
-            if store is None:
-                # eager barrier (small pair set) so the branch MATERIALIZES
-                # here — the point of running it on a thread is overlapping
-                # its stages with the LSH branch's driver-planning gaps
-                sp = materialize_barrier(sp)
-            return sp
 
         def build_substr(lsh_verified) -> DataFrame:
             # warm: the self-join scans fp on BOTH sides plus the
@@ -340,95 +322,71 @@ class DedupPipeline:
                 )
             return verify_pairs_substr(cand, distinct_pages, cfg)
 
-        def _substr_branch(lsh_verified) -> DataFrame:
-            """``lsh_verified``: zero-argument callable returning the
-            verified LSH pairs, or None when LSH is off.  A callable, so a
-            resumed substr snapshot never waits on (or reads) them."""
-            sp = staged(
-                "substr_pairs",
-                lambda: build_substr(lsh_verified),
-                upstream=["exact"],
-            )
-            if store is None:
-                # barrier, like simhash's: on a driver thread the verify
-                # must run HERE, not later inside the pair-union barrier
-                sp = materialize_barrier(sp)
-            return sp
+        def branch(name: str, build, upstream: list[str]) -> DataFrame:
+            """Run one candidate branch (stage ``{name}_pairs``) to its
+            verified pairs HERE, on its pool thread, not later inside the
+            pair-union barrier.  The pairs are computed once for every
+            consumer (the pair union and, for LSH, substr's anti-join): with
+            a store the staged() parquet snapshot is the barrier, without
+            one a materialize_barrier (a plain cache() would not stop the
+            recompute, see its docstring)."""
+            df = staged(f"{name}_pairs", build, upstream=upstream)
+            return df if store is not None else materialize_barrier(df)
 
-        lsh_pairs = sim_pairs = sub_pairs = None
-        if store is None and n_branches > 1:
-            # Run the independent candidate branches to their verified pairs
-            # on driver threads: each branch's actions leave executors idle
-            # during its own driver/AQE planning gaps (~20 s per pipeline
-            # run, measured in BENCH/BASELINE.md round-6) and its
-            # sub-core-count stage tails — a concurrent sibling fills both.
-            # Safe because every shared input (norm/exact/sig) is
-            # warm-cached ABOVE, so threads read populated blocks instead of
-            # racing to compute them (caches.warm_cache docstring).  The
-            # substring branch gates only its LSH anti-join + suffix-array
-            # verify on the LSH future; LSH is submitted first and every
-            # branch has its own worker, so that wait cannot starve.
-            # Concurrent materialize_barrier bookkeeping may cross-attribute
-            # created RDD ids between branches; harmless — release callbacks
-            # fire in bulk and unpersist is idempotent.  The checkpoint-store
-            # path stays sequential: staged() snapshot commits define resume
-            # lineage order.
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                futs = {}
-                if self.enable_lsh:
-                    futs["lsh"] = pool.submit(_lsh_branch)
-                if self.enable_simhash:
-                    futs["simhash"] = pool.submit(_simhash_branch)
-                if self.enable_substr:
-                    lsh_fut = futs.get("lsh")
-                    futs["substr"] = pool.submit(
-                        _substr_branch,
-                        lsh_fut.result if lsh_fut is not None else lambda: None,
-                    )
-                # retrieve EVERY branch's outcome before raising: a fixed
-                # await order would drop sibling exceptions on a
-                # multi-branch failure and report only one cause
-                results: dict[str, DataFrame] = {}
-                errors: dict[str, Exception] = {}
-                for name, fut in futs.items():
-                    try:
-                        results[name] = fut.result()
-                    except Exception as exc:  # noqa: BLE001 - aggregated below
-                        # substr re-raises a failed LSH branch's exception
-                        # from its wait: report it once, under lsh
-                        if not any(exc is e for e in errors.values()):
-                            errors[name] = exc
-                if errors:
-                    detail = "; ".join(
-                        f"{n}: {type(e).__name__}: {str(e)[:300]}"
-                        for n, e in errors.items()
-                    )
-                    first = next(iter(errors.values()))
-                    raise RuntimeError(
-                        f"candidate branch(es) failed [{detail}]"
-                    ) from first
-                lsh_pairs = results.get("lsh")
-                sim_pairs = results.get("simhash")
-                sub_pairs = results.get("substr")
-        else:
+        # Run the independent candidate branches to their verified pairs on
+        # driver threads: each branch's actions leave executors idle during
+        # its own driver/AQE planning gaps (~20 s per pipeline run, measured
+        # in BENCH/BASELINE.md round-6) and its sub-core-count stage tails —
+        # a concurrent sibling fills both.  Safe because every shared input
+        # (norm/exact/sig) is warm-cached ABOVE, so threads read populated
+        # blocks instead of racing to compute them (caches.warm_cache
+        # docstring).  The substring branch gates only its LSH anti-join +
+        # suffix-array verify on the LSH future, through a zero-argument
+        # callable, so a resumed substr snapshot never waits on (or reads)
+        # the LSH pairs; LSH is submitted first and every branch has its own
+        # worker, so that wait cannot starve.  Concurrent materialize_barrier
+        # bookkeeping may cross-attribute created RDD ids between branches;
+        # harmless — release callbacks fire in bulk and unpersist is
+        # idempotent.
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            futs = {}
             if self.enable_lsh:
-                lsh_pairs = _lsh_branch()
+                futs["lsh"] = pool.submit(branch, "lsh", build_lsh, ["signatures"])
             if self.enable_simhash:
-                sim_pairs = _simhash_branch()
-            if self.enable_substr:
-                sub_pairs = _substr_branch(lambda: lsh_pairs)
-
-        for pairs, source in (
-            (lsh_pairs, "minhash_lsh"),
-            (sim_pairs, "simhash"),
-            (sub_pairs, "substr"),
-        ):
-            if pairs is not None:
-                pair_frames.append(
-                    pairs.select("url_a", "url_b", F.lit(source).alias("source"))
+                futs["simhash"] = pool.submit(
+                    branch, "simhash", build_simhash, ["signatures"]
                 )
+            if self.enable_substr:
+                lsh_verified = futs["lsh"].result if self.enable_lsh else lambda: None
+                futs["substr"] = pool.submit(
+                    branch, "substr", lambda: build_substr(lsh_verified), ["exact"]
+                )
+            # retrieve EVERY branch's outcome before raising: a fixed await
+            # order would drop sibling exceptions on a multi-branch failure
+            # and report only one cause
+            results: dict[str, DataFrame] = {}
+            errors: dict[str, Exception] = {}
+            for name, fut in futs.items():
+                try:
+                    results[name] = fut.result()
+                except Exception as exc:  # noqa: BLE001 - aggregated below
+                    # substr re-raises a failed LSH branch's exception from
+                    # its wait: report it once, under lsh
+                    if not any(exc is e for e in errors.values()):
+                        errors[name] = exc
+        if errors:
+            detail = "; ".join(
+                f"{n}: {type(e).__name__}: {str(e)[:300]}" for n, e in errors.items()
+            )
+            raise RuntimeError(
+                f"candidate branch(es) failed [{detail}]"
+            ) from next(iter(errors.values()))
+
+        sources = {"lsh": "minhash_lsh", "simhash": "simhash", "substr": "substr"}
+        for name, pairs in results.items():
+            pair_frames.append(
+                pairs.select("url_a", "url_b", F.lit(sources[name]).alias("source"))
+            )
 
         # ---- union (F8) + connected components (F6) --------------------
         counters = StageCounters()

@@ -617,13 +617,18 @@ def _run_bounded(fn, timeout_s: float = 300.0) -> dict:
     return out
 
 
-@pytest.mark.parametrize("failing", ["lsh", "substr"])
+@pytest.mark.parametrize(
+    "failing,checkpointed",
+    [("lsh", False), ("substr", False), ("lsh", True), ("substr", True)],
+    ids=["lsh", "substr", "lsh-checkpointed", "substr-checkpointed"],
+)
 def test_branch_failure_is_reported_without_hanging(
-    spark, pages_df, monkeypatch, failing
+    spark, pages_df, monkeypatch, tmp_path, failing, checkpointed
 ):
     """The substring branch waits on the LSH future inside the pool: an LSH
     failure must surface as the run's error (named once, under lsh) instead
-    of hanging that wait, and a substring failure alone names substr."""
+    of hanging that wait, and a substring failure alone names substr.  Runs
+    with and without a checkpoint dir take the same pool path."""
     import camden_spark.plans.pipeline as pipeline_mod
 
     def boom(*_args, **_kwargs):
@@ -631,7 +636,10 @@ def test_branch_failure_is_reported_without_hanging(
 
     target = {"lsh": "candidate_pairs_lsh", "substr": "candidate_pairs_substr"}
     monkeypatch.setattr(pipeline_mod, target[failing], boom)
-    out = _run_bounded(lambda: DedupPipeline(cfg=CFG).run(pages_df))
+    ckpt = str(tmp_path) if checkpointed else None
+    out = _run_bounded(
+        lambda: DedupPipeline(cfg=CFG, checkpoint_dir=ckpt).run(pages_df)
+    )
     from camden_spark.plans.caches import release_caches
 
     release_caches()
@@ -643,10 +651,10 @@ def test_branch_failure_is_reported_without_hanging(
     assert f"{other}:" not in msg and "simhash:" not in msg
 
 
-def test_threaded_and_sequential_runs_agree(spark, pages_df, tmp_path):
-    """The driver-thread pool (no checkpoint dir) and the sequential
-    checkpoint-store path build the same branches: identical clusters and
-    identical (url_a, url_b, source) pairs."""
+def test_plain_and_checkpointed_runs_agree(spark, pages_df, tmp_path):
+    """A run without a checkpoint dir (barrier-backed branches) and one with
+    it (snapshot-backed branches) give identical clusters and identical
+    (url_a, url_b, source) pairs."""
     outs = []
     for ckpt in (None, str(tmp_path)):
         res = DedupPipeline(cfg=CFG, checkpoint_dir=ckpt).run(pages_df)
@@ -656,7 +664,68 @@ def test_threaded_and_sequential_runs_agree(spark, pages_df, tmp_path):
         )
         res.release()
         outs.append((clusters, pairs))
-    (c_pool, p_pool), (c_seq, p_seq) = outs
-    assert c_pool == c_seq
-    assert p_pool == p_seq
-    assert {s for _, _, s in p_pool} >= {"exact", "minhash_lsh", "substr"}
+    (c_plain, p_plain), (c_ckpt, p_ckpt) = outs
+    assert c_plain == c_ckpt
+    assert p_plain == p_ckpt
+    assert {s for _, _, s in p_plain} >= {"exact", "minhash_lsh", "substr"}
+
+
+def _capped_lsh_input(spark):
+    """x1..x3 share band 0's four slots and nothing else; y1, y2 share band 1."""
+    def sig(d: int, shared: dict[int, int]) -> list[int]:
+        return [shared.get(j, 1000 * d + j + 1) for j in range(CFG.minhash_perms)]
+
+    band0 = {j: 7 for j in range(4)}
+    band1 = {j: 9 for j in range(4, 8)}
+    rows = [(f"x{i}", sig(i, band0)) for i in (1, 2, 3)]
+    rows += [(f"y{i}", sig(10 + i, band1)) for i in (1, 2)]
+    return spark.createDataFrame(rows, "url string, minhash array<bigint>")
+
+
+def _capped_simhash_input(spark):
+    """x1, x2 are 3 bits apart and share only block 0, which x3 shares too;
+    y1 == y2 share every block with no one else."""
+    def word(*blocks: int) -> int:
+        v = sum(b << (16 * i) for i, b in enumerate(blocks))
+        return v - (1 << 64) if v >= 1 << 63 else v
+
+    rows = [
+        ("x1", word(0x1111, 0x2222, 0x3333, 0x4444)),
+        ("x2", word(0x1111, 0x2223, 0x3332, 0x4445)),
+        ("x3", word(0x1111, 0x5555, 0x6666, 0x7777)),
+        ("y1", word(0x8888, 0x9999, 0xAAAA, 0xBBBB)),
+        ("y2", word(0x8888, 0x9999, 0xAAAA, 0xBBBB)),
+    ]
+    return spark.createDataFrame(rows, "url string, simhash bigint")
+
+
+def _capped_substr_input(spark):
+    """x1..x3 share fingerprint 100 only; y1, y2 share fingerprint 200."""
+    rows = [(f"x{i}", [100, 10 + i]) for i in (1, 2, 3)]
+    rows += [(f"y{i}", [200, 20 + i]) for i in (1, 2)]
+    return spark.createDataFrame(rows, "url string, fingerprints array<bigint>")
+
+
+@pytest.mark.parametrize(
+    "op,build,cap_field,kind",
+    [
+        (candidate_pairs_lsh, _capped_lsh_input, "max_band_group", "bands"),
+        (candidate_pairs_simhash, _capped_simhash_input, "max_simhash_group", "blocks"),
+        (candidate_pairs_substr, _capped_substr_input, "max_fingerprint_group", "fingerprints"),
+    ],
+    ids=["lsh", "simhash", "substr"],
+)
+def test_capped_group_is_dropped_and_counted(spark, op, build, cap_field, kind):
+    """A key group above the cap is dropped AND counted, and the pair only
+    that group produced is gone; a group at the cap still pairs."""
+    from dataclasses import replace
+
+    cap = 2
+    pairs, metrics = op(build(spark), replace(CFG, **{cap_field: cap}))
+    found = {(r["url_a"], r["url_b"]) for r in pairs.collect()}
+    m = metrics.first().asDict()
+    assert m[f"{kind}_dropped"] >= 1
+    assert m[f"rows_in_dropped_{kind}"] >= cap + 1
+    assert m[f"{kind}_total"] >= m[f"{kind}_dropped"]
+    assert ("x1", "x2") not in found
+    assert ("y1", "y2") in found
