@@ -29,8 +29,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql.types import LongType
 
-from camden_spark.operators.lsh import capped_key_join
-
 #: Quantizer training-sample bound, and so the most cells k-means can emit:
 #: the default of both ``train_ivf_centroids(sample_rows)`` and
 #: ``auto_ivf_params(max_cells)``.
@@ -414,10 +412,15 @@ def ivf_near_dup_pairs(
     pairs share a cell, get deduped, then exact-cosine verified.  Oversize
     cells are dropped to cap skew; pass ``status`` (a dict) to receive
     ``{"cells_total", "cells_dropped", "rows_in_dropped_cells"}`` (one tiny
-    extra job).  The cell join is ``operators/lsh.capped_key_join`` (its
-    docstring has the skew story) over the (id, cell) assignment rows; the
-    payload never rides the candidate machinery (see the inline §8-playbook
-    note), and only the per-cell size table is cached.  Tuning:
+    extra job).  Cell sizing is one map-side-combined aggregation over the
+    (id, cell) assignment rows; the payload never rides the candidate
+    machinery (see the inline §8-playbook note), and nothing is cached
+    corpus-wide.  The cell join keeps its own copy of the skew policy in
+    ``operators/lsh.capped_key_join`` because that helper caches its size
+    table: under AQE the cached table's scan sits below each join side's
+    key exchange, the two sides stop sharing one exchange, and the cell UDF
+    runs over the corpus three times instead of twice (measured at sf0.1).
+    Tuning:
     n_cells ≈ √corpus_size keeps cells bounded; on clustered real-world
     embeddings probed cells concentrate so the candidate mass stays far
     below all-pairs — the synthetic test embeddings are near-uniform (worst
@@ -435,18 +438,40 @@ def ivf_near_dup_pairs(
         F.col(id_col),
         F.explode(_cell_udf(centroids, n_probe)(F.col(vec_col))).alias("cell"),
     )
-    joined, drops = capped_key_join(assign, ["cell"], max_cell, "cells", id_col)
+    # cell sizing via one map-side-combined aggregation (the previous window
+    # count rode a full-payload sort per side); membership in keep-cells is
+    # a tiny broadcastable join
+    sizes = assign.groupBy("cell").agg(F.count("*").alias("n"))
     if status is not None:
-        status.update(drops.first().asDict())
+        drops = sizes.agg(
+            F.count("*").cast("long").alias("cells_total"),
+            F.sum((F.col("n") > max_cell).cast("long")).alias("cells_dropped"),
+            F.sum(
+                F.when(F.col("n") > max_cell, F.col("n")).otherwise(0)
+            ).cast("long").alias("rows_in_dropped_cells"),
+        ).first()
+        status.update(drops.asDict())
+    keep = sizes.filter((F.col("n") > 1) & (F.col("n") <= max_cell)).select(
+        "cell"
+    )
+    # explicit cell-keyed repartition before the self-join (the lsh.py band
+    # pattern): the (id, cell) rows are tiny in BYTES but the join emits
+    # O(cell²) candidate rows, so AQE's byte-based coalescing would run it
+    # on 1-2 tasks (measured: a 2-task 4.7 s stage at sf0.1); both sides
+    # share the exchange via ReusedExchange
     n_parts = vectors.sparkSession.sparkContext.defaultParallelism * 2
+    joinable = assign.join(keep, "cell", "left_semi").repartition(
+        n_parts, "cell"
+    )
+    a = joinable.select(F.col(id_col).alias("id_a"), "cell")
+    b = joinable.select(F.col(id_col).alias("id_b"), "cell")
     cand = (
-        joined.select(
-            F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
-        )
-        # pair-keyed repartition: the dedup aggregation and the downstream
-        # O(dim)-per-pair verify are CPU-bound on rows whose shuffle bytes
-        # (16 B/pair) read as "1 partition" to AQE; the dedup agg reuses
-        # this exchange (no extra shuffle)
+        a.join(b, "cell")
+        .filter(F.col("id_a") < F.col("id_b"))
+        # pair-keyed repartition for the same reason: the dedup aggregation
+        # and the downstream O(dim)-per-pair verify are CPU-bound on rows
+        # whose shuffle bytes (16 B/pair) read as "1 partition" to AQE;
+        # the dedup agg reuses this exchange (no extra shuffle)
         .repartition(n_parts, "id_a", "id_b")
         # dedupe BEFORE the exact verify: multi-probe assigns a pair to up
         # to n_probe shared cells — on id pairs only, never payloads
@@ -486,10 +511,14 @@ def ann_near_dup_pairs(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs (id_a < id_b, cosine_sim ≥ threshold)
-    via SRP-LSH buckets + exact verify.  The bucket join is
-    ``operators/lsh.capped_key_join`` (its docstring has the skew story):
-    oversize buckets dropped.  The per-vector norm is precomputed once and
-    rides the bucket rows, so the verify pays ONE dot per deduped pair
+    via SRP-LSH buckets + exact verify.  Same skew discipline as text LSH
+    (``operators/lsh.capped_key_join`` has the skew story): oversize buckets
+    dropped.  The join stays inline, without that helper's key repartition:
+    the bucket rows carry the embedding payload, and AQE broadcasts both
+    joins here, where a forced repartition shuffles the payload once per
+    side (measured ~0.5 s slower on ``embedding_near_dup_lsh`` at sf0.1).
+    The per-vector norm is precomputed once and rides the bucket rows, so
+    the verify pays ONE dot per deduped pair
     (bit-identical cosine, see :func:`_with_norm`).
 
     Shape note (round 7): an id-only candidate join with the embeddings
@@ -502,9 +531,24 @@ def ann_near_dup_pairs(
     payload-free candidate machinery IS the measured win."""
     bn = _with_norm(vectors, id_col, vec_col)
     b = hyperplane_buckets(bn, dim, n_planes, n_tables, seed, vec_col)
-    joined, _ = capped_key_join(b, ["table", "bucket"], max_bucket, "buckets", id_col)
-    return (
-        joined.select(
+    sized = b.groupBy("table", "bucket").agg(F.count("*").alias("n"))
+    keep = sized.filter((F.col("n") > 1) & (F.col("n") <= max_bucket)).select(
+        "table", "bucket"
+    )
+    joinable = b.join(keep, ["table", "bucket"], "left_semi").select(
+        id_col, vec_col, "_nrm", "table", "bucket"
+    )
+    l, r = joinable.alias("l"), joinable.alias("r")
+    pairs = (
+        l.join(
+            r,
+            on=[
+                F.col("l.table") == F.col("r.table"),
+                F.col("l.bucket") == F.col("r.bucket"),
+                F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
+            ],
+        )
+        .select(
             F.col(f"l.{id_col}").alias("id_a"),
             F.col(f"r.{id_col}").alias("id_b"),
             F.col(f"l.{vec_col}").alias("_va"),
@@ -520,3 +564,4 @@ def ann_near_dup_pairs(
         .filter(F.col("cosine_sim") >= threshold)
         .select("id_a", "id_b", "cosine_sim")
     )
+    return pairs

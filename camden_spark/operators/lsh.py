@@ -6,9 +6,10 @@ builtin that accepts array columns, so banding never leaves codegen), exploded
 to ``(url, band, band_hash)`` rows, and candidates come from a self-equi-join
 on ``(band, band_hash)``.
 
-The skew-capped self-join itself is :func:`capped_key_join`, shared by every
-candidate operator (LSH bands, SimHash blocks, substring fingerprints, IVF
-cells, SRP buckets).
+The skew-capped self-join itself is :func:`capped_key_join`, shared by the
+text candidate operators (LSH bands, SimHash blocks, substring fingerprints).
+The embedding joins in ``operators/ann.py`` (IVF cells, SRP buckets) keep
+their own copies of the policy; their docstrings say why.
 """
 
 from __future__ import annotations
@@ -39,11 +40,11 @@ def band_hashes(sig: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 
 def capped_key_join(
-    rows: DataFrame, keys: list[str], cap: int, kind: str, id_col: str = "url"
+    rows: DataFrame, keys: list[str], cap: int, kind: str
 ) -> tuple[DataFrame, DataFrame]:
     """Skew-capped self-equi-join of ``rows`` on ``keys``: every pair of rows
     sharing a key group, sides aliased ``l`` and ``r``, with
-    ``l.{id_col} < r.{id_col}``.  The caller projects and dedupes (a pair
+    ``l.url < r.url``.  The caller projects and dedupes (a pair
     may share several groups).  Also returns a lazy 1-row metrics frame
     (``{kind}_total``, ``{kind}_dropped``, ``rows_in_dropped_{kind}``).
 
@@ -57,9 +58,13 @@ def capped_key_join(
     the kept keys with a semi-join and repartition on the key to 2x the
     session's parallelism — the rows are tiny in BYTES but the join emits
     O(group²) rows, so AQE's byte-based coalescing alone would run it on
-    1-2 tasks (measured: a 2-task 4.7 s IVF stage at sf0.1), and both sides
-    share the exchange via ReusedExchange — and (4) leave AQE skew-join
-    splitting on as the second line of defense.
+    1-2 tasks (measured: a 2-task 4.7 s IVF stage at sf0.1) — and (4) leave
+    AQE skew-join splitting on as the second line of defense.  Cost of the
+    cache: under AQE its scan sits below each side's key exchange, so the
+    two sides do not share one exchange and ``rows`` is computed once per
+    side.  That is a codegen'd explode when ``rows`` derives from a cached
+    frame (the pipeline warm-caches signatures and fingerprints), but a
+    whole UDF pass when it does not (see ``operators/ann.ivf_near_dup_pairs``).
     """
     sized = track_cache(rows.groupBy(*keys).agg(F.count("*").alias("_n")))
     over = F.col("_n") > cap
@@ -75,7 +80,7 @@ def capped_key_join(
     joinable = rows.join(keep, keys, "left_semi").repartition(n_parts, *keys)
     left, right = joinable.alias("l"), joinable.alias("r")
     on = [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
-    joined = left.join(right, on=on + [F.col(f"l.{id_col}") < F.col(f"r.{id_col}")])
+    joined = left.join(right, on=on + [F.col("l.url") < F.col("r.url")])
     return joined, metrics
 
 
