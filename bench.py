@@ -7,9 +7,9 @@ on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 Each query is forced with a FULL-ROW checksum aggregation
 (bit_xor(xxhash64(to_json(struct(*))))) so Catalyst cannot prune the measured
 work — a plain count() would let the optimizer skip expensive columns entirely
-(e.g. the signature UDF).  The pipeline query runs with collect_metrics=False:
-per-stage skew metrics cost extra tiny actions that dominate at toy scale and
-are an observability feature, not part of the measured dataflow.
+(e.g. the signature UDF).  The pipeline query's per-stage skew metrics ride
+observations on its own jobs, so the measured plan is the registry's
+``near_dup_clusters`` as is.
 
 The sweep runs $BENCH_REPS times (default 3) and reports the per-query MIN
 across sweeps — the same min-of-N discipline as bench_scaling.py, applied to
@@ -63,18 +63,6 @@ def _force(df) -> tuple[int, int]:
     return int(row["n"]), int(row["chk"] or 0)
 
 
-def _near_dup_clusters_bench(spark, sf_dir):
-    """Same plan as queries()['near_dup_clusters'] minus the per-stage metric
-    actions (collect_metrics=False — the flag the pipeline exposes for
-    latency-sensitive runs)."""
-    from camden_spark.entry_queries import CFG
-    from camden_spark.plans.pipeline import DedupPipeline
-    from camden_spark.sources.pages import pages_from_documents
-
-    pages = pages_from_documents(spark, sf_dir)
-    return DedupPipeline(cfg=CFG, collect_metrics=False).run(pages).clusters
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from camden_spark.session import default_cores, get_spark
@@ -98,7 +86,6 @@ def main() -> None:
     spark.range(1000).selectExpr("sum(id)").collect()
 
     n_docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).count()
-    overrides = {"near_dup_clusters": _near_dup_clusters_bench}
     times: dict[str, float] = {}
     rows: dict[str, int] = {}
     from camden_spark.plans.caches import release_caches
@@ -111,9 +98,8 @@ def main() -> None:
     for _rep in range(reps):
         sweep: dict[str, float] = {}
         for name in HEADLINE:
-            fn = overrides.get(name, lookup[name])
             t0 = time.time()
-            df = fn(spark, sf_dir)
+            df = lookup[name](spark, sf_dir)
             n, _ = _force(df)
             sweep[name] = round(time.time() - t0, 3)
             if name in rows and rows[name] != n:

@@ -80,7 +80,7 @@ def run_once(
         os.makedirs(eventlog_dir, exist_ok=True)
         env["SPARK_GRAFT_EVENTLOG_DIR"] = eventlog_dir
     cmd = [sys.executable, os.path.join(REPO, "main.py"),
-           "--input", corpus, "--output", out, "--skip-metrics"]
+           "--input", corpus, "--output", out]
     proc = subprocess.run(
         prefix + cmd,
         env=env,

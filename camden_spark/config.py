@@ -18,10 +18,6 @@ from dataclasses import asdict, dataclass
 #: MinHash permutations.  Fits in uint64 with headroom for mod arithmetic.
 MERSENNE_61 = (1 << 61) - 1
 
-#: pandas.util.hash_array's default 16-byte key — pinned explicitly so token /
-#: shingle hashing is deterministic across pandas versions and processes.
-HASH_KEY = "0123456789123456"
-
 
 @dataclass(frozen=True)
 class DedupConfig:

@@ -2328,8 +2328,8 @@ SQL_LANG_ID = _lang_id_oracle_sql()
 def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whole-document fingerprint (G).  The driver-facing column is sha256 —
     byte-identical between Spark sha2 and DuckDB sha256, so the query is
-    hash-verified; the 64-bit xxhash64 variant (functions/text.py:
-    doc_fingerprint) remains the cheap internal fingerprint."""
+    hash-verified; inside the engine the exact stage's checksum
+    (operators/exact.py) is the cheap whole-document fingerprint."""
     docs = _documents(spark, sf_dir)
     return docs.select(
         "doc_id",

@@ -1,11 +1,14 @@
-"""Vectorized hashing kernels (pure numpy/pandas — no Spark imports).
+"""Vectorized hashing kernels (pure numpy — no Spark imports).
 
 These are the batch kernels the pandas UDFs in ``functions.shingles`` call.
-All arithmetic is uint64 with silent wraparound (mod 2^64); token hashing uses
-pandas' C-level ``hash_array`` (xxHash-style, keyed) pinned to an explicit
-16-byte key so results are stable across processes, pandas versions, and the
-driver/executor boundary — the determinism the reference never had (its group
-order was thread-race-dependent, reference src/scanner.rs:62).
+All arithmetic is uint64 with silent wraparound (mod 2^64).  Tokens are
+hashed at the byte level (``batch_token_hashes``): each Arrow batch is joined
+into one UTF-8 buffer, and every token's hash is a 64-bit polynomial segment
+hash over its bytes (prefix sums over the buffer, then a splitmix64
+finalizer).  It is a pure function of the token's bytes, so results are
+stable across processes, library versions, and the driver/executor
+boundary — the determinism the reference never had (its group order was
+thread-race-dependent, reference src/scanner.rs:62).
 
 No per-row Python in the Spark hot path: callers pass whole Arrow batches and
 everything here is O(batch) numpy.
@@ -13,10 +16,12 @@ everything here is O(batch) numpy.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
+from typing import TYPE_CHECKING
 
-from camden_spark.config import HASH_KEY
+import numpy as np
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 #: odd multiplier for the rolling shingle combine (splitmix64's constant)
 _SHINGLE_MULT = np.uint64(0x9E3779B97F4A7C15)
@@ -29,14 +34,6 @@ EMPTY_SLOT = np.uint64(0x7FFFFFFFFFFFFFFF)
 #: signatures right by 1 for int64 safety) — LSH filters these out so empty
 #: docs never band together.
 EMPTY_SIG_SLOT = int(EMPTY_SLOT) >> 1
-
-
-def token_hashes(tokens: list[str]) -> np.ndarray:
-    """uint64 hash per token, vectorized (one C call for the whole list)."""
-    if not tokens:
-        return np.empty(0, dtype=np.uint64)
-    arr = np.asarray(tokens, dtype=object)
-    return pd.util.hash_array(arr, hash_key=HASH_KEY, categorize=False)
 
 
 # --- byte-level batch tokenizer/hasher --------------------------------------

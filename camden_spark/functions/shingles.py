@@ -56,7 +56,7 @@ def _signature_batches(
     # minhash+simhash) would still ship ~1.6 KB/row of shingle hashes
     # through the worker socket — ~60% of the stage's return bytes.  Large
     # in-flight bursts are also what arms the JVM<->worker socket flow-
-    # control stall (see session.py SPARK_GRAFT_ARROW_BATCH note).
+    # control stall (see the arrow.maxRecordsPerBatch note in session.py).
     schema = _SIG_SCHEMA if include_shingles else _SIG_SCHEMA_NO_SHINGLES
 
     @F.pandas_udf(schema)

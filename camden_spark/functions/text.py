@@ -200,11 +200,6 @@ def bpe_piece_count(col: str = "text") -> Column:
     return F.regexp_count(F.col(col), F.lit(BPE_PIECE_PATTERN)).cast("long")
 
 
-def doc_fingerprint(col: str = "text") -> Column:
-    """64-bit whole-document fingerprint — builtin xxhash64 (seed 42)."""
-    return F.xxhash64(F.col(col)).alias("fingerprint")
-
-
 def repetition_stats(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

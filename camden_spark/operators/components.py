@@ -60,6 +60,7 @@ from pyspark.sql import DataFrame, Observation
 
 from camden_spark.config import DedupConfig
 from camden_spark.plans.caches import _persistent_rdd_ids, track_blocks_since
+from camden_spark.plans.metrics import observed
 
 #: seeds tried for injective 64-bit node ids before the url-string fallback
 #: (module-level so tests can monkeypatch it to force the fallback path)
@@ -228,9 +229,9 @@ def connected_components(
             )
         )
         new_labels = truncate(stepped, f"cc_iter_{iterations % 2}")
-        jmap = obs._jo.getOrEmpty()  # .get would block if no action ran
-        if not jmap.isEmpty():
-            converged = int(jmap.get("changed").get()) == 0
+        m = observed(obs)
+        if m is not None:
+            converged = m["changed"] == 0
         else:  # defensive: metric not collected — fall back to a scan
             converged = new_labels.filter(F.col("changed")).isEmpty()
         labels = new_labels.drop("changed")

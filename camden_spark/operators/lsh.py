@@ -15,7 +15,7 @@ their own copies of the policy; their docstrings say why.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 
 from camden_spark.config import DedupConfig
 from camden_spark.functions.shingles import jaccard_on_shingles
@@ -40,13 +40,20 @@ def band_hashes(sig: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 
 def capped_key_join(
-    rows: DataFrame, keys: list[str], cap: int, kind: str
+    rows: DataFrame,
+    keys: list[str],
+    cap: int,
+    kind: str,
+    obs: Observation | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Skew-capped self-equi-join of ``rows`` on ``keys``: every pair of rows
     sharing a key group, sides aliased ``l`` and ``r``, with
     ``l.url < r.url``.  The caller projects and dedupes (a pair
     may share several groups).  Also returns a lazy 1-row metrics frame
     (``{kind}_total``, ``{kind}_dropped``, ``rows_in_dropped_{kind}``).
+    The same three sums also fill ``obs`` when given: it rides the size
+    table, so they are counted while the join's own job builds that cache,
+    with no job of their own (read them with ``plans.metrics.observed``).
 
     Skew story (explicit, per the north rule): boilerplate-heavy corpora
     produce mega-groups — a single band key shared by thousands of pages —
@@ -66,15 +73,19 @@ def capped_key_join(
     frame (the pipeline warm-caches signatures and fingerprints), but a
     whole UDF pass when it does not (see ``operators/ann.ivf_near_dup_pairs``).
     """
-    sized = track_cache(rows.groupBy(*keys).agg(F.count("*").alias("_n")))
+    sized = rows.groupBy(*keys).agg(F.count("*").alias("_n"))
     over = F.col("_n") > cap
-    metrics = sized.agg(
+    stats = [
         F.count("*").cast("long").alias(f"{kind}_total"),
         F.sum(over.cast("long")).alias(f"{kind}_dropped"),
         F.sum(F.when(over, F.col("_n")).otherwise(0))
         .cast("long")
         .alias(f"rows_in_dropped_{kind}"),
-    )
+    ]
+    if obs is not None:
+        sized = sized.observe(obs, *stats)
+    sized = track_cache(sized)
+    metrics = sized.agg(*stats)
     keep = sized.filter((F.col("_n") > 1) & ~over).select(*keys)
     n_parts = rows.sparkSession.sparkContext.defaultParallelism * 2
     joinable = rows.join(keep, keys, "left_semi").repartition(n_parts, *keys)
@@ -85,10 +96,11 @@ def capped_key_join(
 
 
 def candidate_pairs_lsh(
-    sig: DataFrame, cfg: DedupConfig | None = None
+    sig: DataFrame, cfg: DedupConfig | None = None, obs: Observation | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """LSH candidate pairs (url_a < url_b), plus a 1-row metrics DataFrame
-    (bands_total, bands_dropped, rows_in_dropped_bands).
+    (bands_total, bands_dropped, rows_in_dropped_bands), also observed into
+    ``obs`` when given (``capped_key_join``).
 
     ``sig`` must carry ``url`` and ``minhash``.
     """
@@ -100,7 +112,11 @@ def candidate_pairs_lsh(
 
     sig = sig.filter(F.col("minhash")[0] != F.lit(EMPTY_SIG_SLOT))
     joined, metrics = capped_key_join(
-        band_hashes(sig, cfg), ["band", "band_hash"], cfg.max_band_group, "bands"
+        band_hashes(sig, cfg),
+        ["band", "band_hash"],
+        cfg.max_band_group,
+        "bands",
+        obs,
     )
     pairs = joined.select(
         F.col("l.url").alias("url_a"), F.col("r.url").alias("url_b")

@@ -14,7 +14,7 @@ all-zeros block from boilerplate) are dropped and counted.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 
 from camden_spark.config import DedupConfig
 from camden_spark.operators.lsh import capped_key_join
@@ -38,17 +38,18 @@ def simhash_blocks(sig: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 
 def candidate_pairs_simhash(
-    sig: DataFrame, cfg: DedupConfig | None = None
+    sig: DataFrame, cfg: DedupConfig | None = None, obs: Observation | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """Verified Hamming-ball pairs (url_a, url_b, hamming ≤ radius) plus a
     1-row metrics DataFrame (blocks_total, blocks_dropped,
-    rows_in_dropped_blocks)."""
+    rows_in_dropped_blocks), also observed into ``obs`` when given."""
     cfg = cfg or DedupConfig()
     joined, metrics = capped_key_join(
         simhash_blocks(sig, cfg),
         ["block", "block_val"],
         cfg.max_simhash_group,
         "blocks",
+        obs,
     )
     pairs = (
         joined.select(

@@ -20,7 +20,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql.types import (
     ArrayType,
     LongType,
@@ -58,16 +58,18 @@ def with_fingerprints(
 
 
 def candidate_pairs_substr(
-    fp: DataFrame, cfg: DedupConfig | None = None
+    fp: DataFrame, cfg: DedupConfig | None = None, obs: Observation | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """Fingerprint-equality candidate pairs (url_a < url_b) + metrics row
-    (fingerprints_total, fingerprints_dropped, rows_in_dropped_fingerprints)."""
+    (fingerprints_total, fingerprints_dropped, rows_in_dropped_fingerprints),
+    also observed into ``obs`` when given."""
     cfg = cfg or DedupConfig()
     joined, metrics = capped_key_join(
         fp.select("url", F.explode("fingerprints").alias("fp")),
         ["fp"],
         cfg.max_fingerprint_group,
         "fingerprints",
+        obs,
     )
     pairs = joined.select(
         F.col("l.url").alias("url_a"), F.col("r.url").alias("url_b")

@@ -15,16 +15,16 @@ input's file listing — ``input_identity``): rerunning against a different
 corpus with the same checkpoint dir must recompute, never resume the previous
 corpus's stage outputs.
 
-Two commit protocols (``commit_mode``):
-
-* ``"rename"`` — data + manifest land in ``<dir>.tmp``, then one atomic
-  ``os.rename``.  Correct on POSIX filesystems; object stores have no atomic
-  directory rename.
-* ``"manifest"`` — object-store-safe: any stale manifest is deleted first,
-  data files are written directly to the final directory, and the manifest is
-  PUT last as the single-file commit point (single-object PUTs are atomic on
-  S3/GCS).  A killed run leaves data without a manifest → ``has()`` is false
-  → the stage recomputes and overwrites.
+One commit protocol, manifest-last: any stale manifest is deleted first,
+data files are written directly to the final directory, and the manifest is
+written last as the single-file commit point.  A killed run leaves data
+without a manifest → ``has()`` is false → the stage recomputes and
+overwrites.  The protocol needs no atomic directory rename, so it ports to
+an object store (single-object PUTs are atomic on S3/GCS) or an Iceberg
+commit; the snapshot I/O itself is still local-filesystem (``os.*`` for the
+manifest and the part listing, a local path for the parquet data).
+Directories written by the former rename protocol have the same layout
+(``data/`` + ``_MANIFEST.json``), so they still resume.
 """
 
 from __future__ import annotations
@@ -32,12 +32,13 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import shutil
 import time
 from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
+
+from camden_spark.plans.metrics import observed
 
 
 #: bump when snapshot semantics change (e.g. a stage's dataflow is fixed) —
@@ -70,8 +71,8 @@ def input_identity(df: DataFrame) -> str:
     API (``hadoop_file_stat``) so object-store corpora regenerated in place
     under the same keys still change the identity — without this, the
     signature would degrade to the bare file listing exactly on the
-    deployments the 'manifest' commit mode targets.  A file whose stat fails
-    on both paths contributes its name only.  Empty string for
+    deployments the manifest-last commit protocol targets.  A file whose
+    stat fails on both paths contributes its name only.  Empty string for
     in-memory/non-file sources (identity unknown — such checkpoints are only
     as safe as the caller's discipline)."""
     import os as _os
@@ -115,13 +116,8 @@ class SnapshotStore:
     root: str
     config_hash: str
     input_id: str = ""
-    commit_mode: str = "rename"  # "rename" (POSIX) | "manifest" (object store)
     #: stages completed this run or resumed (name → manifest dict)
     lineage: dict[str, dict] = field(default_factory=dict)
-
-    def __post_init__(self) -> None:
-        if self.commit_mode not in ("rename", "manifest"):
-            raise ValueError(f"unknown commit_mode {self.commit_mode!r}")
 
     def _stage_dir(self, stage: str) -> str:
         return os.path.join(self.root, self.config_hash, stage)
@@ -160,28 +156,20 @@ class SnapshotStore:
         """Write df as the stage snapshot; returns the re-read DataFrame
         (reading back truncates lineage, like a checkpoint)."""
         spark = df.sparkSession
-        stage_dir = self._stage_dir(stage)
-        if self.commit_mode == "rename":
-            write_dir = stage_dir + ".tmp"
-            if os.path.exists(write_dir):
-                shutil.rmtree(write_dir)
-            if os.path.exists(stage_dir):
-                shutil.rmtree(stage_dir)
-        else:  # manifest commit: invalidate first, write in place, PUT last
-            write_dir = stage_dir
-            manifest_path = self._manifest_path(stage)
-            if os.path.exists(manifest_path):
-                os.remove(manifest_path)
-        data_dir = os.path.join(write_dir, "data")
+        # invalidate first, write in place, manifest last
+        manifest_path = self._manifest_path(stage)
+        if os.path.exists(manifest_path):
+            os.remove(manifest_path)
+        data_dir = os.path.join(self._stage_dir(stage), "data")
         # row count rides an Observation on the write action — no second scan
         obs = Observation(f"snapshot_{stage}")
         df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
             "overwrite"
         ).parquet(data_dir)
-        jmap = obs._jo.getOrEmpty()  # .get would block if the write ran 0 jobs
+        counted = observed(obs)  # None if the write ran no job
         rows = (
-            int(jmap.get("rows").get())
-            if not jmap.isEmpty()
+            counted["rows"]
+            if counted is not None
             else spark.read.parquet(data_dir).count()
         )
         parts = sorted(
@@ -192,7 +180,6 @@ class SnapshotStore:
             "stage": stage,
             "config_hash": self.config_hash,
             "input_id": self.input_id,
-            "commit_mode": self.commit_mode,
             "rows": rows,
             "num_partitions": len(parts),
             "partitions": parts,
@@ -200,13 +187,10 @@ class SnapshotStore:
             "counters": counters or {},
             "written_at": time.time(),
         }
-        manifest_json = json.dumps(manifest, indent=2)
-        with open(os.path.join(write_dir, "_MANIFEST.json"), "w") as f:
-            f.write(manifest_json)
-        if self.commit_mode == "rename":
-            os.rename(write_dir, stage_dir)
+        with open(manifest_path, "w") as f:
+            json.dump(manifest, f, indent=2)
         self.lineage[stage] = manifest
-        return spark.read.parquet(os.path.join(stage_dir, "data"))
+        return spark.read.parquet(data_dir)
 
     def stage(
         self,

@@ -28,18 +28,29 @@ class StageCounters:
         return df.observe(obs, n.alias("rows"))
 
     def get(self) -> dict[str, int]:
-        """Non-blocking: returns only counters whose frame has been acted on.
-
-        (``Observation.get`` BLOCKS until the observed dataset's first action
-        — a frame that never ran, e.g. on a checkpoint-resumed path, would
-        hang the caller; ``getOrEmpty`` on the JVM object does not.)
-        """
+        """Non-blocking: returns only counters whose frame has been acted on."""
         out: dict[str, int] = {}
         for name, obs in self._observations.items():
-            try:
-                jmap = obs._jo.getOrEmpty()
-                if not jmap.isEmpty():
-                    out[name] = int(jmap.get("rows").get())
-            except Exception:
-                pass
+            row = observed(obs)
+            if row is not None:
+                out[name] = row["rows"]
         return out
+
+
+def observed(obs: Observation) -> dict | None:
+    """The metrics ``obs`` collected, or None while its frame has not run.
+
+    Non-blocking: ``Observation.get`` BLOCKS until the observed frame's
+    first action, so a frame that never ran (e.g. on a checkpoint-resumed
+    path) would hang the caller.  The JVM's ``getOrEmpty`` does not block,
+    but on an attached Observation whose frame has not run it raises (a Java
+    NullPointerException in PySpark 4.1) rather than returning an empty map,
+    so both read as None, as does an Observation never attached to a frame.
+    Once the map is filled, ``get`` returns at once.
+    """
+    try:
+        if obs._jo.getOrEmpty().isEmpty():
+            return None
+    except Exception:  # noqa: BLE001 - not run yet / never attached
+        return None
+    return obs.get

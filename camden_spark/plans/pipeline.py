@@ -15,7 +15,11 @@ The three candidate branches run on driver threads and each returns its
 verified pairs, behind its snapshot when a checkpoint dir is set and a
 materialization barrier otherwise; the substring branch waits on the LSH
 branch's future only for its anti-join, after its own candidate work.  The
-main thread keeps the pair union, CC and the sinks.
+main thread keeps the pair union, CC and the sinks.  Each candidate join's
+skew counters (``{kind}_total``, ``{kind}_dropped``,
+``rows_in_dropped_{kind}``) ride an Observation on that join's own job and
+land in ``PipelineResult.metrics["lsh"|"simhash"|"substr"]`` with no job of
+their own.
 
 A checksum group already is a component with its min url as canonical, so
 rows byte-identical to a canonical are never shingled (F7) and take their
@@ -29,7 +33,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 
 from camden_spark.config import DedupConfig
 from camden_spark.operators.components import connected_components
@@ -49,7 +53,7 @@ from camden_spark.plans.caches import (
     warm_cache,
 )
 from camden_spark.plans.checkpoint import SnapshotStore
-from camden_spark.plans.metrics import StageCounters
+from camden_spark.plans.metrics import StageCounters, observed
 from camden_spark.sources.pages import normalize_pages
 
 
@@ -151,12 +155,6 @@ class DedupPipeline:
     enable_lsh: bool = True
     enable_simhash: bool = True
     enable_substr: bool = True
-    #: eagerly collect per-stage skew metrics (one extra tiny action per
-    #: stage); disable in latency-sensitive benchmark runs
-    collect_metrics: bool = True
-    #: snapshot commit protocol: "rename" (POSIX fs) or "manifest"
-    #: (object-store-safe single-file commit) — see plans/checkpoint.py
-    checkpoint_commit_mode: str = "rename"
 
     def _store(self, pages: DataFrame) -> SnapshotStore | None:
         if self.checkpoint_dir is None:
@@ -167,7 +165,6 @@ class DedupPipeline:
             self.checkpoint_dir,
             self.cfg.config_hash(),
             input_id=input_identity(pages),
-            commit_mode=self.checkpoint_commit_mode,
         )
 
     def run(self, pages: DataFrame) -> PipelineResult:
@@ -175,6 +172,8 @@ class DedupPipeline:
         spark = pages.sparkSession
         store = self._store(pages)
         metrics: dict = {}
+        # each candidate join's skew sums ride its own job (capped_key_join)
+        skew = {k: Observation(f"skew_{k}") for k in ("lsh", "simhash", "substr")}
 
         def staged(name: str, build, upstream: list[str]) -> DataFrame:
             if store is not None:
@@ -278,7 +277,7 @@ class DedupPipeline:
             )
 
         def build_lsh() -> DataFrame:
-            cand, m = candidate_pairs_lsh(sig, cfg)
+            cand, _ = candidate_pairs_lsh(sig, cfg, skew["lsh"])
             # HARD materialization barrier: three downstream branches
             # consume the candidate set, and without it they race to
             # compute the expensive band-join subtree redundantly (+25%
@@ -286,18 +285,13 @@ class DedupPipeline:
             # cache+count — see materialize_barrier's docstring for the
             # Spark 4.1 cached-AQE-plan re-execution quirk.
             cand = materialize_barrier(cand)
-            if self.collect_metrics:
-                metrics["lsh"] = m.first().asDict()
             sh = with_shingles(
                 distinct_pages.join(pair_urls(cand), "url", "left_semi"), cfg
             )
             return verify_pairs_jaccard(cand, sh, cfg)
 
         def build_simhash() -> DataFrame:
-            pairs, m = candidate_pairs_simhash(sig, cfg)
-            if self.collect_metrics:
-                metrics["simhash"] = m.first().asDict()
-            return pairs
+            return candidate_pairs_simhash(sig, cfg, skew["simhash"])[0]
 
         def build_substr(lsh_verified) -> DataFrame:
             # warm: the self-join scans fp on BOTH sides plus the
@@ -305,12 +299,10 @@ class DedupPipeline:
             fp = warm_cache(
                 with_fingerprints(distinct_pages, cfg).select("url", "fingerprints")
             )
-            cand, m = candidate_pairs_substr(fp, cfg)
+            cand, _ = candidate_pairs_substr(fp, cfg, skew["substr"])
             # barrier, as in build_lsh: the verify reads the candidate set
             # three times (both url prunes and the text join)
             cand = materialize_barrier(cand)
-            if self.collect_metrics:
-                metrics["substr"] = m.first().asDict()
             # pairs already confirmed by LSH join the same CC component —
             # skip their (expensive) suffix-array verification.  The wait
             # for the LSH pairs comes only now, after this branch's own
@@ -381,6 +373,12 @@ class DedupPipeline:
             raise RuntimeError(
                 f"candidate branch(es) failed [{detail}]"
             ) from next(iter(errors.values()))
+        # filled by the branches' own jobs; absent for a branch that is off
+        # or resumed from its snapshot
+        for name, obs in skew.items():
+            row = observed(obs)
+            if row is not None:
+                metrics[name] = row
 
         sources = {"lsh": "minhash_lsh", "simhash": "simhash", "substr": "substr"}
         for name, pairs in results.items():

@@ -25,7 +25,6 @@ def get_spark(
     app_name: str = "camden_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
@@ -71,11 +70,7 @@ def get_spark(
         # dedup_incremental/decontaminate at sf0.1 while 31 cores idled.
         # 64 KB keeps such stages parallel; at scale the floor is irrelevant
         # (partitions are advisory-size-bound long before a 64 KB floor).
-        # Env-overridable for deployments that prefer the Spark default.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # zstd (not the lz4 default) for shuffle/broadcast/checkpoint
         # blocks: this engine's heavy stages are byte-movement-bound, not
@@ -96,10 +91,7 @@ def get_spark(
         # PythonRunner.ReaderInputStream epoll, worker in tcp_sendmsg
         # sk_stream_wait_memory, 4.2 MB stuck in each Send-Q).  512-row
         # batches keep any burst ≲1 MB so the multiplexer always drains.
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_BATCH", "512"),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
         # the generated-class cache defaults to 100 entries; one pass over
         # this engine's query suite generates several hundred codegen units,
         # so every repeat run recompiled everything — and Janino compilation
@@ -108,10 +100,7 @@ def get_spark(
         # run≫cpu stages with zero fetch/GC).  10k entries keeps a session's
         # compiled classes resident (repeat embedding_near_dup_lsh run:
         # 6.1 s → 4.0 s); bounded, so long-lived sessions stay safe.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "10000"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "10000")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
@@ -141,13 +130,12 @@ def get_spark(
             "spark.executorEnv.PYTHONPATH",
             repo_root + ((":" + prev) if prev else ""),
         )
-    # generic conf passthrough for benchmarking/ops: semicolon-separated
-    # key=value pairs (env names cannot carry spark.* dots)
+    # the one conf override path, applied after every default above:
+    # semicolon-separated key=value pairs (env names cannot carry spark.*
+    # dots), e.g. SPARK_GRAFT_EXTRA_CONF="spark.eventLog.compress=false"
     extra_env = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
     for pair in filter(None, (p.strip() for p in extra_env.split(";"))):
         k, _, v = pair.partition("=")
-        builder = builder.config(k, v)
-    for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     # a running session silently keeps its launch-time confs: surface that

@@ -32,9 +32,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument("--input", required=True, help="pages table (dir or iceberg:ident)")
     p.add_argument("--output", required=True, help="output directory")
     p.add_argument("--checkpoint-dir", default=None)
-    p.add_argument("--commit-mode", default="rename", choices=["rename", "manifest"],
-                   help="snapshot commit protocol: rename (POSIX fs) or "
-                        "manifest (object-store-safe, manifest-PUT-last)")
     p.add_argument("--cores", type=int, default=None)
     # default None → DedupConfig's 0.65 owns the default (one source of
     # truth: CLI runs must cluster identically to entry()/tests)
@@ -46,8 +43,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
                    help="also write canonical/duplicates tables (A6 analog)")
     p.add_argument("--report", action="store_true",
                    help="print the console duplicate report (extra actions)")
-    p.add_argument("--skip-metrics", action="store_true",
-                   help="skip per-stage skew metric collection (bench mode)")
     return p.parse_args(argv)
 
 
@@ -73,15 +68,15 @@ def run(argv: list[str]) -> dict:
     pipeline = DedupPipeline(
         cfg=cfg,
         checkpoint_dir=args.checkpoint_dir,
-        checkpoint_commit_mode=args.commit_mode,
         enable_lsh=not args.no_lsh,
         enable_simhash=not args.no_simhash,
         enable_substr=not args.no_substr,
-        collect_metrics=not args.skip_metrics,
     )
     result = pipeline.run(pages)
-    clusters = result.clusters
-    clusters.write.mode("overwrite").parquet(f"{args.output}/clusters")
+    result.clusters.write.mode("overwrite").parquet(f"{args.output}/clusters")
+    # the other sinks read the parquet just written: the clusters plan (exact
+    # window + CC label joins) runs once, not once per sink
+    clusters = spark.read.parquet(f"{args.output}/clusters")
     write_clusters_json(clusters, f"{args.output}/clusters_json")
     if args.write_split:
         stats = write_dedup_split(pages, clusters, args.output)

@@ -717,15 +717,41 @@ def _capped_substr_input(spark):
 )
 def test_capped_group_is_dropped_and_counted(spark, op, build, cap_field, kind):
     """A key group above the cap is dropped AND counted, and the pair only
-    that group produced is gone; a group at the cap still pairs."""
+    that group produced is gone; a group at the cap still pairs.  The
+    Observation riding the join's own job holds the same counts as the lazy
+    metrics frame, without an action of its own."""
     from dataclasses import replace
 
+    from pyspark.sql import Observation
+
+    from camden_spark.plans.metrics import observed
+
     cap = 2
-    pairs, metrics = op(build(spark), replace(CFG, **{cap_field: cap}))
+    obs = Observation(f"test_skew_{kind}")
+    pairs, metrics = op(build(spark), replace(CFG, **{cap_field: cap}), obs)
+    assert observed(obs) is None  # attached, but nothing has run yet
     found = {(r["url_a"], r["url_b"]) for r in pairs.collect()}
     m = metrics.first().asDict()
+    assert observed(obs) == m
     assert m[f"{kind}_dropped"] >= 1
     assert m[f"rows_in_dropped_{kind}"] >= cap + 1
     assert m[f"{kind}_total"] >= m[f"{kind}_dropped"]
     assert ("x1", "x2") not in found
     assert ("y1", "y2") in found
+
+
+def test_pipeline_reports_skew_metrics_of_every_candidate_join(spark, pages_df):
+    """Each candidate join's skew counts land in ``res.metrics`` by the time
+    ``run()`` returns (they ride the branches' own jobs), and a cap small
+    enough to fire is counted."""
+    from dataclasses import replace
+
+    res = DedupPipeline(cfg=replace(CFG, max_fingerprint_group=2)).run(pages_df)
+    for kind, key in (("lsh", "bands"), ("simhash", "blocks"), ("substr", "fingerprints")):
+        m = res.metrics[kind]
+        assert set(m) == {f"{key}_total", f"{key}_dropped", f"rows_in_dropped_{key}"}
+        assert m[f"{key}_total"] >= m[f"{key}_dropped"] >= 0
+    sub = res.metrics["substr"]
+    assert sub["fingerprints_dropped"] > 0
+    assert sub["rows_in_dropped_fingerprints"] >= 3 * sub["fingerprints_dropped"]
+    res.release()

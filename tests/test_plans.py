@@ -25,9 +25,8 @@ from camden_spark.sources.sinks import (
 from camden_spark.functions.text import lang_id_udf, token_count, with_text_stats
 
 
-@pytest.mark.parametrize("mode", ["rename", "manifest"])
-def test_snapshot_store_roundtrip(spark, tmp_path, mode):
-    store = SnapshotStore(str(tmp_path), "cfg123", commit_mode=mode)
+def test_snapshot_store_roundtrip(spark, tmp_path):
+    store = SnapshotStore(str(tmp_path), "cfg123")
     df = spark.range(100).withColumn("x", F.col("id") * 2)
     calls = []
 
@@ -38,20 +37,18 @@ def test_snapshot_store_roundtrip(spark, tmp_path, mode):
     out1 = store.stage(spark, "s1", build, upstream=[], counters={"n": 100})
     assert out1.count() == 100 and calls == [1]
     # resume: build NOT called again
-    store2 = SnapshotStore(str(tmp_path), "cfg123", commit_mode=mode)
+    store2 = SnapshotStore(str(tmp_path), "cfg123")
     out2 = store2.stage(spark, "s1", build)
     assert out2.count() == 100 and calls == [1]
     assert store2.lineage["s1"]["rows"] == 100
     assert store2.lineage["s1"]["num_partitions"] >= 1
     # different config hash → recompute
-    store3 = SnapshotStore(str(tmp_path), "other", commit_mode=mode)
+    store3 = SnapshotStore(str(tmp_path), "other")
     store3.stage(spark, "s1", build)
     assert calls == [1, 1]
     # different INPUT identity → recompute (a checkpoint dir is bound to one
     # corpus: same config + different --input must never resume stale outputs)
-    store4 = SnapshotStore(
-        str(tmp_path), "cfg123", input_id="5-deadbeef", commit_mode=mode
-    )
+    store4 = SnapshotStore(str(tmp_path), "cfg123", input_id="5-deadbeef")
     assert not store4.has("s1")
     store4.stage(spark, "s1", build)
     assert calls == [1, 1, 1]
@@ -97,9 +94,9 @@ def test_hadoop_file_stat_matches_os_stat(spark, tmp_path):
 
 
 def test_snapshot_manifest_commit_is_the_commit_point(spark, tmp_path):
-    """manifest mode: data without a manifest (killed mid-write) must read as
-    absent and recompute cleanly."""
-    store = SnapshotStore(str(tmp_path), "c", commit_mode="manifest")
+    """Data without a manifest (killed mid-write) must read as absent and
+    recompute cleanly."""
+    store = SnapshotStore(str(tmp_path), "c")
     df = spark.range(10)
     store.write(df, "s1")
     assert store.has("s1")
@@ -495,8 +492,7 @@ def test_pipeline_resplits_one_file_input_to_session_cores(
     monkeypatch.setattr(exact_mod, "with_checksum", spy)
     pages = _one_file_parquet(pages_df, str(tmp_path / "pages"))
     res = DedupPipeline(
-        enable_lsh=False, enable_simhash=False, enable_substr=False,
-        collect_metrics=False,
+        enable_lsh=False, enable_simhash=False, enable_substr=False
     ).run(pages)
     assert res.clusters.count() == pages_df.select("url").distinct().count()
     res.release()
@@ -753,7 +749,9 @@ def test_get_spark_warns_when_static_conf_is_ignored(spark, monkeypatch):
         same = get_spark("camden_spark_tests", cores=cores, shuffle_partitions=8)
     assert same is spark
     assert not [w for w in seen if "get_spark" in str(w.message)]  # same request
-    monkeypatch.setenv("SPARK_GRAFT_CODEGEN_CACHE", "123")
+    monkeypatch.setenv(
+        "SPARK_GRAFT_EXTRA_CONF", "spark.sql.codegen.cache.maxEntries=123"
+    )
     with pytest.warns(RuntimeWarning, match="codegen.cache.maxEntries"):
         get_spark("camden_spark_tests", cores=cores, shuffle_partitions=8)
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") != "123"

@@ -25,14 +25,12 @@ def main() -> None:
     names = sys.argv[2:] or bench.HEADLINE
     spark = get_spark("camden_spark_plans", cores=cores)
     lookup = {**RETIRED_ROWS_ONLY, **QUERIES}
-    overrides = {"near_dup_clusters": bench._near_dup_clusters_bench}
     outdir = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "plans", "r07")
     os.makedirs(outdir, exist_ok=True)
     for name in names:
-        fn = overrides.get(name, lookup[name])
         try:
-            df = fn(spark, sf_dir)
+            df = lookup[name](spark, sf_dir)
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 df.explain("formatted")

@@ -55,16 +55,14 @@ def main() -> None:
     spark.range(1000).selectExpr("sum(id)").collect()
 
     lookup = {**RETIRED_ROWS_ONLY, **QUERIES}
-    overrides = {"near_dup_clusters": bench._near_dup_clusters_bench}
     walls: dict[str, float] = {}
     best_rep: dict[str, int] = {}
     reps = max(1, int(os.environ.get("QP_REPS", "1")))
     for rep in range(reps):
         for name in names:
-            fn = overrides.get(name, lookup[name])
             spark.sparkContext.setJobDescription(f"qp:{name}:{rep}")
             t0 = time.time()
-            df = fn(spark, sf_dir)
+            df = lookup[name](spark, sf_dir)
             bench._force(df)
             w = time.time() - t0
             if w < walls.get(name, float("inf")):
