@@ -25,7 +25,26 @@ from camden_spark.sources.sinks import (
 from camden_spark.functions.text import lang_id_udf, token_count, with_text_stats
 
 
-def test_snapshot_store_roundtrip(spark, tmp_path):
+def _as_rename_protocol_snapshot(store, stage):
+    """Re-commit a stage snapshot the way the former rename protocol left
+    it: data and a manifest tagged ``commit_mode: rename`` in ``<stage>.tmp``,
+    then one directory rename onto the stage dir."""
+    stage_dir = store._stage_dir(stage)
+    tmp_dir = stage_dir + ".tmp"
+    os.rename(stage_dir, tmp_dir)
+    manifest_path = os.path.join(tmp_dir, "_MANIFEST.json")
+    with open(manifest_path) as f:
+        manifest = json.load(f)
+    manifest["commit_mode"] = "rename"
+    with open(manifest_path, "w") as f:
+        json.dump(manifest, f, indent=2)
+    os.rename(tmp_dir, stage_dir)
+
+
+@pytest.mark.parametrize("layout", ["rename", "manifest"])
+def test_snapshot_store_roundtrip(spark, tmp_path, layout):
+    """Resume works on snapshots committed manifest-last and on directories
+    left by the former rename protocol (same layout, extra manifest key)."""
     store = SnapshotStore(str(tmp_path), "cfg123")
     df = spark.range(100).withColumn("x", F.col("id") * 2)
     calls = []
@@ -36,6 +55,8 @@ def test_snapshot_store_roundtrip(spark, tmp_path):
 
     out1 = store.stage(spark, "s1", build, upstream=[], counters={"n": 100})
     assert out1.count() == 100 and calls == [1]
+    if layout == "rename":
+        _as_rename_protocol_snapshot(store, "s1")
     # resume: build NOT called again
     store2 = SnapshotStore(str(tmp_path), "cfg123")
     out2 = store2.stage(spark, "s1", build)
