@@ -59,7 +59,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation
 
 from camden_spark.config import DedupConfig
-from camden_spark.plans.caches import _persistent_rdd_ids, track_blocks_since
+from camden_spark.plans.caches import materialize_barrier
 from camden_spark.plans.metrics import observed
 
 #: seeds tried for injective 64-bit node ids before the url-string fallback
@@ -92,20 +92,13 @@ def connected_components(
     cfg = cfg or DedupConfig()
     spark = edges.sparkSession
 
-    # localCheckpoint-mode block bookkeeping (cache-hygiene, VERDICT r2 #7):
-    # ONE diff of the session's persistent-RDD map around the whole CC run
-    # registers every block it created for release_caches (once consumers
-    # are done with the returned frame).  Deliberately NOT per-iteration:
-    # bookkeeping must add zero work inside the hot loop (a per-truncate
-    # diff + eager frees measured ~1.5x on the full-pipeline wall), and the
-    # intermediates it would free early are small (url, label) tables.
-    before_cc = _persistent_rdd_ids(spark) if checkpoint_dir is None else set()
-
     def truncate(df: DataFrame, name: str) -> DataFrame:
         """Materialize + truncate lineage; the action also collects any
-        pending Observation riding ``df``."""
+        pending Observation riding ``df``.  Local-mode barriers join the
+        cache registry like any other (released once consumers are done
+        with the returned frame)."""
         if checkpoint_dir is None:
-            return df.localCheckpoint(eager=True)
+            return materialize_barrier(df)
         path = os.path.join(checkpoint_dir, name)
         df.write.mode("overwrite").parquet(path)
         return spark.read.parquet(path)
@@ -250,8 +243,6 @@ def connected_components(
         status["iterations"] = iterations
         status["checkpoint"] = "local" if checkpoint_dir is None else "reliable"
         status["node_id"] = node_id_mode
-    if checkpoint_dir is None:
-        track_blocks_since(spark, before_cc)
     # restore url-keyed, min-URL cluster semantics: ONE groupBy(component) →
     # min(url) after convergence replaces per-iteration string shuffles
     comp_urls = labels.join(nodes, "nid").select("url", "label")

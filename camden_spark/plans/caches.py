@@ -1,4 +1,5 @@
-"""Session-scoped registry of operator-cached DataFrames (VERDICT r2 item 7).
+"""Registry of operator-cached and lineage-truncated DataFrames (VERDICT r2
+item 7).
 
 Operators cache small intermediates (band-group sizes, candidate-pair sets,
 fingerprint frames) that are consumed lazily through the DataFrames they
@@ -6,34 +7,46 @@ return — so the operator itself can never safely ``unpersist()``.  Left
 alone, a long-lived session running many queries accumulates these cached
 relations in executor storage memory.
 
-Discipline: operators call :func:`track_cache` instead of ``df.cache()``;
-the *consumer* (bench loop, CLI after sinks are written, a test after its
+Discipline: operators call :func:`track_cache` instead of ``df.cache()`` and
+:func:`materialize_barrier` instead of ``df.localCheckpoint()``; the
+*consumer* (bench loop, CLI after sinks are written, a test after its
 assertions) calls :func:`release_caches` once results are materialized.
+Every entry is the frame itself, freed through that frame, and carries the
+pipeline run that registered it (:data:`OWNER`, ``None`` outside any run),
+so one run's ``PipelineResult.release()`` frees only its own frames.
+
 For plain tracked caches releasing early only costs recompute time, never
-correctness (Spark recomputes an unpersisted frame from lineage).  BARRIER-
-backed frames are different: :func:`materialize_barrier` truncates lineage
-(localCheckpoint), so a frame released through its callback CANNOT be
-recomputed — consuming it after :func:`release_caches` fails with
-checkpoint-block-not-found.  Materialize barrier-backed results (e.g.
+correctness (Spark recomputes an unpersisted frame from lineage).  Barrier
+frames are different: their lineage is truncated (localCheckpoint), so a
+released barrier CANNOT be recomputed — consuming it after release fails
+with checkpoint-block-not-found.  Materialize barrier-backed results (e.g.
 ``PipelineResult.pairs`` / ``clusters``) BEFORE releasing.
 """
 
 from __future__ import annotations
 
+import threading
+from contextvars import ContextVar
+
 from pyspark.sql import DataFrame
 
-#: cached frames awaiting release, in cache order (released LIFO)
-_TRACKED: list[DataFrame] = []
-#: deferred release callbacks (e.g. localCheckpoint block frees from
-#: operators/components.py — storage that DataFrame.unpersist cannot reach)
-_CALLBACKS: list = []
+#: the pipeline run registering frames in this context (None outside a run)
+OWNER: ContextVar[object | None] = ContextVar("cache_owner", default=None)
+#: (owner, frame, is_barrier) in registration order (released LIFO);
+#: branch threads register concurrently, hence the lock
+_ENTRIES: list[tuple[object | None, DataFrame, bool]] = []
+_LOCK = threading.Lock()
+
+
+def _register(df: DataFrame, is_barrier: bool) -> DataFrame:
+    with _LOCK:
+        _ENTRIES.append((OWNER.get(), df, is_barrier))
+    return df
 
 
 def track_cache(df: DataFrame) -> DataFrame:
     """``df.cache()`` + register the frame for a later bulk release."""
-    df = df.cache()
-    _TRACKED.append(df)
-    return df
+    return _register(df.cache(), False)
 
 
 def warm_cache(df: DataFrame) -> DataFrame:
@@ -63,19 +76,9 @@ def warm_cache(df: DataFrame) -> DataFrame:
     return df
 
 
-def _persistent_rdd_ids(spark) -> set:
-    """ids of every RDD currently holding storage blocks (JVM-side map)."""
-    jmap = spark.sparkContext._jsc.sc().getPersistentRDDs()
-    it = jmap.iterator()
-    out = set()
-    while it.hasNext():
-        out.add(it.next()._1())
-    return out
-
-
 def materialize_barrier(df: DataFrame) -> DataFrame:
     """Eagerly materialize a SMALL, expensive, multiply-consumed frame and
-    truncate its lineage; blocks are registered for release with the registry.
+    truncate its lineage; the checkpointed frame is registered for release.
 
     Why not ``cache()`` + ``count()``: observed on Spark 4.1.2, an
     InMemoryRelation whose child is an AQE plan embedding the candidate
@@ -96,68 +99,36 @@ def materialize_barrier(df: DataFrame) -> DataFrame:
     both available whenever a checkpoint dir is configured).  Use barriers
     only for frames orders of magnitude smaller than the corpus
     (candidate/verified pair sets).
+
+    The blocks belong to the checkpointed RDD under the returned frame's
+    ``LogicalRDD`` plan, which ``DataFrame.unpersist`` cannot reach;
+    :func:`release_caches` frees them through that RDD.
     """
-    spark = df.sparkSession
-    before = _persistent_rdd_ids(spark)
-    out = df.localCheckpoint(eager=True)
-    track_blocks_since(spark, before)
-    return out
+    return _register(df.localCheckpoint(eager=True), True)
 
 
-def track_blocks_since(spark, before: set) -> None:
-    """Register every RDD persisted since ``before`` (a
-    :func:`_persistent_rdd_ids` snapshot) with :func:`track_release`."""
-    jmap = spark.sparkContext._jsc.sc().getPersistentRDDs()
-    it = jmap.iterator()
-    created = []
-    while it.hasNext():
-        t = it.next()
-        if t._1() not in before:
-            created.append(t._2())
-    if created:
+def release_caches(blocking: bool = False, owner: object | None = None) -> int:
+    """Free the frames registered by ``owner`` (every frame when ``owner`` is
+    None), newest first; returns how many were released.
 
-        def _free(blocking: bool) -> None:
-            for rdd in created:
-                try:
-                    rdd.unpersist(blocking)
-                except Exception:
-                    pass
-
-        track_release(_free)
-
-
-def track_release(callback) -> None:
-    """Register ``callback(blocking: bool)`` to run at the next
-    :func:`release_caches` — for storage a plain ``unpersist`` can't free
-    (checkpointed RDD blocks).  Unlike cached frames, a frame whose blocks
-    are freed through a callback has TRUNCATED lineage and must not be
-    consumed again after release."""
-    _CALLBACKS.append(callback)
-
-
-def release_caches(blocking: bool = False) -> int:
-    """Unpersist every tracked frame (LIFO) + run deferred release
-    callbacks; returns how many frames/callbacks were released.
-
-    For plain tracked caches this is safe at any time — consumers that still
-    hold a released frame recompute it from lineage.  Checkpoint-backed
-    frames (released via :func:`track_release`) are gone for good, so call
-    this only once the run's results are materialized.  Frames whose session
-    has already stopped are skipped silently.
+    A cached frame is unpersisted; a barrier frees the blocks of its
+    checkpointed RDD.  For plain tracked caches this is safe at any time —
+    consumers that still hold a released frame recompute it from lineage.
+    Barrier frames are gone for good, so call this only once the run's
+    results are materialized.  Frames whose session has already stopped are
+    skipped silently.
     """
+    with _LOCK:
+        mine = [e for e in _ENTRIES if owner is None or e[0] is owner]
+        _ENTRIES[:] = [e for e in _ENTRIES if not (owner is None or e[0] is owner)]
     n = 0
-    while _TRACKED:
-        df = _TRACKED.pop()
+    for _, df, is_barrier in reversed(mine):
         try:
-            df.unpersist(blocking)
+            if is_barrier:
+                df._jdf.queryExecution().logical().rdd().unpersist(blocking)
+            else:
+                df.unpersist(blocking)
             n += 1
         except Exception:
             pass  # session stopped / frame invalid — nothing left to free
-    while _CALLBACKS:
-        cb = _CALLBACKS.pop()
-        try:
-            cb(blocking)
-            n += 1
-        except Exception:
-            pass
     return n

@@ -47,6 +47,7 @@ from camden_spark.operators.substr import (
 )
 from camden_spark.functions.shingles import nonempty_signatures, with_shingles
 from camden_spark.plans.caches import (
+    OWNER,
     materialize_barrier,
     release_caches,
     track_cache,
@@ -133,9 +134,12 @@ class PipelineResult:
     #: Observation-backed row counters (plans/metrics.py); populated after the
     #: clusters/pairs frames are materialized — read via counters.get()
     counters: "StageCounters | None" = None
+    #: the run that registered this result's cached and barrier frames
+    owner: object | None = None
 
     def release(self, blocking: bool = False) -> int:
-        """Unpersist every operator/pipeline cache registered during run().
+        """Free the cached and barrier frames registered by THIS run; frames
+        of other runs, and of code outside any run, stay.
 
         Call ONLY after materializing both ``clusters`` and ``pairs``:
         ``pairs`` (and the internal lsh_pairs set) are barrier-backed
@@ -143,8 +147,10 @@ class PipelineResult:
         their blocks are gone for good, so consuming them again fails with
         checkpoint-block-not-found rather than recomputing.  Plain tracked
         caches, by contrast, merely recompute.  Returns the number of
-        frames/callbacks released."""
-        return release_caches(blocking)
+        frames released (0 for a result that no run produced)."""
+        if self.owner is None:
+            return 0
+        return release_caches(blocking, self.owner)
 
 
 @dataclass
@@ -168,6 +174,17 @@ class DedupPipeline:
         )
 
     def run(self, pages: DataFrame) -> PipelineResult:
+        """Run the pipeline; every frame it caches or checkpoints is
+        registered under a fresh owner that ``PipelineResult.release()``
+        frees, so runs sharing a process release independently."""
+        owner = object()
+        token = OWNER.set(owner)
+        try:
+            return self._run(pages, owner)
+        finally:
+            OWNER.reset(token)
+
+    def _run(self, pages: DataFrame, owner: object) -> PipelineResult:
         cfg = self.cfg
         spark = pages.sparkSession
         store = self._store(pages)
@@ -336,11 +353,11 @@ class DedupPipeline:
         # suffix-array verify on the LSH future, through a zero-argument
         # callable, so a resumed substr snapshot never waits on (or reads)
         # the LSH pairs; LSH is submitted first and every branch has its own
-        # worker, so that wait cannot starve.  Concurrent materialize_barrier
-        # bookkeeping may cross-attribute created RDD ids between branches;
-        # harmless — release callbacks fire in bulk and unpersist is
-        # idempotent.
-        with ThreadPoolExecutor(max_workers=3) as pool:
+        # worker, so that wait cannot starve.  Pool threads do not inherit
+        # context variables: the initializer hands them this run's owner.
+        with ThreadPoolExecutor(
+            max_workers=3, initializer=OWNER.set, initargs=(owner,)
+        ) as pool:
             futs = {}
             if self.enable_lsh:
                 futs["lsh"] = pool.submit(branch, "lsh", build_lsh, ["signatures"])
@@ -391,8 +408,11 @@ class DedupPipeline:
         all_pairs = pair_frames[0]
         for pf in pair_frames[1:]:
             all_pairs = all_pairs.unionByName(pf)
+        # a pair found by several branches keeps the min label, i.e. the
+        # first in union order (exact < minhash_lsh < simhash < substr)
         all_pairs = counters.observe_rows(
-            all_pairs.dropDuplicates(["url_a", "url_b"]), "pairs_total"
+            all_pairs.groupBy("url_a", "url_b").agg(F.min("source").alias("source")),
+            "pairs_total",
         )
         # materialize the pairs and CC's edges (near pairs + bridges) ONCE:
         # CC consumes them through its truncations and callers force
@@ -437,5 +457,9 @@ class DedupPipeline:
             "clusters_total",
         )
         return PipelineResult(
-            clusters=clusters, pairs=all_pairs, metrics=metrics, counters=counters
+            clusters=clusters,
+            pairs=all_pairs,
+            metrics=metrics,
+            counters=counters,
+            owner=owner,
         )

@@ -18,7 +18,7 @@ from camden_spark.operators.substr import (
     verify_pairs_substr,
     with_fingerprints,
 )
-from camden_spark.plans.pipeline import DedupPipeline
+from camden_spark.plans.pipeline import DedupPipeline, PipelineResult
 from camden_spark.sources.pages import normalize_pages
 from camden_spark import oracle
 
@@ -651,6 +651,13 @@ def test_branch_failure_is_reported_without_hanging(
     assert f"{other}:" not in msg and "simhash:" not in msg
 
 
+def _outputs(res) -> tuple[list, list]:
+    """Sorted clusters and (url_a, url_b, source) pairs of a pipeline run."""
+    clusters = sorted(map(tuple, res.clusters.collect()))
+    pairs = sorted(map(tuple, res.pairs.select("url_a", "url_b", "source").collect()))
+    return clusters, pairs
+
+
 def test_plain_and_checkpointed_runs_agree(spark, pages_df, tmp_path):
     """A run without a checkpoint dir (barrier-backed branches) and one with
     it (snapshot-backed branches) give identical clusters and identical
@@ -658,12 +665,8 @@ def test_plain_and_checkpointed_runs_agree(spark, pages_df, tmp_path):
     outs = []
     for ckpt in (None, str(tmp_path)):
         res = DedupPipeline(cfg=CFG, checkpoint_dir=ckpt).run(pages_df)
-        clusters = sorted(map(tuple, res.clusters.collect()))
-        pairs = sorted(
-            map(tuple, res.pairs.select("url_a", "url_b", "source").collect())
-        )
+        outs.append(_outputs(res))
         res.release()
-        outs.append((clusters, pairs))
     (c_plain, p_plain), (c_ckpt, p_ckpt) = outs
     assert c_plain == c_ckpt
     assert p_plain == p_ckpt
@@ -755,3 +758,129 @@ def test_pipeline_reports_skew_metrics_of_every_candidate_join(spark, pages_df):
     assert sub["fingerprints_dropped"] > 0
     assert sub["rows_in_dropped_fingerprints"] >= 3 * sub["fingerprints_dropped"]
     res.release()
+
+
+def test_release_frees_only_its_own_run(spark, pages_df):
+    """Run A is forced, run B starts after it; A.release() frees A's frames
+    only, so B's barrier-backed pairs and clusters still read afterwards.  A
+    result that no run produced releases nothing."""
+    a = DedupPipeline(cfg=CFG).run(pages_df)
+    want = _outputs(a)
+    b = DedupPipeline(cfg=CFG).run(pages_df)
+    assert a.release(blocking=True) > 0
+    assert PipelineResult(clusters=b.clusters, pairs=b.pairs).release() == 0
+    assert _outputs(b) == want
+    assert b.release(blocking=True) > 0
+    assert b.release() == 0
+
+
+def test_two_pipelines_interleaved_on_threads(spark, pages_df):
+    """Two runs on two threads: both run() calls overlap, then each in turn
+    forces its outputs and releases while the other still holds its own.
+    Both equal a solo run."""
+    solo = DedupPipeline(cfg=CFG).run(pages_df)
+    want = _outputs(solo)
+    solo.release()
+    gate = threading.Barrier(2, timeout=300)
+    turns = [threading.Event(), threading.Event()]
+
+    def worker(i: int):
+        res = DedupPipeline(cfg=CFG).run(pages_df)
+        gate.wait()  # both runs registered their frames
+        if i == 1:
+            turns[0].wait(300)  # the other run has already released
+        try:
+            return _outputs(res), res.release(blocking=True)
+        finally:
+            turns[i].set()
+
+    outs = [None, None]
+
+    def start(i: int) -> threading.Thread:
+        def fn():
+            outs[i] = _run_bounded(lambda: worker(i))
+        t = threading.Thread(target=fn, daemon=True)
+        t.start()
+        return t
+
+    for t in [start(0), start(1)]:
+        t.join(330)
+    for out in outs:
+        assert out is not None and "error" not in out, out
+        got, released = out["result"]
+        assert got == want
+        assert released > 0
+
+
+def test_pair_found_by_two_branches_keeps_first_source(spark):
+    """A near pair that both MinHash-LSH and SimHash verify appears once in
+    the pair union, labelled minhash_lsh (the min label, first in union
+    order), and pairs_total counts it once."""
+    import datetime as _dt
+    import random
+
+    rng = random.Random(11)
+    words = [f"w{i}" for i in range(500)]
+    base = [rng.choice(words) for _ in range(300)]
+    ts = _dt.datetime(2025, 1, 1)
+    rows = [
+        ("u/a", ts, None, " ".join(base), "en"),
+        ("u/b", ts, None, " ".join(base[:-1] + ["edited"]), "en"),
+    ] + [
+        (f"u/s{k}", ts, None, " ".join(rng.choice(words) for _ in range(300)), "en")
+        for k in range(4)
+    ]
+    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
+    df = spark.createDataFrame(rows, schema)
+    res = DedupPipeline(cfg=CFG, enable_lsh=False, enable_substr=False).run(df)
+    _, only_simhash = _outputs(res)
+    res.release()
+    assert ("u/a", "u/b", "simhash") in only_simhash
+    res = DedupPipeline(cfg=CFG).run(df)
+    _, pairs = _outputs(res)
+    counters = res.counters.get()
+    res.release()
+    assert pairs == [("u/a", "u/b", "minhash_lsh")]
+    assert counters["pairs_total"] == 1
+
+
+def test_resume_after_failed_run(spark, pages_df, tmp_path, monkeypatch):
+    """A checkpointed run whose substring branch fails after the exact and
+    signatures snapshots commit; the rerun reads both snapshots (their
+    manifests are untouched) and its clusters equal an uncheckpointed run."""
+    import json
+    import os
+
+    import camden_spark.plans.pipeline as pipeline_mod
+
+    def boom(*_args, **_kwargs):
+        raise ValueError("injected substr failure")
+
+    monkeypatch.setattr(pipeline_mod, "candidate_pairs_substr", boom)
+    ckpt = str(tmp_path)
+    out = _run_bounded(
+        lambda: DedupPipeline(cfg=CFG, checkpoint_dir=ckpt).run(pages_df)
+    )
+    from camden_spark.plans.caches import release_caches
+
+    release_caches()
+    assert isinstance(out.get("error"), RuntimeError), out
+    monkeypatch.undo()
+
+    def written_at() -> dict:
+        got = {}
+        for stage in ("exact", "signatures"):
+            path = os.path.join(ckpt, CFG.config_hash(), stage, "_MANIFEST.json")
+            with open(path) as fh:
+                got[stage] = json.load(fh)["written_at"]
+        return got
+
+    before = written_at()
+    res = DedupPipeline(cfg=CFG, checkpoint_dir=ckpt).run(pages_df)
+    resumed = sorted(map(tuple, res.clusters.collect()))
+    res.release()
+    assert written_at() == before
+    clean = DedupPipeline(cfg=CFG).run(pages_df)
+    want = sorted(map(tuple, clean.clusters.collect()))
+    clean.release()
+    assert resumed == want

@@ -544,6 +544,50 @@ def test_cache_hygiene_release(spark, pages_df):
     assert _storage_rdd_count(spark) == baseline
 
 
+def test_cache_registry_owners_under_thread_contention():
+    """More threads than cores register and release under their own owners
+    at once, with a shortened switch interval: each release returns exactly
+    the entries its owner registered, so no registration is lost to a
+    concurrent release."""
+    import sys
+    import threading
+
+    from camden_spark.plans import caches
+
+    class Frame:
+        def cache(self):
+            return self
+
+        def unpersist(self, blocking=False):
+            pass
+
+    n_threads, per_thread = 16, 200
+    gate = threading.Barrier(n_threads, timeout=60)
+    released: list = [None] * n_threads
+
+    def worker(i: int) -> None:
+        owner = object()
+        caches.OWNER.set(owner)
+        gate.wait()
+        for _ in range(per_thread):
+            caches.track_cache(Frame())
+        released[i] = caches.release_caches(owner=owner)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    assert released == [per_thread] * n_threads
+    assert not any(isinstance(df, Frame) for _, df, _ in caches._ENTRIES)
+
+
 def _final_plan_str(df) -> str:
     """Executed (post-AQE) physical plan — collect first so AQE finalizes."""
     df.collect()
