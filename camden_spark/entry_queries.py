@@ -2522,6 +2522,45 @@ FROM m
 """
 
 
+def _run_available_now(
+    spark: SparkSession, path: str, schema, build, name: str
+) -> DataFrame:
+    """Stream the parquet table at ``path`` through ``build`` (a stream →
+    frame function) with the availableNow trigger (process the table, then
+    stop) into a uniquely named memory sink, and return the sink's table.
+
+    The file-stream source requires a DIRECTORY, so the table file is
+    staged into a temp dir (symlink, no copy); it and the checkpoint dir
+    are removed once the stream ends."""
+    import shutil
+    import tempfile
+    import uuid
+
+    stream_dir = tempfile.mkdtemp(prefix=f"{name}_src_")
+    ckpt_dir = tempfile.mkdtemp(prefix=f"{name}_ckpt_")
+    table = f"{name}_{uuid.uuid4().hex[:8]}"
+    try:
+        os.symlink(os.path.abspath(path), os.path.join(stream_dir, "part-0.parquet"))
+        q = (
+            build(spark.readStream.schema(schema).parquet(stream_dir))
+            .writeStream.format("memory")
+            .queryName(table)
+            .outputMode("append")
+            .option("checkpointLocation", ckpt_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        # awaitTermination returns False on timeout WITHOUT raising — a
+        # partial memory sink would silently fail the oracle downstream
+        if not q.awaitTermination(300):
+            q.stop()
+            raise RuntimeError(f"{name} did not finish within 300s")
+    finally:
+        shutil.rmtree(stream_dir, ignore_errors=True)
+        shutil.rmtree(ckpt_dir, ignore_errors=True)
+    return spark.table(table)
+
+
 def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured-Streaming exact dedup, driver-verified: run the stream
     (availableNow trigger → processes the table then stops) through
@@ -2529,50 +2568,27 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     CHECKSUM SET.  Which url survives per checksum is arrival-order-dependent
     (streaming first-wins), but the surviving key set is exactly DISTINCT
     sha256(text) under any order — that is what the oracle states."""
-    import tempfile
-    import uuid
-
     from camden_spark.sources.pages import _BASE_EPOCH
     from camden_spark.streaming.dedup_stream import streaming_exact_dedup
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    static = spark.read.parquet(path)
-    # the file-stream source requires a DIRECTORY; stage the table file into
-    # a temp dir (symlink — no copy) as the stream's input
-    stream_dir = tempfile.mkdtemp(prefix="stream_src_")
-    os.symlink(os.path.abspath(path), os.path.join(stream_dir, "part-0.parquet"))
-    stream = spark.readStream.schema(static.schema).parquet(stream_dir)
-    pages = stream.select(
-        F.concat(
-            F.lit("https://"), F.col("source"), F.lit(".example/"),
-            F.col("lang"), F.lit("/doc"), F.col("doc_id").cast("string"),
-        ).alias("url"),
-        F.timestamp_seconds(F.lit(_BASE_EPOCH) + F.col("doc_id")).alias("warc_ts"),
-        F.col("text"),
-    )
-    out = streaming_exact_dedup(pages)
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    ckpt_dir = tempfile.mkdtemp(prefix="stream_ckpt_")
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        # awaitTermination returns False on timeout WITHOUT raising — a
-        # partial memory sink would silently fail the oracle downstream
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("streaming_dedup did not finish within 300s")
-    finally:
-        import shutil
+    def build(stream: DataFrame) -> DataFrame:
+        return streaming_exact_dedup(
+            stream.select(
+                F.concat(
+                    F.lit("https://"), F.col("source"), F.lit(".example/"),
+                    F.col("lang"), F.lit("/doc"), F.col("doc_id").cast("string"),
+                ).alias("url"),
+                F.timestamp_seconds(F.lit(_BASE_EPOCH) + F.col("doc_id")).alias(
+                    "warc_ts"
+                ),
+                F.col("text"),
+            )
+        )
 
-        shutil.rmtree(stream_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
-    return spark.table(name).select("checksum").distinct()
+    path = os.path.join(sf_dir, "documents.parquet")
+    schema = spark.read.parquet(path).schema
+    out = _run_available_now(spark, path, schema, build, "streaming_dedup")
+    return out.select("checksum").distinct()
 
 
 SQL_STREAMING_DEDUP = """
@@ -2594,46 +2610,23 @@ def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions EXCEPT each user's last one when end_ms + gap_ms >= max_ms —
     i.e. the session the watermark cannot yet prove closed stays in state,
     exactly the append-mode contract."""
-    import shutil
-    import tempfile
-    import uuid
-
     from camden_spark.streaming.session_stream import streaming_sessionize
 
+    def build(stream: DataFrame) -> DataFrame:
+        return streaming_sessionize(
+            # watermarks require TIMESTAMP; under UTC the NTZ cast
+            # reinterprets the same wall-clock instant (no shift)
+            stream.select(
+                "user_id", F.col("ts").cast("timestamp").alias("ts"), "value"
+            ),
+            gap_seconds=21600,
+            watermark="0 seconds",
+        )
+
     path = os.path.join(sf_dir, "events.parquet")
-    static = _events(spark, sf_dir)  # also pins session tz = UTC
-    stream_dir = tempfile.mkdtemp(prefix="sess_src_")
-    os.symlink(os.path.abspath(path), os.path.join(stream_dir, "part-0.parquet"))
-    stream = spark.readStream.schema(static.schema).parquet(stream_dir)
-    out = streaming_sessionize(
-        # watermarks require TIMESTAMP; under UTC the NTZ cast reinterprets
-        # the same wall-clock instant (no shift)
-        stream.select(
-            "user_id", F.col("ts").cast("timestamp").alias("ts"), "value"
-        ),
-        gap_seconds=21600,
-        watermark="0 seconds",
-    )
-    name = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    ckpt_dir = tempfile.mkdtemp(prefix="sess_ckpt_")
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("streaming_sessions did not finish within 300s")
-    finally:
-        shutil.rmtree(stream_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
-    return spark.table(name).select(
-        "user_id", "start_us", "end_us", "n_events", "total_value"
-    )
+    schema = _events(spark, sf_dir).schema  # also pins session tz = UTC
+    out = _run_available_now(spark, path, schema, build, "streaming_sessions")
+    return out.select("user_id", "start_us", "end_us", "n_events", "total_value")
 
 
 SQL_STREAMING_SESSIONS = """

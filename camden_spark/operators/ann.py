@@ -29,6 +29,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql.types import LongType
 
+from camden_spark.operators.lsh import capped_key_join
+from camden_spark.plans.caches import track_cache
+
 #: Quantizer training-sample bound, and so the most cells k-means can emit:
 #: the default of both ``train_ivf_centroids(sample_rows)`` and
 #: ``auto_ivf_params(max_cells)``.
@@ -143,7 +146,10 @@ def hyperplane_buckets(
     """Add (table, bucket) rows via signed random projections.
 
     One vectorized pandas UDF computes all tables' buckets per batch with a
-    single numpy matmul; output is exploded to (row, table, bucket).
+    single numpy matmul.  Its output is cached with one row per vector (the
+    bucket array next to ``vectors``' columns) and exploded to (row, table,
+    bucket) after the cache: the UDF runs once per vector, whatever reads
+    the rows, and the payload is cached once, not once per table.
     """
     rng = np.random.RandomState(seed)
     planes = rng.standard_normal((n_tables, n_planes, dim)).astype(np.float64)
@@ -163,7 +169,16 @@ def hyperplane_buckets(
                 ).view(np.int64)
             yield pd.Series(list(out))
 
-    return vectors.withColumn("_buckets", bucket_udf(F.col(vec_col))).select(
+    # nondeterministic to the optimizer only (the kernel is pure): Spark then
+    # keeps this one projection above a unioned input instead of copying it
+    # into each branch, where the copies share one result id and read as a
+    # repeated evaluation to tools/plan_audit.py
+    per_vector = track_cache(
+        vectors.withColumn(
+            "_buckets", bucket_udf.asNondeterministic()(F.col(vec_col))
+        )
+    )
+    return per_vector.select(
         "*", F.posexplode("_buckets").alias("table", "bucket")
     ).drop("_buckets")
 
@@ -410,16 +425,12 @@ def ivf_near_dup_pairs(
 
     Each vector is multi-assigned to its ``n_probe`` nearest cells; candidate
     pairs share a cell, get deduped, then exact-cosine verified.  Oversize
-    cells are dropped to cap skew; pass ``status`` (a dict) to receive
-    ``{"cells_total", "cells_dropped", "rows_in_dropped_cells"}`` (one tiny
-    extra job).  Cell sizing is one map-side-combined aggregation over the
-    (id, cell) assignment rows; the payload never rides the candidate
-    machinery (see the inline §8-playbook note), and nothing is cached
-    corpus-wide.  The cell join keeps its own copy of the skew policy in
-    ``operators/lsh.capped_key_join`` because that helper caches its size
-    table: under AQE the cached table's scan sits below each join side's
-    key exchange, the two sides stop sharing one exchange, and the cell UDF
-    runs over the corpus three times instead of twice (measured at sf0.1).
+    cells are dropped to cap skew (``operators/lsh.capped_key_join``); pass
+    ``status`` (a dict) to receive ``{"cells_total", "cells_dropped",
+    "rows_in_dropped_cells"}`` (one tiny extra job).  The (id, cell)
+    assignment rows are cached, so the cell UDF runs once per vector; the
+    payload never rides the candidate machinery (see the inline
+    §8-playbook note).
     Tuning:
     n_cells ≈ √corpus_size keeps cells bounded; on clustered real-world
     embeddings probed cells concentrate so the candidate mass stays far
@@ -434,44 +445,25 @@ def ivf_near_dup_pairs(
     # UDF, so the cell-keyed self-join and the pair dedupe shuffle 16-byte id
     # rows instead of dim-wide float arrays (§8 of the optimization playbook:
     # decide on lightweight proxies, re-attach the payload once at the end).
-    assign = vectors.select(
-        F.col(id_col),
-        F.explode(_cell_udf(centroids, n_probe)(F.col(vec_col))).alias("cell"),
+    # Cached: the size table and both join sides read these rows.
+    assign = track_cache(
+        vectors.select(
+            F.col(id_col).alias("url"),
+            F.explode(_cell_udf(centroids, n_probe)(F.col(vec_col))).alias(
+                "cell"
+            ),
+        )
     )
-    # cell sizing via one map-side-combined aggregation (the previous window
-    # count rode a full-payload sort per side); membership in keep-cells is
-    # a tiny broadcastable join
-    sizes = assign.groupBy("cell").agg(F.count("*").alias("n"))
+    joined, metrics = capped_key_join(assign, ["cell"], max_cell, "cells")
     if status is not None:
-        drops = sizes.agg(
-            F.count("*").cast("long").alias("cells_total"),
-            F.sum((F.col("n") > max_cell).cast("long")).alias("cells_dropped"),
-            F.sum(
-                F.when(F.col("n") > max_cell, F.col("n")).otherwise(0)
-            ).cast("long").alias("rows_in_dropped_cells"),
-        ).first()
-        status.update(drops.asDict())
-    keep = sizes.filter((F.col("n") > 1) & (F.col("n") <= max_cell)).select(
-        "cell"
-    )
-    # explicit cell-keyed repartition before the self-join (the lsh.py band
-    # pattern): the (id, cell) rows are tiny in BYTES but the join emits
-    # O(cell²) candidate rows, so AQE's byte-based coalescing would run it
-    # on 1-2 tasks (measured: a 2-task 4.7 s stage at sf0.1); both sides
-    # share the exchange via ReusedExchange
+        status.update(metrics.first().asDict())
     n_parts = vectors.sparkSession.sparkContext.defaultParallelism * 2
-    joinable = assign.join(keep, "cell", "left_semi").repartition(
-        n_parts, "cell"
-    )
-    a = joinable.select(F.col(id_col).alias("id_a"), "cell")
-    b = joinable.select(F.col(id_col).alias("id_b"), "cell")
     cand = (
-        a.join(b, "cell")
-        .filter(F.col("id_a") < F.col("id_b"))
-        # pair-keyed repartition for the same reason: the dedup aggregation
-        # and the downstream O(dim)-per-pair verify are CPU-bound on rows
-        # whose shuffle bytes (16 B/pair) read as "1 partition" to AQE;
-        # the dedup agg reuses this exchange (no extra shuffle)
+        joined.select(F.col("l.url").alias("id_a"), F.col("r.url").alias("id_b"))
+        # pair-keyed repartition: the dedup aggregation and the downstream
+        # O(dim)-per-pair verify are CPU-bound on rows whose shuffle bytes
+        # (16 B/pair) read as "1 partition" to AQE; the dedup agg reuses
+        # this exchange (no extra shuffle)
         .repartition(n_parts, "id_a", "id_b")
         # dedupe BEFORE the exact verify: multi-probe assigns a pair to up
         # to n_probe shared cells — on id pairs only, never payloads
@@ -511,13 +503,10 @@ def ann_near_dup_pairs(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs (id_a < id_b, cosine_sim ≥ threshold)
-    via SRP-LSH buckets + exact verify.  Same skew discipline as text LSH
-    (``operators/lsh.capped_key_join`` has the skew story): oversize buckets
-    dropped.  The join stays inline, without that helper's key repartition:
-    the bucket rows carry the embedding payload, and AQE broadcasts both
-    joins here, where a forced repartition shuffles the payload once per
-    side (measured ~0.5 s slower on ``embedding_near_dup_lsh`` at sf0.1).
-    The per-vector norm is precomputed once and rides the bucket rows, so
+    via SRP-LSH buckets + exact verify.  The bucket join is text LSH's
+    ``operators/lsh.capped_key_join`` (it has the skew story): oversize
+    buckets dropped.  The per-vector norm is precomputed once and rides the
+    bucket rows (cached once per vector by ``hyperplane_buckets``), so
     the verify pays ONE dot per deduped pair
     (bit-identical cosine, see :func:`_with_norm`).
 
@@ -529,28 +518,15 @@ def ann_near_dup_pairs(
     overhead per run for no byte savings that matter.  For moderate
     thresholds / large candidate volumes use ivf_near_dup_pairs, whose
     payload-free candidate machinery IS the measured win."""
-    bn = _with_norm(vectors, id_col, vec_col)
+    bn = _with_norm(vectors, id_col, vec_col).withColumnRenamed(id_col, "url")
     b = hyperplane_buckets(bn, dim, n_planes, n_tables, seed, vec_col)
-    sized = b.groupBy("table", "bucket").agg(F.count("*").alias("n"))
-    keep = sized.filter((F.col("n") > 1) & (F.col("n") <= max_bucket)).select(
-        "table", "bucket"
+    joined, _metrics = capped_key_join(
+        b, ["table", "bucket"], max_bucket, "buckets"
     )
-    joinable = b.join(keep, ["table", "bucket"], "left_semi").select(
-        id_col, vec_col, "_nrm", "table", "bucket"
-    )
-    l, r = joinable.alias("l"), joinable.alias("r")
     pairs = (
-        l.join(
-            r,
-            on=[
-                F.col("l.table") == F.col("r.table"),
-                F.col("l.bucket") == F.col("r.bucket"),
-                F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
+        joined.select(
+            F.col("l.url").alias("id_a"),
+            F.col("r.url").alias("id_b"),
             F.col(f"l.{vec_col}").alias("_va"),
             F.col(f"r.{vec_col}").alias("_vb"),
             F.col("l._nrm").alias("_nrm_a"),

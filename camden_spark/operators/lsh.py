@@ -7,9 +7,8 @@ to ``(url, band, band_hash)`` rows, and candidates come from a self-equi-join
 on ``(band, band_hash)``.
 
 The skew-capped self-join itself is :func:`capped_key_join`, shared by the
-text candidate operators (LSH bands, SimHash blocks, substring fingerprints).
-The embedding joins in ``operators/ann.py`` (IVF cells, SRP buckets) keep
-their own copies of the policy; their docstrings say why.
+text candidate operators (LSH bands, SimHash blocks, substring fingerprints)
+and the embedding joins in ``operators/ann.py`` (IVF cells, SRP buckets).
 """
 
 from __future__ import annotations
@@ -66,12 +65,13 @@ def capped_key_join(
     session's parallelism — the rows are tiny in BYTES but the join emits
     O(group²) rows, so AQE's byte-based coalescing alone would run it on
     1-2 tasks (measured: a 2-task 4.7 s IVF stage at sf0.1) — and (4) leave
-    AQE skew-join splitting on as the second line of defense.  Cost of the
-    cache: under AQE its scan sits below each side's key exchange, so the
-    two sides do not share one exchange and ``rows`` is computed once per
-    side.  That is a codegen'd explode when ``rows`` derives from a cached
-    frame (the pipeline warm-caches signatures and fingerprints), but a
-    whole UDF pass when it does not (see ``operators/ann.ivf_near_dup_pairs``).
+    AQE skew-join splitting on as the second line of defense.
+
+    Caller contract: the size table and both join sides each read ``rows``
+    (under AQE the cached size table's scan sits below each side's key
+    exchange, so the sides share no exchange).  When ``rows`` come from a
+    Python UDF, hand in a frame derived from a cached one, so the UDF runs
+    once per row and each read is a codegen'd scan or explode.
     """
     sized = rows.groupBy(*keys).agg(F.count("*").alias("_n"))
     over = F.col("_n") > cap

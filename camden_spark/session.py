@@ -112,13 +112,16 @@ def get_spark(
     for var, val in blas_env.items():
         builder = builder.config(f"spark.executorEnv.{var}", val)
     # profiling hook: SPARK_GRAFT_EVENTLOG_DIR=<dir> writes Spark event logs
-    # there (stage/task timelines) — used by tools/stage_profile.py to find
-    # under-parallelized stages; zero overhead when unset
+    # there (stage/task timelines) — read by perfbench/ledger.read_event_log
+    # (tools/stage_profile.py, scaling_decompose.py, query_profile.py) as
+    # plain JSON lines, hence uncompressed; zero overhead when unset
     ev_dir = os.environ.get("SPARK_GRAFT_EVENTLOG_DIR")
     if ev_dir:
         os.makedirs(ev_dir, exist_ok=True)
-        builder = builder.config("spark.eventLog.enabled", "true").config(
-            "spark.eventLog.dir", ev_dir
+        builder = (
+            builder.config("spark.eventLog.enabled", "true")
+            .config("spark.eventLog.dir", ev_dir)
+            .config("spark.eventLog.compress", "false")
         )
     if master.startswith("local-cluster"):
         # executor JVMs run python UDF workers from a spark-work temp dir,

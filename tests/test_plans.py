@@ -405,6 +405,50 @@ def test_ann_near_dup_finds_planted(spark):
     assert all(r["cosine_sim"] >= 0.99 for r in pairs.collect())
 
 
+@pytest.mark.parametrize("operator", ["ivf", "srp", "media"])
+def test_operator_evaluates_udf_once(spark, operator):
+    """Each near-dup operator's Python UDF has one evaluation node in the
+    final plan: its output is cached before the size table and both join
+    sides read it.  The embedding inputs are unioned with planted twins,
+    the shape of ``embedding_near_dup_lsh``, because a union copies
+    projections into its branches."""
+    import pandas as pd
+
+    from camden_spark.datagen import generate_media
+    from camden_spark.multimodal import MEDIA_SCHEMA, media_near_dup_pairs
+    from camden_spark.operators.ann import ivf_near_dup_pairs
+    from tools.plan_audit import audit, plan_text
+
+    if operator == "media":
+        media, _ = generate_media(60, seed=7)
+        df = media_near_dup_pairs(spark.createDataFrame(media, schema=MEDIA_SCHEMA))
+    else:
+        rng = np.random.RandomState(4)
+        vecs = spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "vec_id": range(40),
+                    "embedding": [list(v) for v in rng.standard_normal((40, 16))],
+                }
+            )
+        )
+        twins = vecs.filter(F.col("vec_id") < 5).select(
+            (F.col("vec_id") + 1000).alias("vec_id"),
+            F.transform("embedding", lambda x: x * 2.0).alias("embedding"),
+        )
+        both = vecs.unionByName(twins)
+        df = (
+            ivf_near_dup_pairs(both, threshold=0.9, n_cells=4, n_probe=2)
+            if operator == "ivf"
+            else ann_near_dup_pairs(both, dim=16, threshold=0.99)
+        )
+    text = plan_text(df)
+    assert audit(operator, text) == [], text
+    if operator != "media":  # the twins still pair through the union
+        found = {(r["id_a"], r["id_b"]) for r in df.collect()}
+        assert {(i, i + 1000) for i in range(5)} <= found
+
+
 def test_text_stats_and_lang_id(spark):
     df = spark.createDataFrame(
         [

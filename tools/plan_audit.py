@@ -38,17 +38,6 @@ ALLOW_NESTED_LOOP = {
     "ann_topk",             # 5 query vectors broadcast against the corpus
 }
 
-#: queries whose operators still evaluate one Python UDF per consumer (an
-#: uncached UDF frame read by several join sides or branches); they were
-#: found when the repeated-UDF check was added and stay flagged in the
-#: report's note until ROADMAP's item caches them
-ALLOW_REPEATED_UDF = {
-    "media_phash_pairs",               # synth + decode per hash-join side
-    "embedding_near_dup_ivf",          # cell UDF per cell-join side
-    "embedding_near_dup_ivf_planted",  # cell UDF per cell-join side
-    "embedding_near_dup_lsh",          # bucket UDF per table and join side
-}
-
 #: queries whose fn() EXECUTES side-effectful work and whose returned frame's
 #: plan is not the interesting one: streaming_dedup runs the whole stream and
 #: returns a memory-table scan — auditing that plan is meaningless and costs
@@ -141,8 +130,7 @@ def repeated_udf(text: str) -> str | None:
 
 def audit(name: str, text: str) -> list[str]:
     flags: list[str] = []
-    udf = repeated_udf(text)
-    if udf and name not in ALLOW_REPEATED_UDF:
+    if udf := repeated_udf(text):
         flags.append(f"Python UDF evaluated in two plan nodes: {udf}")
     if re.search(r"CartesianProduct|BroadcastNestedLoopJoin", text):
         if name not in ALLOW_NESTED_LOOP:
@@ -188,8 +176,6 @@ def main() -> int:
         note = "; ".join(flags) if flags else (
             "bounded brute force (oracle query)" if name in ALLOW_NESTED_LOOP
             and re.search(r"CartesianProduct|BroadcastNestedLoopJoin", text)
-            else "known: Python UDF evaluated per consumer (ROADMAP)"
-            if name in ALLOW_REPEATED_UDF and repeated_udf(text)
             else "ok"
         )
         rows.append(

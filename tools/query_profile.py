@@ -1,19 +1,19 @@
 """Per-query job/driver-gap decomposition for the bench headline queries.
 
 Runs each headline query exactly like bench.py (_force full-row checksum),
-labels every query's jobs via setJobDescription, writes a Spark event log,
-then attributes per query:
+runs every query's jobs under job group qp:<name>:<rep>, writes a Spark
+event log, then attributes per query (``perfbench/ledger.py`` reads the log):
 
-* wall      — driver-side wall clock around the forced action(s)
-* n_jobs    — Spark jobs the query submitted
-* task_s    — summed executor task time (all jobs, all stages)
-* stage_s   — summed stage wall (submission→completion, overlaps not merged)
-* gap_s     — wall - union-of-job-intervals: driver/AQE planning time where
-              NO job of this query was running (the §1/§7.3 "nothing is
-              happening" term)
+* wall        — driver-side wall clock around the forced action(s)
+* n_jobs      — Spark jobs the query submitted
+* task_s      — summed executor task run time (all jobs, all stages)
+* job_cover_s — union of the query's job intervals
+* gap_s       — wall - job_cover_s: driver/AQE planning time where NO job
+                of this query was running (the §1/§7.3 "nothing is
+                happening" term)
 
-With QP_REPS=N each query runs N times; jobs are tagged qp:<name>:<rep> and
-every column describes the rep with the minimum wall.
+With QP_REPS=N each query runs N times; every column describes the rep
+with the minimum wall.
 
 Usage: python tools/query_profile.py [query ...]   (default: all headline)
 Output: one JSON line per query + a TOTAL line (to stdout).
@@ -48,7 +48,7 @@ def main() -> None:
     import bench
     from camden_spark.entry_queries import QUERIES, RETIRED_ROWS_ONLY
     from camden_spark.plans.caches import release_caches
-    from tools.scaling_decompose import load_events
+    from perfbench.ledger import busy_s, per_group, read_event_log
 
     names = sys.argv[1:] or bench.HEADLINE
     spark = get_spark("camden_spark_qprofile", cores=cores)
@@ -56,85 +56,40 @@ def main() -> None:
 
     lookup = {**RETIRED_ROWS_ONLY, **QUERIES}
     walls: dict[str, float] = {}
-    best_rep: dict[str, int] = {}
+    best: dict[str, tuple[str, float]] = {}  # min-wall rep: group, start
     reps = max(1, int(os.environ.get("QP_REPS", "1")))
     for rep in range(reps):
         for name in names:
-            spark.sparkContext.setJobDescription(f"qp:{name}:{rep}")
+            group = f"qp:{name}:{rep}"
+            spark.sparkContext.setJobGroup(group, group)
             t0 = time.time()
             df = lookup[name](spark, sf_dir)
             bench._force(df)
             w = time.time() - t0
             if w < walls.get(name, float("inf")):
-                walls[name], best_rep[name] = w, rep
-            spark.sparkContext.setJobDescription(None)
+                walls[name], best[name] = w, (group, t0)
             release_caches()
     spark.stop()
 
-    # ---- parse the event log --------------------------------------------
-    # every column below comes from the min-wall rep's jobs only (its
-    # qp:<name>:<rep> tag), so gap_s = wall - that rep's job cover >= 0
-    jobs: dict[int, dict] = {}  # job id -> {tag, start, end}
-    stage_job: dict[int, int] = {}
-    stage_info: dict[int, dict] = {}
-    task_time: dict[int, float] = {}
-    for ev in load_events(EVDIR):
-        e = ev.get("Event")
-        if e == "SparkListenerJobStart":
-            jid = ev["Job ID"]
-            jobs[jid] = {
-                "tag": (ev.get("Properties") or {}).get("spark.job.description"),
-                "start": ev["Submission Time"],
-                "end": None,
-            }
-            for sid in ev.get("Stage IDs", []):
-                stage_job[sid] = jid
-        elif e == "SparkListenerJobEnd":
-            if ev["Job ID"] in jobs:
-                jobs[ev["Job ID"]]["end"] = ev["Completion Time"]
-        elif e == "SparkListenerStageCompleted":
-            si = ev["Stage Info"]
-            sub, comp = si.get("Submission Time"), si.get("Completion Time")
-            if sub and comp:
-                stage_info[si["Stage ID"]] = {"wall": (comp - sub) / 1e3}
-        elif e == "SparkListenerTaskEnd":
-            sid = ev["Stage ID"]
-            tm = ev.get("Task Metrics") or {}
-            task_time[sid] = task_time.get(sid, 0.0) + (
-                tm.get("Executor Run Time", 0) / 1e3
-            )
-
+    # every column comes from the min-wall rep's job group only, so
+    # gap_s = wall - that rep's job cover >= 0
+    groups = per_group(read_event_log(EVDIR))
     out: dict[str, dict] = {}
     for name in names:
-        tag = f"qp:{name}:{best_rep[name]}"
-        qjobs = [j for j in jobs.values() if j["tag"] == tag and j["end"]]
-        sids = [s for s, jid in stage_job.items() if jobs[jid]["tag"] == tag]
-        ivals = sorted((j["start"], j["end"]) for j in qjobs)
-        covered = 0.0
-        cur_s = cur_e = None
-        for s, e in ivals:
-            if cur_e is None or s > cur_e:
-                if cur_e is not None:
-                    covered += cur_e - cur_s
-                cur_s, cur_e = s, e
-            else:
-                cur_e = max(cur_e, e)
-        if cur_e is not None:
-            covered += cur_e - cur_s
+        group, t0 = best[name]
+        g = groups.get(group, {"jobs": 0, "intervals": [], "task_s": 0.0})
+        covered = busy_s(g["intervals"], t0, t0 + walls[name])
         out[name] = {
             "wall": round(walls[name], 3),
-            "n_jobs": len(qjobs),
-            "task_s": round(sum(task_time.get(s, 0.0) for s in sids), 2),
-            "stage_s": round(
-                sum(stage_info.get(s, {}).get("wall", 0.0) for s in sids), 2
-            ),
-            "job_cover_s": round(covered / 1e3, 2),
-            "gap_s": round(walls[name] - covered / 1e3, 2),
+            "n_jobs": g["jobs"],
+            "task_s": round(g["task_s"], 2),
+            "job_cover_s": round(covered, 2),
+            "gap_s": round(walls[name] - covered, 2),
         }
         print(json.dumps({"query": name, **out[name]}))
     tot = {
         k: round(sum(v[k] for v in out.values()), 2)
-        for k in ("wall", "n_jobs", "task_s", "stage_s", "gap_s")
+        for k in ("wall", "n_jobs", "task_s", "gap_s")
     }
     print(json.dumps({"query": "TOTAL", **tot}))
 

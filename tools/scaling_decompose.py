@@ -16,7 +16,7 @@ counts or skew leave cores empty at stage ends.  Comparing the same
 decomposition across the N and 4N legs names the non-scaling term instead of
 guessing (VERDICT r5 ask #1).
 
-Usage::
+Usage (``SPARK_GRAFT_EVENTLOG_DIR`` directories; the newest app in each)::
 
     python tools/scaling_decompose.py /path/to/eventlog_dir --cores 8
     # or several: one JSON line each
@@ -28,56 +28,24 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import sys
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from perfbench.ledger import read_event_log
 
 
-def _event_files(path: str) -> list[str]:
-    """Resolve a dir (possibly a rolled ``eventlog_v2_<app>/`` layout with
-    ``events_1_...zstd, events_2_...`` parts) to an ordered list of event
-    files; a plain file is returned as-is."""
-    if not os.path.isdir(path):
-        return [path]
-    # a reused eventlog dir accumulates one eventlog_v2_<appid>/ per run —
-    # decompose the NEWEST app only, not a concatenation of every run
+def newest_app_events(path: str) -> list[dict]:
+    """Events of the newest rolled ``eventlog_v2_<app>/`` app in an
+    uncompressed event-log directory (of every log file in it when it holds
+    none): a reused directory accumulates one app per run, and a
+    decomposition describes ONE run, not a concatenation of every run."""
     apps = [
         os.path.join(path, d)
         for d in os.listdir(path)
         if d.startswith("eventlog_v2_")
     ]
-    if apps:
-        path = max(apps, key=os.path.getmtime)
-    parts = []
-    for root, _dirs, names in os.walk(path):
-        for f in names:
-            if f.startswith("events_"):
-                # rolled layout: events_<idx>_<appid>[.zstd] — order by idx
-                try:
-                    idx = int(f.split("_")[1])
-                except (IndexError, ValueError):
-                    idx = 0
-                parts.append((idx, os.path.join(root, f)))
-            elif not f.startswith(".") and not f.startswith("appstatus"):
-                parts.append((0, os.path.join(root, f)))
-    parts.sort()
-    return [p for _i, p in parts]
-
-
-def load_events(path: str):
-    for part in _event_files(path):
-        if part.endswith(".zstd"):
-            import subprocess
-            import tempfile
-
-            tmp = tempfile.NamedTemporaryFile(suffix=".json", delete=False)
-            subprocess.run(["unzstd", "-qf", part, "-o", tmp.name], check=True)
-            part = tmp.name
-        with open(part) as fh:
-            for line in fh:
-                line = line.strip()
-                if line:
-                    try:
-                        yield json.loads(line)
-                    except json.JSONDecodeError:
-                        continue
+    return read_event_log(max(apps, key=os.path.getmtime) if apps else path)
 
 
 def decompose(log: str, cores: int) -> dict:
@@ -95,7 +63,7 @@ def decompose(log: str, cores: int) -> dict:
     n_stages = 0
     shuffle_read_b = 0
     shuffle_write_b = 0
-    for ev in load_events(log):
+    for ev in newest_app_events(log):
         e = ev.get("Event")
         if e == "SparkListenerApplicationStart":
             app_start = ev["Timestamp"]

@@ -7,16 +7,15 @@ cap strong scaling; gaps between stages are driver/bookkeeping time.
 
 Usage: python tools/stage_profile.py /tmp/evlog8 [--cores 8] [--top 25]
 
-The log is an event file or a ``SPARK_GRAFT_EVENTLOG_DIR`` directory; a
-directory resolves to its newest app, rolled and zstd parts included
-(``scaling_decompose.load_events``).
+The log is a ``SPARK_GRAFT_EVENTLOG_DIR`` directory; it resolves to its
+newest app (``scaling_decompose.newest_app_events``).
 """
 
 from __future__ import annotations
 
 import argparse
 
-from scaling_decompose import load_events
+from scaling_decompose import newest_app_events
 
 
 def main() -> None:
@@ -30,7 +29,7 @@ def main() -> None:
     task_time: dict[tuple[int, int], float] = {}
     task_n: dict[tuple[int, int], int] = {}
     app_start = app_end = None
-    for ev in load_events(args.log):
+    for ev in newest_app_events(args.log):
         e = ev.get("Event")
         if e == "SparkListenerApplicationStart":
             app_start = ev["Timestamp"]
