@@ -1,11 +1,28 @@
 """Connected components over candidate pairs (north rule F6).
 
-DataFrame-native min-label propagation with POINTER JUMPING: every node
-starts labeled with itself (its url); each iteration (a) joins labels across
-edges (both directions) and takes the min neighbor label, and (b) shortcuts
-through the label graph (label(u) ← label(label(u))).  The jump step doubles
-the distance a label travels per iteration, so convergence is O(log diameter)
-instead of O(diameter) — the same asymptotics as alternating
+Two paths, chosen by the caller's edge count (``n_edges``):
+
+* **one-task union-find** — when ``n_edges`` is known and at most
+  ``LOCAL_CC_MAX_EDGES``, CC is ONE lazy ``mapInPandas`` over the edges
+  coalesced to a single partition: a numpy union-find whose roots are the
+  min url of each component emits ``(url, cluster_id)`` directly.  No node
+  ids, no collision check, no truncations, no label/url re-join — the
+  kernel runs inside whatever job consumes the result, so CC submits no
+  job of its own.  It keeps no iteration state, so ``checkpoint_dir`` does
+  not apply; under a pipeline checkpoint dir the clusters snapshot holds
+  its result.
+* **min-label propagation** (below) — above the bound, and whenever
+  ``n_edges`` is None.  A graph of unknown size is never funnelled into
+  one task: this is the only path that works once the edges outgrow one
+  worker, so it stays the default.
+
+Propagation is DataFrame-native min-label propagation with POINTER
+JUMPING: every node starts labeled with itself (its url); each iteration
+(a) joins labels across edges (both directions) and takes the min neighbor
+label, and (b) shortcuts through the label graph
+(label(u) ← label(label(u))).  The jump step doubles the distance a label
+travels per iteration, so convergence is O(log diameter) instead of
+O(diameter) — the same asymptotics as alternating
 large-star/small-star (Kiveris et al., "Connected Components in MapReduce and
 Beyond"), with a simpler dataflow: labels only ever decrease and stay inside
 the component, so the plain-propagation fixpoint argument still applies
@@ -14,7 +31,7 @@ verbatim.  Duplicate clusters from similarity joins are near-cliques
 diameter grows with corpus size.  ``cfg.cc_max_iterations`` caps the loop
 defensively.
 
-Scale notes:
+Scale notes (propagation path):
 
 * lineage is truncated every iteration — Catalyst cannot optimize across
   iterations and the plan would otherwise grow exponentially (SURVEY §4.2.3).
@@ -54,7 +71,10 @@ from __future__ import annotations
 
 import os
 import warnings
+from collections.abc import Iterator
 
+import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation
 
@@ -66,20 +86,68 @@ from camden_spark.plans.metrics import observed
 #: (module-level so tests can monkeypatch it to force the fallback path)
 ID_SEEDS: tuple[int, ...] = tuple(range(42, 48))
 
+#: edge bound of the one-task union-find path, sized by EDGE count (a big
+#: corpus with few near pairs still qualifies; one with many never funnels
+#: into one task).  Module-level so tests can monkeypatch it.  At the bound
+#: (2^20 edges of ~60-byte urls, one Spark Python worker on a 4-vCPU box):
+#: random graph (907k nodes) 4.5 s, chain 3.7 s, worker peak RSS 115 →
+#: 483 MB; about 2.2 s of it is the sorted factorize of the url strings.
+LOCAL_CC_MAX_EDGES: int = 1 << 20
+
+
+def _union_find(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas kernel: (url_a, url_b) batches of ONE partition →
+    (url, cluster_id) for every endpoint, cluster_id = min url of its
+    component.  Codes are assigned in url order (Python's code-point order
+    is Spark's UTF-8 byte order), so min code == min url: every root hooks
+    to the smaller root, and the fixpoint root IS the cluster id."""
+    frames = list(batches)
+    if not frames:
+        return
+    edges = pd.concat(frames, ignore_index=True)
+    codes, uniques = pd.factorize(
+        pd.concat([edges["url_a"], edges["url_b"]], ignore_index=True),
+        sort=True,
+    )
+    a, b = codes[: len(edges)], codes[len(edges):]
+    lab = np.arange(len(uniques))
+    while True:
+        ra, rb = lab[a], lab[b]
+        split = ra != rb
+        if not split.any():
+            break
+        # hook the larger root of every split edge to the smaller one ...
+        np.minimum.at(lab, np.maximum(ra[split], rb[split]),
+                      np.minimum(ra[split], rb[split]))
+        # ... then shortcut until every label is a root again
+        while True:
+            jumped = lab[lab]
+            if np.array_equal(jumped, lab):
+                break
+            lab = jumped
+    uniques = np.asarray(uniques, dtype=object)
+    yield pd.DataFrame({"url": uniques, "cluster_id": uniques[lab]})
+
 
 def connected_components(
     edges: DataFrame,
     cfg: DedupConfig | None = None,
     status: dict | None = None,
     checkpoint_dir: str | None = None,
+    n_edges: int | None = None,
 ) -> DataFrame:
     """edges(url_a, url_b) → (url, cluster_id) for every node in an edge.
 
     cluster_id is the min url of the component.  Nodes not in any edge are
     absent (callers union singletons back with cluster_id = own url).
 
+    ``n_edges``: the caller's count of ``edges`` rows, when it has one for
+    free.  At most ``LOCAL_CC_MAX_EDGES`` selects the lazy one-task
+    union-find (module docstring); None keeps min-label propagation.
+
     Pass ``status`` (a dict) to receive ``{"converged": bool, "iterations":
-    int, "checkpoint": "local"|"reliable"}``; a capped-out run returns
+    int, "node_id": "xxhash64"|"url"}`` plus, on the propagation path,
+    ``"checkpoint": "local"|"reliable"``; a capped-out run returns
     possibly-split labels, so non-convergence warns loudly and is surfaced in
     pipeline metrics instead of passing silently.
 
@@ -89,6 +157,14 @@ def connected_components(
     run-scoped scratch: iterations overwrite ``cc_iter_{0,1}`` alternately so
     the footprint stays at two label tables regardless of iteration count.
     """
+    if n_edges is not None and n_edges <= LOCAL_CC_MAX_EDGES:
+        if status is not None:
+            status.update(converged=True, iterations=1, node_id="url")
+        return (
+            edges.select("url_a", "url_b")
+            .coalesce(1)
+            .mapInPandas(_union_find, "url string, cluster_id string")
+        )
     cfg = cfg or DedupConfig()
     spark = edges.sparkSession
 

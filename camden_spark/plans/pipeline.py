@@ -8,8 +8,9 @@ Stage graph (each stage optionally snapshot-checkpointed, F9):
                               ├─ simhash_pairs: pigeonhole Hamming    [stage 4]
                               └─ substr_pairs:  winnow join ─┐        [stage 5]
                                      (waits on lsh_pairs) anti-join + SA
-  near pairs between canonicals → CC; members inherit via canon_url;
-  exact-only runs skip CC                                             [stage 6]
+  near pairs between canonicals → CC (one-task union-find when the
+  counted edges are few, label propagation otherwise); members inherit
+  via canon_url; exact-only runs skip CC                              [stage 6]
 
 The three candidate branches run on driver threads and each returns its
 verified pairs, behind its snapshot when a checkpoint dir is set and a
@@ -431,14 +432,18 @@ class DedupPipeline:
         def build_clusters() -> DataFrame:
             cc_status: dict = {"converged": True, "iterations": 0}
             out = exact.selectExpr("url", "canon_url AS cluster_id")
-            # no edge, no CC (an uncounted barrier: no job ran, so run it);
-            # a checkpoint dir keeps CC state on the RELIABLE parquet path
-            if counters.get().get("cc_edges", 1):
+            # no edge, no CC (an uncounted barrier: no job ran, so run CC on
+            # an unknown size); a small counted graph takes the one-task
+            # union-find, and a checkpoint dir keeps propagation's state on
+            # the RELIABLE parquet path
+            n_edges = counters.get().get("cc_edges")
+            if n_edges != 0:
                 cc_ckpt = None if self.checkpoint_dir is None else os.path.join(
                     self.checkpoint_dir, cfg.config_hash(), "cc_scratch"
                 )
                 comp = connected_components(
-                    edges, cfg, status=cc_status, checkpoint_dir=cc_ckpt
+                    edges, cfg, status=cc_status, checkpoint_dir=cc_ckpt,
+                    n_edges=n_edges,
                 ).withColumnRenamed("url", "canon_url")
                 # one join with the small component table
                 out = exact.join(comp, "canon_url", "left").selectExpr(

@@ -166,6 +166,75 @@ def test_connected_components_pointer_jump_fast_on_chains(spark):
     )
 
 
+def _mixed_graph(spark):
+    """~300 nodes: random edges, a 120-node chain and a 40-leaf star, over
+    shuffled url names so component minima sit anywhere in the structure."""
+    import random
+
+    rng = random.Random(5)
+    names = [f"u/{i:03d}" for i in range(300)]
+    rng.shuffle(names)
+    pairs = [(rng.randrange(100), rng.randrange(100)) for _ in range(90)]
+    pairs += [(100 + i, 101 + i) for i in range(119)]
+    pairs += [(220, 221 + i) for i in range(40)]
+    edges = [(names[a], names[b]) for a, b in pairs]
+    return spark.createDataFrame(edges, "url_a string, url_b string"), len(edges)
+
+
+def test_connected_components_union_find_equals_propagation(tmp_path, spark):
+    """A known small edge count takes the one-task union-find path, with
+    the same rows as label propagation.  Propagation needs ~90 iterations
+    on the 120-node chain (hashed labels), hence the raised cap; the
+    parquet mode keeps its per-iteration plans small."""
+    edges, k = _mixed_graph(spark)
+    status: dict = {}
+    got = sorted(map(tuple, connected_components(
+        edges, status=status, n_edges=k).collect()))
+    assert status == {"converged": True, "iterations": 1, "node_id": "url"}
+    prop: dict = {}
+    want = sorted(map(tuple, connected_components(
+        edges, DedupConfig(cc_max_iterations=200), status=prop,
+        checkpoint_dir=str(tmp_path / "cc"),
+    ).collect()))
+    assert prop["converged"] and prop["node_id"] == "xxhash64"
+    assert got == want
+
+
+def test_connected_components_union_find_submits_no_job(spark):
+    """The union-find path is lazy: building it runs no Spark job; its
+    kernel runs inside the consumer's job."""
+    edges, k = _mixed_graph(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("cc-union-find", "union-find CC")
+    try:
+        comp = connected_components(edges, n_edges=k)
+        assert list(sc.statusTracker().getJobIdsForGroup("cc-union-find")) == []
+        comp.collect()
+        assert list(sc.statusTracker().getJobIdsForGroup("cc-union-find"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_pipeline_runs_union_find_cc_with_unchanged_clusters(
+    spark, pages_df, monkeypatch
+):
+    """The pipeline hands CC its counted edges: a small graph runs the
+    union-find path and gives the clusters label propagation gives."""
+    from camden_spark.operators import components as C
+
+    res = DedupPipeline(cfg=CFG).run(pages_df)
+    got = sorted(map(tuple, res.clusters.collect()))
+    assert res.metrics["cc"]["node_id"] == "url"
+    res.release()
+    monkeypatch.setattr(C, "LOCAL_CC_MAX_EDGES", 0)
+    prop = DedupPipeline(cfg=CFG).run(pages_df)
+    want = sorted(map(tuple, prop.clusters.collect()))
+    assert prop.metrics["cc"]["node_id"] == "xxhash64"
+    prop.release()
+    assert got == want
+
+
 def test_connected_components_reliable_checkpoint(tmp_path, spark):
     """checkpoint_dir= routes per-iteration state through parquet (the
     executor-loss-safe path): labels identical to the localCheckpoint mode,

@@ -108,3 +108,63 @@ def test_minhash_permutation_invariance(shingle_lists):
     a = minhash_signatures_np(sets, 32, seed=7)
     b = minhash_signatures_np(shuffled, 32, seed=7)
     assert np.array_equal(a, b)
+
+
+def _reference_components(edges: list[tuple[str, str]]) -> dict[str, str]:
+    """Plain dict union-find: url → min url of its component."""
+    parent: dict[str, str] = {}
+
+    def find(u: str) -> str:
+        parent.setdefault(u, u)
+        while parent[u] != u:
+            parent[u] = parent[parent[u]]
+            u = parent[u]
+        return u
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {u: find(u) for u in parent}
+
+
+@st.composite
+def _edge_batches(draw):
+    """Random edges over shuffled url names (ascii and multi-byte), with
+    duplicates and both orientations, optionally a chain longer than
+    ``cc_max_iterations`` and a 100-leaf star, cut into several batches."""
+    n = draw(st.integers(2, 40))
+    pairs = draw(st.lists(st.tuples(st.integers(0, n - 1), st.integers(0, n - 1)),
+                          min_size=1, max_size=80))
+    if draw(st.booleans()):
+        chain = draw(st.integers(200, 260))
+        pairs += [(n + i, n + i + 1) for i in range(chain - 1)]
+        n += chain
+    if draw(st.booleans()):
+        pairs += [(n, n + 1 + i) for i in range(100)]
+        n += 101
+    pairs += [(b, a) for a, b in draw(st.lists(st.sampled_from(pairs), max_size=20))]
+    order = draw(st.permutations(range(len(pairs))))
+    names = draw(st.permutations(range(n)))
+    alphabet = ["a", "é", "日", "Z", "/"]
+    url = [f"{alphabet[k % 5]}{k}" for k in names]
+    edges = [(url[pairs[i][0]], url[pairs[i][1]]) for i in order]
+    cuts = sorted(draw(st.lists(st.integers(0, len(edges)), max_size=4)))
+    bounds = [0, *cuts, len(edges)]
+    return edges, [
+        pd.DataFrame(edges[lo:hi], columns=["url_a", "url_b"], dtype=object)
+        for lo, hi in zip(bounds, bounds[1:])
+    ]
+
+
+@settings(max_examples=80, deadline=None)
+@given(_edge_batches())
+def test_union_find_kernel_equals_reference(case):
+    """The one-task CC kernel emits every edge endpoint once, labelled with
+    the min url of its component, however the edges are batched."""
+    from camden_spark.operators.components import _union_find
+
+    edges, batches = case
+    out = pd.concat(list(_union_find(iter(batches))), ignore_index=True)
+    assert out["url"].is_unique
+    assert dict(zip(out["url"], out["cluster_id"])) == _reference_components(edges)

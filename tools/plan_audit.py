@@ -8,7 +8,6 @@ scale red flags:
 * ``BatchEvalPython`` — row-at-a-time Python UDF (the slow path the north
   rule forbids); Arrow-vectorized stages show as ``ArrowEvalPython`` /
   ``MapInPandas`` instead.
-* parquet scans without ``PushedFilters`` when the query filters the table.
 * the same Python UDF in more than one ``ArrowEvalPython`` / ``MapInPandas``
   node — the kernel runs more than once per row: a filter on a UDF struct
   field pushed below its projection plans the UDF on both sides of the
