@@ -14,10 +14,6 @@ import hashlib
 import json
 from dataclasses import asdict, dataclass
 
-#: Mersenne prime 2^61 - 1: modulus for the universal-hash family used by
-#: MinHash permutations.  Fits in uint64 with headroom for mod arithmetic.
-MERSENNE_61 = (1 << 61) - 1
-
 
 @dataclass(frozen=True)
 class DedupConfig:

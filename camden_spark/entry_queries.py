@@ -2488,7 +2488,7 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(64).alias("height"),
         F.lit(None).cast("long").alias("duration_ms"),
     )
-    feats = extract_media_features(media, fake=True)
+    feats = extract_media_features(media)
     u16_sum = F.aggregate(
         F.transform(
             "feature", lambda x: F.round(x.cast("double") * 65535.0).cast("long")

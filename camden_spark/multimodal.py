@@ -5,7 +5,7 @@ feature-extract run as Arrow-batched ``mapInPandas`` stages.
 
 Two decode paths:
 
-* ``extract_media_features(..., fake=True)`` — deterministic fake decoder
+* ``extract_media_features(...)`` — deterministic fake decoder
   (features derived from the payload digest); exercises the full Spark-side
   plumbing and is exactly mirrored by the DuckDB oracle.
 * ``decode_media_features(...)`` — REAL decoders for the formats the
@@ -346,7 +346,7 @@ def _fake_decode(payload: bytes) -> np.ndarray:
     return (raw.astype(np.float32) / np.float32(65535.0))
 
 
-def extract_media_features(media: DataFrame, fake: bool = True) -> DataFrame:
+def extract_media_features(media: DataFrame) -> DataFrame:
     """media table → per-item feature vectors via Arrow-batched mapInPandas.
 
     Partition by media_id hash upstream if payload sizes are skewed; batches
@@ -356,14 +356,7 @@ def extract_media_features(media: DataFrame, fake: bool = True) -> DataFrame:
     def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             payloads = [bytes(p) if p is not None else b"" for p in pdf["payload"]]
-            if fake:
-                vecs = [_fake_decode(p) for p in payloads]
-            else:
-                raise NotImplementedError(
-                    "extract_media_features(fake=False) is the Pillow/ffmpeg "
-                    "seam (not in this container); for formats the stdlib can "
-                    "decode (netpbm images, PCM WAV) use decode_media_features"
-                )
+            vecs = [_fake_decode(p) for p in payloads]
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],

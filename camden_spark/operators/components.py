@@ -5,33 +5,42 @@ Two paths, chosen by the caller's edge count (``n_edges``):
 * **one-task union-find** — when ``n_edges`` is known and at most
   ``LOCAL_CC_MAX_EDGES``, CC is ONE lazy ``mapInPandas`` over the edges
   coalesced to a single partition: a numpy union-find whose roots are the
-  min url of each component emits ``(url, cluster_id)`` directly.  No node
-  ids, no collision check, no truncations, no label/url re-join — the
-  kernel runs inside whatever job consumes the result, so CC submits no
-  job of its own.  It keeps no iteration state, so ``checkpoint_dir`` does
-  not apply; under a pipeline checkpoint dir the clusters snapshot holds
-  its result.
-* **min-label propagation** (below) — above the bound, and whenever
+  min url of each component emits ``(url, cluster_id)`` directly.  No
+  truncations and no joins — the kernel runs inside whatever job consumes
+  the result, so CC submits no job of its own.  It keeps no iteration
+  state, so ``checkpoint_dir`` does not apply; under a pipeline checkpoint
+  dir the clusters snapshot holds its result.
+* **large-star / small-star** (below) — above the bound, and whenever
   ``n_edges`` is None.  A graph of unknown size is never funnelled into
   one task: this is the only path that works once the edges outgrow one
   worker, so it stays the default.
 
-Propagation is DataFrame-native min-label propagation with POINTER
-JUMPING: every node starts labeled with itself (its url); each iteration
-(a) joins labels across edges (both directions) and takes the min neighbor
-label, and (b) shortcuts through the label graph
-(label(u) ← label(label(u))).  The jump step doubles the distance a label
-travels per iteration, so convergence is O(log diameter) instead of
-O(diameter) — the same asymptotics as alternating
-large-star/small-star (Kiveris et al., "Connected Components in MapReduce and
-Beyond"), with a simpler dataflow: labels only ever decrease and stay inside
-the component, so the plain-propagation fixpoint argument still applies
-verbatim.  Duplicate clusters from similarity joins are near-cliques
-(1-2 iterations); the jump matters for substring-containment CHAINS, whose
-diameter grows with corpus size.  ``cfg.cc_max_iterations`` caps the loop
-defensively.
+The star path alternates the two steps of Kiveris et al. ("Connected
+Components in MapReduce and Beyond", SoCC 2014) over the edge set itself,
+normalized once to ``(lo, hi) = (least, greatest)`` url and deduplicated:
 
-Scale notes (propagation path):
+* large-star: over both orientations ``(u, v)``, every ``v > u`` moves to
+  ``m(u) = least(u, min v)`` (a window partitioned by ``u``);
+* small-star: each node ``hi`` and its smaller neighbours move to the least
+  of those neighbours (a window partitioned by ``hi``).
+
+Both steps keep each component connected and never join: windows,
+``distinct`` and ``union`` only scale a plan's size estimate, where a join
+multiplies it, and over truncated iterations a multiplied estimate grows
+until its arithmetic alone dominates planning.  The large-star window
+also counts each node's degree: the graph is a
+forest of stars centred on their minimum url exactly when every node with
+a smaller neighbour has no other neighbour.  That violation count is an
+``observe`` metric of the iteration's own truncation job (zero extra jobs);
+at zero the iteration's input is kept (both steps are the identity on
+such a forest) and ``cluster_id`` is read straight off its edges: each
+leaf points at its centre, each centre at itself.  Cluster ids are the
+lexicographic min url, the deterministic first-wins canonical member
+(camden keeps element 0 of each group, reference src/operations.rs:50 —
+ours is deterministic under any parallelism).  ``cfg.cc_max_iterations``
+caps the loop defensively.
+
+Scale notes (star path):
 
 * lineage is truncated every iteration — Catalyst cannot optimize across
   iterations and the plan would otherwise grow exponentially (SURVEY §4.2.3).
@@ -46,25 +55,12 @@ Scale notes (propagation path):
     snapshot store for the iterative stage (the reference's non-resumable
     move stage, src/operations.rs:52-55, is the failure mode both exist to
     fix).
-* the convergence check is an ``observe`` metric collected during the
-  truncation's own materialization job (the localCheckpoint or the parquet
-  write) — zero extra jobs per iteration
-* the loop iterates on 8-byte hashed node ids, not url strings: every
-  iteration shuffles the full label table (twice: neighbor-min + pointer
-  jump), and Common-Crawl urls average ~60-80 bytes — at 10^12 docs that is
-  an order of magnitude of needless exchange bytes per iteration.  Node ids
-  are ``xxhash64(seed, url)``; a driver-side uniqueness check (one tiny agg
-  over the id table) retries with the next seed on collision (p ≈ n²/2^65
-  per seed), so ids are injective BY CONSTRUCTION, not by hope.  If EVERY
-  seed collides (the birthday regime, node set near 2^32), the loop falls
-  back to url-string node ids instead of failing — correct at any scale,
-  paying the wider shuffle only where 64-bit ids mathematically cannot
-  work.  The
-  url→min-url cluster semantics are restored after convergence by ONE
-  groupBy(component) → min(url) join — cluster ids remain the lexicographic
-  min url, the deterministic first-wins canonical member (camden keeps
-  element 0 of each group, reference src/operations.rs:50 — ours is the
-  lexicographic minimum, deterministic under any parallelism).
+* a node's whole neighbourhood lands in one window task (an aggregate
+  would combine partial minima map-side), so a high-degree node is one
+  task's work in every iteration.
+* every iteration shuffles the url strings themselves, not fixed-width
+  node ids; long keys (document ids, Common-Crawl urls) widen each of the
+  iteration's exchanges in proportion.
 """
 
 from __future__ import annotations
@@ -76,15 +72,11 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, Window
 
 from camden_spark.config import DedupConfig
 from camden_spark.plans.caches import materialize_barrier
 from camden_spark.plans.metrics import observed
-
-#: seeds tried for injective 64-bit node ids before the url-string fallback
-#: (module-level so tests can monkeypatch it to force the fallback path)
-ID_SEEDS: tuple[int, ...] = tuple(range(42, 48))
 
 #: edge bound of the one-task union-find path, sized by EDGE count (a big
 #: corpus with few near pairs still qualifies; one with many never funnels
@@ -143,30 +135,28 @@ def connected_components(
 
     ``n_edges``: the caller's count of ``edges`` rows, when it has one for
     free.  At most ``LOCAL_CC_MAX_EDGES`` selects the lazy one-task
-    union-find (module docstring); None keeps min-label propagation.
+    union-find (module docstring); None keeps the star loop.
 
     Pass ``status`` (a dict) to receive ``{"converged": bool, "iterations":
-    int, "node_id": "xxhash64"|"url"}`` plus, on the propagation path,
-    ``"checkpoint": "local"|"reliable"``; a capped-out run returns
-    possibly-split labels, so non-convergence warns loudly and is surfaced in
-    pipeline metrics instead of passing silently.
+    int}`` plus, on the star path, ``"checkpoint": "local"|"reliable"``; a
+    capped-out run returns possibly-split clusters, so non-convergence warns
+    loudly and is surfaced in pipeline metrics instead of passing silently.
 
-    ``checkpoint_dir``: when set, per-iteration label state is persisted as
+    ``checkpoint_dir``: when set, per-iteration edge state is persisted as
     parquet under this directory instead of memory-backed ``localCheckpoint``
     — survives executor loss (see module docstring).  The directory is
     run-scoped scratch: iterations overwrite ``cc_iter_{0,1}`` alternately so
-    the footprint stays at two label tables regardless of iteration count.
+    the footprint stays at two edge tables regardless of iteration count.
     """
     if n_edges is not None and n_edges <= LOCAL_CC_MAX_EDGES:
         if status is not None:
-            status.update(converged=True, iterations=1, node_id="url")
+            status.update(converged=True, iterations=1)
         return (
             edges.select("url_a", "url_b")
             .coalesce(1)
             .mapInPandas(_union_find, "url string, cluster_id string")
         )
     cfg = cfg or DedupConfig()
-    spark = edges.sparkSession
 
     def truncate(df: DataFrame, name: str) -> DataFrame:
         """Materialize + truncate lineage; the action also collects any
@@ -177,139 +167,62 @@ def connected_components(
             return materialize_barrier(df)
         path = os.path.join(checkpoint_dir, name)
         df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
+        return edges.sparkSession.read.parquet(path)
 
-    # --- long node ids (module docstring: labels shuffle 8-byte longs, not
-    # url strings).  nid = xxhash64(seed, url) is a pure projection — no join
-    # to relabel edges; injectivity is CHECKED (one tiny agg over the node
-    # table) and the seed bumped on collision.
-    raw_nodes = (
-        edges.select(F.col("url_a").alias("url"))
-        .union(edges.select(F.col("url_b").alias("url")))
-        .distinct()
-    )
-    nodes = None
-    node_id_mode = "xxhash64"
-    seed = None
-    for seed in ID_SEEDS:
-        cand = raw_nodes.withColumn(
-            "nid", F.xxhash64(F.lit(seed), F.col("url"))
-        )
-        cand = truncate(cand, "cc_nodes")
-        n_urls, n_ids = cand.agg(
-            F.count("*"), F.countDistinct("nid")
-        ).first()
-        if n_urls == n_ids:
-            nodes = cand
-            break
-    if nodes is not None:
-        def nid(col: str, _seed: int = seed) -> F.Column:
-            return F.xxhash64(F.lit(_seed), F.col(col))
-    else:
-        # Seed exhaustion is NOT a fluke at scale: once the node set nears
-        # 2^32, birthday collisions are near-certain for EVERY 64-bit seed
-        # (p ≈ n²/2^65 per seed), so raising here would make CC unavailable
-        # at exactly the scale it was built for.  Fall back to url-string
-        # node ids — the loop below is generic over the nid type (joins,
-        # min, least, < all work on strings), so correctness holds at any
-        # scale; the cost is the wider per-iteration label shuffle the long
-        # ids exist to avoid, paid only in the collision regime.
-        node_id_mode = "url"
-        warnings.warn(
-            "connected_components: xxhash64 node ids collided for every "
-            "seed in ID_SEEDS (expected only near ~2^32 nodes) — falling "
-            "back to url-string node ids (correct, wider shuffle)",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        nodes = truncate(
-            raw_nodes.withColumn("nid", F.col("url")), "cc_nodes"
-        )
-
-        def nid(col: str) -> F.Column:
-            return F.col(col)
-
-    sym = truncate(
-        edges.select(nid("url_a").alias("src"), nid("url_b").alias("dst"))
-        .union(edges.select(nid("url_b").alias("src"), nid("url_a").alias("dst")))
-        .dropDuplicates(["src", "dst"]),
+    norm = truncate(
+        edges.select(
+            F.least("url_a", "url_b").alias("lo"),
+            F.greatest("url_a", "url_b").alias("hi"),
+        ).distinct(),
         "cc_edges",
     )
-    # identity init straight off the CHECKPOINTED node table: sym carries
-    # both edge directions, so distinct(sym.src) == nodes' nid set — the
-    # projection costs nothing and saves the init's own distinct exchange
-    # + truncation job the previous derivation paid
-    labels = nodes.select("nid", F.col("nid").alias("label"))
+    cur = norm.filter(F.col("lo") != F.col("hi"))
     converged = False
     iterations = 0
-    for _ in range(cfg.cc_max_iterations):
-        iterations += 1
-        # (a) neighbor labels: for each dst, min label over incoming src labels
-        nbr = (
-            sym.join(labels.withColumnRenamed("nid", "src"), "src")
-            .groupBy("dst")
-            .agg(F.min("label").alias("nbr_label"))
-            .withColumnRenamed("dst", "nid")
+    for iterations in range(1, cfg.cc_max_iterations + 1):
+        # large-star: every larger neighbour v of u moves to m(u), the least
+        # of u's closed neighbourhood.  The same window counts u's degree:
+        # the graph is a forest of stars centred on their minima exactly when
+        # every node with a smaller neighbour has no other neighbour.
+        both = cur.union(cur.select("hi", "lo")).toDF("u", "v")
+        w = Window.partitionBy("u")
+        obs = Observation(f"cc_star_{iterations}")
+        large = (
+            both.select(
+                "u", "v",
+                F.least("u", F.min("v").over(w)).alias("m"),
+                F.count("v").over(w).alias("deg"),
+            )
+            .observe(obs, F.count(F.when(
+                (F.col("v") < F.col("u")) & (F.col("deg") > 1), True
+            )).alias("violations"))
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("m").alias("lo"), F.col("v").alias("hi"))
+            .distinct()
         )
-        # (b) pointer jump: label-of-label.  label(u) is always a node of u's
-        # component that appears in `labels` (it started as identity and only
-        # ever moves to smaller member ids), so the join always matches; the
-        # coalesce is belt-and-braces for the left join.
-        jump = labels.select(
-            F.col("nid").alias("_pj_nid"), F.col("label").alias("_pj_label")
+        # small-star: each hi and its smaller neighbours (the rows of hi's
+        # window) move to the least of those neighbours
+        small = (
+            large.select(
+                F.min("lo").over(Window.partitionBy("hi")).alias("lo"),
+                F.explode(F.array("lo", "hi")).alias("hi"),
+            )
+            .filter(F.col("lo") != F.col("hi"))
+            .distinct()
         )
-        # the convergence check rides the truncation's materialization job as
-        # an observed metric — zero extra jobs per iteration (vs a separate
-        # isEmpty/count action)
-        obs = Observation(f"cc_changed_{iterations}")
-        # iteration 1 runs on IDENTITY labels, where the pointer jump is a
-        # provable no-op (label(label(u)) = label(u) = u) — skip its join
-        # (and the exchanges/broadcasts it materializes) entirely
-        stepped = labels.join(nbr, "nid", "left")
-        if iterations > 1:
-            stepped = stepped.join(
-                jump, F.col("label") == F.col("_pj_nid"), "left"
-            )
-        else:
-            stepped = stepped.withColumn(
-                "_pj_label", F.lit(None).cast(labels.schema["label"].dataType)
-            )
-        stepped = (
-            stepped
-            .select(
-                "nid",
-                F.col("label").alias("_old"),
-                F.least(
-                    F.col("label"),
-                    F.coalesce(F.col("nbr_label"), F.col("label")),
-                    F.coalesce(F.col("_pj_label"), F.col("label")),
-                ).alias("label"),
-            )
-            .select(
-                "nid",
-                "label",
-                (F.col("label") < F.col("_old")).alias("changed"),
-            )
-            .observe(
-                obs,
-                F.coalesce(
-                    F.sum(F.col("changed").cast("long")), F.lit(0)
-                ).alias("changed"),
-            )
-        )
-        new_labels = truncate(stepped, f"cc_iter_{iterations % 2}")
-        m = observed(obs)
-        if m is not None:
-            converged = m["changed"] == 0
-        else:  # defensive: metric not collected — fall back to a scan
-            converged = new_labels.filter(F.col("changed")).isEmpty()
-        labels = new_labels.drop("changed")
-        if converged:
+        nxt = truncate(small, f"cc_iter_{iterations % 2}")
+        metric = observed(obs)
+        # None: AQE found the window's input empty and pruned the observer
+        # with it.  Both star steps are the identity on a star forest, so
+        # the converged iteration's input is kept.
+        if metric is None or metric["violations"] == 0:
+            converged = True
             break
+        cur = nxt
     if not converged:
         warnings.warn(
             f"connected_components hit cc_max_iterations="
-            f"{cfg.cc_max_iterations} before the label fixpoint — clusters "
+            f"{cfg.cc_max_iterations} before the star fixpoint — clusters "
             f"may be split; raise cc_max_iterations",
             RuntimeWarning,
             stacklevel=2,
@@ -318,12 +231,15 @@ def connected_components(
         status["converged"] = converged
         status["iterations"] = iterations
         status["checkpoint"] = "local" if checkpoint_dir is None else "reliable"
-        status["node_id"] = node_id_mode
-    # restore url-keyed, min-URL cluster semantics: ONE groupBy(component) →
-    # min(url) after convergence replaces per-iteration string shuffles
-    comp_urls = labels.join(nodes, "nid").select("url", "label")
-    canon = comp_urls.groupBy("label").agg(F.min("url").alias("cluster_id"))
-    return comp_urls.join(canon, "label").select("url", "cluster_id")
+    # each leaf points at its centre, each centre at itself; a node seen only
+    # in a self-loop keeps its own url (min prefers a centre where it has one)
+    return (
+        cur.union(norm.filter(F.col("lo") == F.col("hi")))
+        .select(F.explode(F.array("lo", "hi")).alias("url"),
+                F.col("lo").alias("cluster_id"))
+        .groupBy("url")
+        .agg(F.min("cluster_id").alias("cluster_id"))
+    )
 
 
 def incremental_clusters(

@@ -9,8 +9,8 @@ Stage graph (each stage optionally snapshot-checkpointed, F9):
                               └─ substr_pairs:  winnow join ─┐        [stage 5]
                                      (waits on lsh_pairs) anti-join + SA
   near pairs between canonicals → CC (one-task union-find when the
-  counted edges are few, label propagation otherwise); members inherit
-  via canon_url; exact-only runs skip CC                              [stage 6]
+  counted edges are few, the large-star/small-star loop otherwise);
+  members inherit via canon_url; exact-only runs skip CC              [stage 6]
 
 The three candidate branches run on driver threads and each returns its
 verified pairs, behind its snapshot when a checkpoint dir is set and a
@@ -434,7 +434,7 @@ class DedupPipeline:
             out = exact.selectExpr("url", "canon_url AS cluster_id")
             # no edge, no CC (an uncounted barrier: no job ran, so run CC on
             # an unknown size); a small counted graph takes the one-task
-            # union-find, and a checkpoint dir keeps propagation's state on
+            # union-find, and a checkpoint dir keeps the star loop's state on
             # the RELIABLE parquet path
             n_edges = counters.get().get("cc_edges")
             if n_edges != 0:

@@ -19,8 +19,6 @@ from pyspark.sql import DataFrame, SparkSession
 #: warc_ts derivation shared with the DuckDB oracle SQL.
 _BASE_EPOCH = 1735689600
 
-PAGES_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
-
 
 def load_pages(spark: SparkSession, path: str) -> DataFrame:
     """Load a pages table.
@@ -64,20 +62,6 @@ def pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("text"),
         F.col("lang"),
     )
-
-
-#: DuckDB-side equivalent of pages_from_documents, for oracle queries.
-PAGES_ORACLE_CTE = """
-pages AS (
-  SELECT
-    'https://' || source || '.example/' || lang || '/doc' || CAST(doc_id AS VARCHAR) AS url,
-    TIMESTAMP '2025-01-01 00:00:00' + to_timestamp(doc_id) - to_timestamp(0) AS warc_ts,
-    CAST('<html><body>' || text || '</body></html>' AS BLOB) AS html,
-    text,
-    lang
-  FROM documents
-)
-"""
 
 
 def normalize_pages(

@@ -487,7 +487,7 @@ def test_multimodal_features(spark):
         "media_id long, url string, media_type string, payload binary, "
         "width int, height int, duration_ms long",
     )
-    feats = {r["media_id"]: r for r in extract_media_features(df, fake=True).collect()}
+    feats = {r["media_id"]: r for r in extract_media_features(df).collect()}
     assert len(feats[1]["feature"]) == 16
     # identical payloads → identical features and checksums
     assert feats[1]["feature"] == feats[2]["feature"]
@@ -496,8 +496,6 @@ def test_multimodal_features(spark):
     clusters = {r["media_id"]: r for r in media_exact_dup_clusters(df).collect()}
     assert clusters[1]["cluster_size"] == 2
     assert clusters[3]["cluster_size"] == 1
-    with pytest.raises(Exception):
-        extract_media_features(df, fake=False).collect()
 
 
 def test_config_validation():

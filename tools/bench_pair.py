@@ -4,7 +4,9 @@ VERDICT r5 found BENCH_r05 slower than BENCH_r04 on every query but had no
 same-host pair to attribute it (host drift vs code).  This harness runs
 bench.py from N checkouts back-to-back, interleaved round-robin (so slow
 host drift hits every snapshot equally), and reports per-query MIN across
-reps for each snapshot plus the ratios.
+reps for each snapshot plus the ratios.  The order rotates by one snapshot
+each rep (rep 0 runs a, b; rep 1 runs b, a), so drift within a rep does not
+always land on the same side.
 
 Usage::
 
@@ -61,7 +63,8 @@ def main() -> None:
     snaps = [s.split("=", 1) for s in args.snap]
     samples: dict[str, list[dict]] = {name: [] for name, _ in snaps}
     for rep in range(args.reps):
-        for name, path in snaps:
+        k = rep % len(snaps)
+        for name, path in snaps[k:] + snaps[:k]:
             print(f"rep {rep} {name} ...", file=sys.stderr)
             samples[name].append(run_bench(path, args.sf, args.cpus))
 
