@@ -169,14 +169,8 @@ def hyperplane_buckets(
                 ).view(np.int64)
             yield pd.Series(list(out))
 
-    # nondeterministic to the optimizer only (the kernel is pure): Spark then
-    # keeps this one projection above a unioned input instead of copying it
-    # into each branch, where the copies share one result id and read as a
-    # repeated evaluation to tools/plan_audit.py
     per_vector = track_cache(
-        vectors.withColumn(
-            "_buckets", bucket_udf.asNondeterministic()(F.col(vec_col))
-        )
+        vectors.withColumn("_buckets", bucket_udf(F.col(vec_col)))
     )
     return per_vector.select(
         "*", F.posexplode("_buckets").alias("table", "bucket")

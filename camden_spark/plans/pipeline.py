@@ -6,17 +6,15 @@ Stage graph (each stage optionally snapshot-checkpointed, F9):
       (near stages) └─ normalize → canonicals' sig: MinHash, SimHash  [stage 2]
                               ├─ lsh_pairs:     band join + Jaccard   [stage 3]
                               ├─ simhash_pairs: pigeonhole Hamming    [stage 4]
-                              └─ substr_pairs:  winnow join ─┐        [stage 5]
-                                     (waits on lsh_pairs) anti-join + SA
+                              └─ substr_pairs:  winnow join + SA      [stage 5]
   near pairs between canonicals → CC (one-task union-find when the
   counted edges are few, the large-star/small-star loop otherwise);
   members inherit via canon_url; exact-only runs skip CC              [stage 6]
 
 The three candidate branches run on driver threads and each returns its
 verified pairs, behind its snapshot when a checkpoint dir is set and a
-materialization barrier otherwise; the substring branch waits on the LSH
-branch's future only for its anti-join, after its own candidate work.  The
-main thread keeps the pair union, CC and the sinks.  Each candidate join's
+materialization barrier otherwise; no branch waits on another.  The main
+thread keeps the pair union, CC and the sinks.  Each candidate join's
 skew counters (``{kind}_total``, ``{kind}_dropped``,
 ``rows_in_dropped_{kind}``) ride an Observation on that join's own job and
 land in ``PipelineResult.metrics["lsh"|"simhash"|"substr"]`` with no job of
@@ -35,6 +33,7 @@ from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, Window
+from pyspark.util import inheritable_thread_target
 
 from camden_spark.config import DedupConfig
 from camden_spark.operators.components import connected_components
@@ -73,16 +72,8 @@ def _estimated_scan_partitions(df: DataFrame) -> int:
         return -1
     if not files:
         return -1
-    spark = df.sparkSession
-    mpb_conf = str(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
-    digits = "".join(c for c in mpb_conf if c.isdigit())
-    mpb = int(digits) if digits else 134217728
-    if mpb_conf.lower().endswith(("k", "kb")):
-        mpb <<= 10
-    elif mpb_conf.lower().endswith(("m", "mb")):
-        mpb <<= 20
-    elif mpb_conf.lower().endswith(("g", "gb")):
-        mpb <<= 30
+    # the session's own parse of the byte string ("64m", "1g", ...)
+    mpb = df.sparkSession._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     total = 0
     for f in files:
         parsed = urlparse(f)
@@ -311,7 +302,7 @@ class DedupPipeline:
         def build_simhash() -> DataFrame:
             return candidate_pairs_simhash(sig, cfg, skew["simhash"])[0]
 
-        def build_substr(lsh_verified) -> DataFrame:
+        def build_substr() -> DataFrame:
             # warm: the self-join scans fp on BOTH sides plus the
             # group-sizing branch — cold-cache branch race otherwise
             fp = warm_cache(
@@ -319,27 +310,18 @@ class DedupPipeline:
             )
             cand, _ = candidate_pairs_substr(fp, cfg, skew["substr"])
             # barrier, as in build_lsh: the verify reads the candidate set
-            # three times (both url prunes and the text join)
-            cand = materialize_barrier(cand)
-            # pairs already confirmed by LSH join the same CC component —
-            # skip their (expensive) suffix-array verification.  The wait
-            # for the LSH pairs comes only now, after this branch's own
-            # candidate work.
-            lp = lsh_verified()
-            if lp is not None:
-                cand = cand.join(
-                    lp.select("url_a", "url_b"), ["url_a", "url_b"], "left_anti"
-                )
-            return verify_pairs_substr(cand, distinct_pages, cfg)
+            # three times (both url prunes and the text join).  Pairs LSH
+            # also finds are verified here too: the pair union keeps one
+            # row per pair, labelled minhash_lsh
+            return verify_pairs_substr(materialize_barrier(cand), distinct_pages, cfg)
 
         def branch(name: str, build, upstream: list[str]) -> DataFrame:
             """Run one candidate branch (stage ``{name}_pairs``) to its
             verified pairs HERE, on its pool thread, not later inside the
-            pair-union barrier.  The pairs are computed once for every
-            consumer (the pair union and, for LSH, substr's anti-join): with
-            a store the staged() parquet snapshot is the barrier, without
-            one a materialize_barrier (a plain cache() would not stop the
-            recompute, see its docstring)."""
+            pair-union barrier.  The pairs are computed once for the pair
+            union: with a store the staged() parquet snapshot is the barrier,
+            without one a materialize_barrier (a plain cache() would not stop
+            the recompute, see its docstring)."""
             df = staged(f"{name}_pairs", build, upstream=upstream)
             return df if store is not None else materialize_barrier(df)
 
@@ -350,27 +332,23 @@ class DedupPipeline:
         # a concurrent sibling fills both.  Safe because every shared input
         # (norm/exact/sig) is warm-cached ABOVE, so threads read populated
         # blocks instead of racing to compute them (caches.warm_cache
-        # docstring).  The substring branch gates only its LSH anti-join +
-        # suffix-array verify on the LSH future, through a zero-argument
-        # callable, so a resumed substr snapshot never waits on (or reads)
-        # the LSH pairs; LSH is submitted first and every branch has its own
-        # worker, so that wait cannot starve.  Pool threads do not inherit
-        # context variables: the initializer hands them this run's owner.
+        # docstring).  Pool threads inherit neither context variables nor
+        # Spark local properties: the initializer hands them this run's
+        # owner, and each submission carries the caller's job group.
+        branches = {
+            "lsh": (self.enable_lsh, build_lsh, ["signatures"]),
+            "simhash": (self.enable_simhash, build_simhash, ["signatures"]),
+            "substr": (self.enable_substr, build_substr, ["exact"]),
+        }
+        run_branch = inheritable_thread_target(branch)
         with ThreadPoolExecutor(
             max_workers=3, initializer=OWNER.set, initargs=(owner,)
         ) as pool:
-            futs = {}
-            if self.enable_lsh:
-                futs["lsh"] = pool.submit(branch, "lsh", build_lsh, ["signatures"])
-            if self.enable_simhash:
-                futs["simhash"] = pool.submit(
-                    branch, "simhash", build_simhash, ["signatures"]
-                )
-            if self.enable_substr:
-                lsh_verified = futs["lsh"].result if self.enable_lsh else lambda: None
-                futs["substr"] = pool.submit(
-                    branch, "substr", lambda: build_substr(lsh_verified), ["exact"]
-                )
+            futs = {
+                name: pool.submit(run_branch, name, build, upstream)
+                for name, (on, build, upstream) in branches.items()
+                if on
+            }
             # retrieve EVERY branch's outcome before raising: a fixed await
             # order would drop sibling exceptions on a multi-branch failure
             # and report only one cause
@@ -380,10 +358,7 @@ class DedupPipeline:
                 try:
                     results[name] = fut.result()
                 except Exception as exc:  # noqa: BLE001 - aggregated below
-                    # substr re-raises a failed LSH branch's exception from
-                    # its wait: report it once, under lsh
-                    if not any(exc is e for e in errors.values()):
-                        errors[name] = exc
+                    errors[name] = exc
         if errors:
             detail = "; ".join(
                 f"{n}: {type(e).__name__}: {str(e)[:300]}" for n, e in errors.items()

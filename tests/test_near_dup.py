@@ -637,6 +637,71 @@ def test_plan_audit_repeated_udf_skips_initial_aqe_plan():
     assert audit("q", both_final)
 
 
+_UNION_PLAN = """== Physical Plan ==
+ArrowEvalPython (5)
++- Union (4)
+   :- ArrowEvalPython (2)
+   :  +- Scan (1)
+   +- ArrowEvalPython (3)
+      +- Scan (1)
+
+
+(1) Scan
+Output [1]: [embedding#1]
+
+(2) ArrowEvalPython
+Input [1]: [embedding#1]
+Arguments: [bucket_udf(embedding#1)#18], [pythonUDF0#20], 204
+
+(3) ArrowEvalPython
+Input [1]: [embedding#5]
+Arguments: [bucket_udf(embedding#5)#18], [pythonUDF0#21], 204
+
+(5) ArrowEvalPython
+Input [1]: [pythonUDF0#20]
+Arguments: [g(pythonUDF0#20)#30], [pythonUDF1#31], 204
+"""
+
+_SELF_JOIN_PLAN = """== Physical Plan ==
+SortMergeJoin Inner (7)
+:- Sort (3)
+:  +- MapInPandas (2)
+:     +- Scan (1)
++- Sort (6)
+   +- MapInPandas (5)
+      +- Scan (4)
+
+
+(1) Scan
+Output [1]: [doc_id#691L]
+
+(2) MapInPandas
+Input [1]: [doc_id#691L]
+Arguments: synth(doc_id#691L)#697, [media_id#698L], false
+
+(4) Scan
+Output [1]: [doc_id#779L]
+
+(5) MapInPandas
+Input [1]: [doc_id#779L]
+Arguments: synth(doc_id#779L)#697, [media_id#800L], false
+"""
+
+
+def test_plan_audit_repeated_udf_over_union_and_self_join():
+    """Union branches share a projected UDF's result id but each evaluates
+    it over its own rows: not flagged.  The two sides of a self-join
+    evaluate it over the same rows: flagged."""
+    from tools.plan_audit import audit, python_eval_udfs, repeated_udf
+
+    assert python_eval_udfs(_UNION_PLAN) == [
+        ["bucket_udf#18"], ["bucket_udf#18"], ["g#30"]
+    ]
+    assert audit("q", _UNION_PLAN) == []
+    assert repeated_udf(_SELF_JOIN_PLAN) == "synth#697"
+    assert audit("q", _SELF_JOIN_PLAN)
+
+
 def _run_bounded(fn, timeout_s: float = 300.0) -> dict:
     """Run ``fn`` on a daemon thread; fail if it has not returned in time."""
     out: dict = {}
@@ -662,10 +727,9 @@ def _run_bounded(fn, timeout_s: float = 300.0) -> dict:
 def test_branch_failure_is_reported_without_hanging(
     spark, pages_df, monkeypatch, tmp_path, failing, checkpointed
 ):
-    """The substring branch waits on the LSH future inside the pool: an LSH
-    failure must surface as the run's error (named once, under lsh) instead
-    of hanging that wait, and a substring failure alone names substr.  Runs
-    with and without a checkpoint dir take the same pool path."""
+    """A failing branch surfaces as the run's error, named under that
+    branch alone, instead of hanging the pool.  Runs with and without a
+    checkpoint dir take the same pool path."""
     import camden_spark.plans.pipeline as pipeline_mod
 
     def boom(*_args, **_kwargs):
@@ -693,6 +757,81 @@ def _outputs(res) -> tuple[list, list]:
     clusters = sorted(map(tuple, res.clusters.collect()))
     pairs = sorted(map(tuple, res.pairs.select("url_a", "url_b", "source").collect()))
     return clusters, pairs
+
+
+def test_candidate_branches_do_not_wait_on_each_other(spark, pages_df, monkeypatch):
+    """The LSH branch blocks in its verify until the substring branch
+    reaches its own verify: with no cross-branch wait, substr gets there
+    while LSH is still blocked."""
+    import camden_spark.plans.pipeline as pipeline_mod
+
+    reached = threading.Event()
+    waited = []
+    real_jaccard = pipeline_mod.verify_pairs_jaccard
+    real_substr = pipeline_mod.verify_pairs_substr
+
+    def blocked_jaccard(*args, **kwargs):
+        waited.append(reached.wait(60))
+        return real_jaccard(*args, **kwargs)
+
+    def substr(*args, **kwargs):
+        reached.set()
+        return real_substr(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline_mod, "verify_pairs_jaccard", blocked_jaccard)
+    monkeypatch.setattr(pipeline_mod, "verify_pairs_substr", substr)
+    out = _run_bounded(lambda: DedupPipeline(cfg=CFG).run(pages_df))
+    assert "error" not in out, out
+    out["result"].release()
+    assert waited == [True]
+
+
+def test_branch_jobs_carry_the_callers_job_group(spark, pages_df):
+    """A job group set around run() tags every job of the run, the branch
+    jobs on the pool threads included: each job id from the group's first
+    job up to a probe job in a second group belongs to the group."""
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("pipeline_run", "pipeline run")
+        res = DedupPipeline(cfg=CFG).run(pages_df)
+        _outputs(res)
+        res.release()
+        sc.setJobGroup("pipeline_probe", "probe")
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    grouped = set(tracker.getJobIdsForGroup("pipeline_run"))
+    probe = min(tracker.getJobIdsForGroup("pipeline_probe"))
+    assert grouped and set(range(min(grouped), probe)) == grouped
+
+
+def test_resume_from_snapshot_without_lsh_found_substr_pairs(spark, pages_df, tmp_path):
+    """A ``substr_pairs`` snapshot that lacks the pairs LSH also found (as
+    written when the substring branch skipped them) still resumes to the
+    clusters and pairs of a plain run: the LSH pairs cover those rows."""
+    import os
+    from camden_spark.plans.checkpoint import SnapshotStore
+
+    ckpt = str(tmp_path)
+    DedupPipeline(cfg=CFG, checkpoint_dir=ckpt).run(pages_df).release()
+    store = SnapshotStore(ckpt, CFG.config_hash())
+    lsh = store.read(spark, "lsh_pairs").select("url_a", "url_b")
+    full = store.read(spark, "substr_pairs")
+    rows = full.join(lsh, ["url_a", "url_b"], "left_anti").collect()
+    assert len(rows) < full.count()
+    store.write(spark.createDataFrame(rows, full.schema), "substr_pairs", ["exact"])
+    # as a run that stopped before its clusters snapshot: resume recomputes CC
+    os.remove(store._manifest_path("clusters"))
+    res = DedupPipeline(cfg=CFG, checkpoint_dir=ckpt).run(pages_df)
+    resumed = _outputs(res)
+    assert res.metrics["stage.substr_pairs.rows"] == len(rows)
+    res.release()
+    plain = DedupPipeline(cfg=CFG).run(pages_df)
+    want = _outputs(plain)
+    plain.release()
+    assert resumed == want
 
 
 def test_plain_and_checkpointed_runs_agree(spark, pages_df, tmp_path):

@@ -524,7 +524,7 @@ def _one_file_parquet(df, path):
 
 
 def test_spread_input_sizes_to_session_cores(spark, tmp_path):
-    from camden_spark.plans.pipeline import spread_input
+    from camden_spark.plans.pipeline import _estimated_scan_partitions, spread_input
 
     n = spark.sparkContext.defaultParallelism
     assert n >= 2
@@ -538,6 +538,18 @@ def test_spread_input_sizes_to_session_cores(spark, tmp_path):
     # in-memory frames keep their source partitioning
     mem = spark.range(1000)
     assert spread_input(mem) is mem
+    # the split size is the session's own parse of a byte-suffixed value
+    big = _one_file_parquet(spark.range(100_000), str(tmp_path / "big"))
+    size = os.path.getsize(big.inputFiles()[0].removeprefix("file:"))
+    assert size > 1024 * n
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        assert _estimated_scan_partitions(big) == -(-size // 1024)
+        assert spread_input(big) is big
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_pipeline_resplits_one_file_input_to_session_cores(

@@ -12,6 +12,8 @@ scale red flags:
   node — the kernel runs more than once per row: a filter on a UDF struct
   field pushed below its projection plans the UDF on both sides of the
   Filter, and an uncached UDF frame is re-evaluated for each consumer.
+  Nodes in different branches of one ``Union`` each run it over their own
+  rows and do not count.
 
 Exit code 1 if any un-allowlisted red flag appears — runnable as a gate.
 
@@ -78,14 +80,20 @@ def _udf_calls(args: str) -> list[str]:
     return calls
 
 
-def _initial_plan_ids(text: str) -> set[str]:
-    """Node ids printed only under an ``== Initial Plan ==`` header of the
-    plan tree.  An executed AQE plan (and a cached relation inside any plan)
-    prints its pre-execution plan next to the final one; a node that shows
-    up only there never runs."""
+def _plan_tree(text: str) -> tuple[dict[str, str | None], dict[str, str], set[str]]:
+    """The tree section of an ``explain("formatted")`` plan, walked by
+    indentation: each node id's parent and operator name (at its first
+    occurrence: a cached relation prints its plan once per scan), and the
+    node ids printed only under an ``== Initial Plan ==`` header.  An
+    executed AQE plan (and a cached relation inside any plan) prints its
+    pre-execution plan next to the final one; a node that shows up only
+    there never runs."""
+    parent: dict[str, str | None] = {}
+    names: dict[str, str] = {}
     initial: set[str] = set()
     elsewhere: set[str] = set()
     header = None  # column of the skipped Initial Plan header's "+-"
+    open_nodes: list[tuple[int, str]] = []  # (indent, id) of the ancestors
     for line in text.split("\n\n", 1)[0].splitlines():
         body = line.lstrip(" :+-")
         indent = len(line) - len(body)
@@ -95,35 +103,64 @@ def _initial_plan_ids(text: str) -> set[str]:
             # its root prints at the header text's column, below the "+-"
             header = indent - 3
             continue
-        node = re.match(r"[^(]*\((\d+)\)", body)
-        if node:
-            (initial if header is not None else elsewhere).add(node.group(1))
-    return initial - elsewhere
+        node = re.match(r"([^(]*)\((\d+)\)", body)
+        if not node:
+            continue
+        nid = node.group(2)
+        while open_nodes and open_nodes[-1][0] >= indent:
+            open_nodes.pop()
+        parent.setdefault(nid, open_nodes[-1][1] if open_nodes else None)
+        names.setdefault(nid, node.group(1).strip(" *"))
+        open_nodes.append((indent, nid))
+        (initial if header is not None else elsewhere).add(nid)
+    return parent, names, initial - elsewhere
+
+
+def _python_eval_nodes(text: str) -> dict[str, list[str]]:
+    """Node id → UDF calls in the Arguments line, for each Python-evaluation
+    node of the plan that runs (initial AQE plans skipped)."""
+    skip = _plan_tree(text)[2]
+    nodes = {}
+    for block in text.split("\n\n"):
+        head = re.match(r"^\((\d+)\) (\w+)", block.strip())
+        if not head or head.group(2) not in PY_EVAL_NODES or head.group(1) in skip:
+            continue
+        args = re.search(r"^Arguments: (.*)$", block, re.M)
+        nodes[head.group(1)] = _udf_calls(args.group(1)) if args else []
+    return nodes
 
 
 def python_eval_udfs(text: str) -> list[list[str]]:
     """One entry per Python-evaluation node of an ``explain("formatted")``
     plan that runs (initial AQE plans skipped): the UDF calls in that
     node's Arguments line."""
-    skip = _initial_plan_ids(text)
-    nodes = []
-    for block in text.split("\n\n"):
-        head = re.match(r"^\((\d+)\) (\w+)", block.strip())
-        if not head or head.group(2) not in PY_EVAL_NODES or head.group(1) in skip:
-            continue
-        args = re.search(r"^Arguments: (.*)$", block, re.M)
-        nodes.append(_udf_calls(args.group(1)) if args else [])
-    return nodes
+    return list(_python_eval_nodes(text).values())
 
 
 def repeated_udf(text: str) -> str | None:
-    """A Python UDF that more than one node of the plan evaluates, if any."""
-    seen: set[str] = set()
-    for udfs in python_eval_udfs(text):
-        twice = seen.intersection(udfs)
-        if twice:
-            return sorted(twice)[0]
-        seen.update(udfs)
+    """A Python UDF that two nodes of the plan evaluate over the same rows,
+    if any.  The branches of a union share a projected UDF's result id but
+    each runs it over its own rows, so two nodes whose lowest common
+    ancestor is a ``Union`` are not a repeat; a self-join's two sides are."""
+    parent, names, _ = _plan_tree(text)
+
+    def ancestors(nid: str | None) -> list[str]:
+        chain = []
+        while nid is not None:
+            chain.append(nid)
+            nid = parent.get(nid)
+        return chain
+
+    first: dict[str, str] = {}  # UDF → the first node that evaluates it
+    for nid, udfs in _python_eval_nodes(text).items():
+        for udf in udfs:
+            other = first.setdefault(udf, nid)
+            if other == nid:
+                continue
+            above = set(ancestors(other))
+            lca = next((a for a in ancestors(nid) if a in above), None)
+            if names.get(lca) != "Union":
+                return udf
     return None
 
 
