@@ -995,9 +995,9 @@ SQL_MINHASH_SIGNATURES_BOUNDED = _minhash_bounded_oracle_sql()
 
 def q_lsh_pairs_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F3 driver-HASH-verified on a bounded slice (doc_id < _BOUNDED_SLICE): the REAL
-    ``candidate_pairs_lsh`` operator (band hash → group-size count →
-    mega-band drop → semi-prune → keyed repartition → self-equi-join,
-    operators/lsh.py:44) run over the SQL-statable signatures of
+    ``candidate_pairs_lsh`` operator (band hash → keyed repartition →
+    window group count → mega-band drop → per-group pair list,
+    operators/lsh.capped_key_join) run over the SQL-statable signatures of
     ``_bounded_sig16``, banded 4x4.  The operator's xxhash64 band keys
     induce exactly the grouping of the raw 4-row signature tuples they hash
     (collision probability 2^-64 per band pair), so DuckDB restates banding
@@ -1239,9 +1239,9 @@ _SUBSTR_BOUNDED_W = 40
 def q_substr_pairs_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F5 (candidate stage) driver-HASH-verified on a bounded slice
     (doc_id < _BOUNDED_SLICE): the REAL ``candidate_pairs_substr`` operator
-    (fingerprint explode → group-size count → mega-group drop → semi-prune →
-    keyed repartition → self-equi-join, operators/substr.py:58) run over
-    SQL-statable winnow fingerprints.
+    (fingerprint explode → keyed repartition → window group count →
+    mega-group drop → per-group pair list, operators/lsh.capped_key_join)
+    run over SQL-statable winnow fingerprints.
 
     Kernel swap, same shape as the MinHash twin: the production rolling hash
     (uint64 FNV polynomial, functions/substr.py:25 — wraparound DuckDB cannot
@@ -1853,16 +1853,14 @@ def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify.  Identical results by construction (same kernels, same
     candidate set, same verify inputs) — checksum-verified."""
     from camden_spark.functions.shingles import with_shingles
-    from camden_spark.plans.caches import materialize_barrier, warm_cache
+    from camden_spark.plans.caches import materialize_barrier
 
     pages = normalize_pages(
         spread_input(pages_from_documents(spark, sf_dir), udf_bound=True)
     )
     # empty docs never near-dup (policy): dropped inside the one-pass
-    # kernel.  Warm, like the pipeline's sig: candidate_pairs_lsh scans it
-    # for band sizing AND both band-join sides, which would otherwise
-    # re-run the kernel per consumer
-    sig = warm_cache(nonempty_signatures(pages, CFG).select("url", "minhash"))
+    # kernel; candidate_pairs_lsh reads sig once, so no cache
+    sig = nonempty_signatures(pages, CFG).select("url", "minhash")
     cand, _ = candidate_pairs_lsh(sig, CFG)
     # barrier: the candidate set feeds the pair-url pruning AND the verify
     # join — without it both consumers recompute the band-join subtree
@@ -1876,32 +1874,25 @@ def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from camden_spark.plans.caches import warm_cache
-
     pages = normalize_pages(
         spread_input(pages_from_documents(spark, sf_dir), udf_bound=True)
     )
     # the one-pass kernel never ships shingle arrays and drops empty docs
-    # (never near-dup, policy) without a second UDF evaluation; warm, as in
-    # q_lsh_pairs: block sizing and both block-join sides scan sig
-    sig = warm_cache(nonempty_signatures(pages, CFG).select("url", "simhash"))
+    # (never near-dup, policy) without a second UDF evaluation
+    sig = nonempty_signatures(pages, CFG).select("url", "simhash")
     pairs, _ = candidate_pairs_simhash(sig, CFG)
     return pairs
 
 
 def q_substr_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from camden_spark.plans.caches import warm_cache
+    from camden_spark.plans.caches import materialize_barrier
 
     pages = normalize_pages(
         spread_input(pages_from_documents(spark, sf_dir), udf_bound=True)
     )
-    # warm the fingerprint frame exactly like the pipeline's build_substr:
-    # candidate_pairs_substr scans it for group sizing AND both self-join
-    # sides, which would otherwise re-run the winnowing UDF per consumer
-    fp = warm_cache(
-        with_fingerprints(pages, CFG).select("url", "fingerprints")
-    )
-    cand, _ = candidate_pairs_substr(fp, CFG)
+    fp = with_fingerprints(pages, CFG).select("url", "fingerprints")
+    # barrier, as in q_lsh_pairs: the verify reads the candidates three times
+    cand = materialize_barrier(candidate_pairs_substr(fp, CFG)[0])
     return verify_pairs_substr(cand, pages, CFG)
 
 

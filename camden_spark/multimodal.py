@@ -317,12 +317,11 @@ def media_near_dup_pairs(
     """
     from camden_spark.config import DedupConfig
     from camden_spark.operators.simhash import candidate_pairs_simhash
-    from camden_spark.plans.caches import track_cache
 
     cfg = DedupConfig(simhash_radius=radius, simhash_blocks=blocks)
-    # cached: the block join's size table and both join sides read these
-    # rows, and each read would otherwise decode every payload again
-    sig = track_cache(
+    # no cache: the block join reads these rows once, so each payload is
+    # decoded once
+    sig = (
         decode_media_features(media)
         .filter(F.col("ok"))
         .select(

@@ -7,8 +7,8 @@
   set against the corpus, window top-k.  The 100 TB path broadcasts queries,
   never shuffles the corpus.
 * ``hyperplane_buckets`` / ``ann_near_dup_pairs`` — the scale path: random
-  hyperplane signs (SRP-LSH) bucket the corpus; candidate pairs come from an
-  equi-join on bucket id, verified by exact cosine.  Embedding-cosine
+  hyperplane signs (SRP-LSH) bucket the corpus; candidate pairs share a
+  bucket id, verified by exact cosine.  Embedding-cosine
   near-duplicate detection = same machinery with a threshold.
 * ``train_ivf_centroids`` / ``ivf_topk`` — the second scale path: an IVF
   (inverted-file) index.  A spherical-k-means coarse quantizer (trained on a
@@ -30,7 +30,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql.types import LongType
 
 from camden_spark.operators.lsh import capped_key_join
-from camden_spark.plans.caches import track_cache
 
 #: Quantizer training-sample bound, and so the most cells k-means can emit:
 #: the default of both ``train_ivf_centroids(sample_rows)`` and
@@ -146,10 +145,11 @@ def hyperplane_buckets(
     """Add (table, bucket) rows via signed random projections.
 
     One vectorized pandas UDF computes all tables' buckets per batch with a
-    single numpy matmul.  Its output is cached with one row per vector (the
-    bucket array next to ``vectors``' columns) and exploded to (row, table,
-    bucket) after the cache: the UDF runs once per vector, whatever reads
-    the rows, and the payload is cached once, not once per table.
+    single numpy matmul, and its array is posexploded in the same
+    projection, so the plan evaluates the UDF once (a separate
+    ``withColumn`` of the array would plan it twice per union branch).
+    ``capped_key_join`` reads the rows once, so the UDF runs once per
+    vector with no cache.
     """
     rng = np.random.RandomState(seed)
     planes = rng.standard_normal((n_tables, n_planes, dim)).astype(np.float64)
@@ -169,12 +169,9 @@ def hyperplane_buckets(
                 ).view(np.int64)
             yield pd.Series(list(out))
 
-    per_vector = track_cache(
-        vectors.withColumn("_buckets", bucket_udf(F.col(vec_col)))
+    return vectors.select(
+        "*", F.posexplode(bucket_udf(F.col(vec_col))).alias("table", "bucket")
     )
-    return per_vector.select(
-        "*", F.posexplode("_buckets").alias("table", "bucket")
-    ).drop("_buckets")
 
 
 # --------------------------------------------------------------------------
@@ -421,10 +418,11 @@ def ivf_near_dup_pairs(
     pairs share a cell, get deduped, then exact-cosine verified.  Oversize
     cells are dropped to cap skew (``operators/lsh.capped_key_join``); pass
     ``status`` (a dict) to receive ``{"cells_total", "cells_dropped",
-    "rows_in_dropped_cells"}`` (one tiny extra job).  The (id, cell)
-    assignment rows are cached, so the cell UDF runs once per vector; the
-    payload never rides the candidate machinery (see the inline
-    §8-playbook note).
+    "rows_in_dropped_cells"}``: that read runs the cell UDF again in a job
+    of its own.  ``capped_key_join`` reads the (id, cell) assignment rows
+    once, so the pair query runs the cell UDF once per vector; the payload
+    never rides the candidate machinery (see the inline §8-playbook
+    note).
     Tuning:
     n_cells ≈ √corpus_size keeps cells bounded; on clustered real-world
     embeddings probed cells concentrate so the candidate mass stays far
@@ -436,17 +434,12 @@ def ivf_near_dup_pairs(
             vectors, n_cells, seed=seed, id_col=id_col, vec_col=vec_col
         )
     # (id, cell) ONLY — the embedding payload is dropped right after the cell
-    # UDF, so the cell-keyed self-join and the pair dedupe shuffle 16-byte id
+    # UDF, so the cell-keyed pairing and the pair dedupe shuffle 16-byte id
     # rows instead of dim-wide float arrays (§8 of the optimization playbook:
     # decide on lightweight proxies, re-attach the payload once at the end).
-    # Cached: the size table and both join sides read these rows.
-    assign = track_cache(
-        vectors.select(
-            F.col(id_col).alias("url"),
-            F.explode(_cell_udf(centroids, n_probe)(F.col(vec_col))).alias(
-                "cell"
-            ),
-        )
+    assign = vectors.select(
+        F.col(id_col).alias("url"),
+        F.explode(_cell_udf(centroids, n_probe)(F.col(vec_col))).alias("cell"),
     )
     joined, metrics = capped_key_join(assign, ["cell"], max_cell, "cells")
     if status is not None:
@@ -500,8 +493,7 @@ def ann_near_dup_pairs(
     via SRP-LSH buckets + exact verify.  The bucket join is text LSH's
     ``operators/lsh.capped_key_join`` (it has the skew story): oversize
     buckets dropped.  The per-vector norm is precomputed once and rides the
-    bucket rows (cached once per vector by ``hyperplane_buckets``), so
-    the verify pays ONE dot per deduped pair
+    bucket rows, so the verify pays ONE dot per deduped pair
     (bit-identical cosine, see :func:`_with_norm`).
 
     Shape note (round 7): an id-only candidate join with the embeddings

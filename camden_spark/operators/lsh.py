@@ -3,22 +3,23 @@
 Spark-first layout (north rule F3): the signature array is split into b bands
 of r rows; each band is hashed JVM-side (``xxhash64`` over the slice — a
 builtin that accepts array columns, so banding never leaves codegen), exploded
-to ``(url, band, band_hash)`` rows, and candidates come from a self-equi-join
-on ``(band, band_hash)``.
+to ``(url, band, band_hash)`` rows, and candidates are the pairs of rows that
+share a ``(band, band_hash)`` group.
 
-The skew-capped self-join itself is :func:`capped_key_join`, shared by the
-text candidate operators (LSH bands, SimHash blocks, substring fingerprints)
-and the embedding joins in ``operators/ann.py`` (IVF cells, SRP buckets).
+The skew-capped pairing itself is :func:`capped_key_join`, one keyed pass
+shared by the text candidate operators (LSH bands, SimHash blocks, substring
+fingerprints) and the embedding joins in ``operators/ann.py`` (IVF cells, SRP
+buckets).
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, Window
 
 from camden_spark.config import DedupConfig
 from camden_spark.functions.shingles import jaccard_on_shingles
-from camden_spark.plans.caches import materialize_barrier, track_cache
+from camden_spark.plans.caches import materialize_barrier
 
 
 def band_hashes(sig: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -46,52 +47,63 @@ def capped_key_join(
     obs: Observation | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Skew-capped self-equi-join of ``rows`` on ``keys``: every pair of rows
-    sharing a key group, sides aliased ``l`` and ``r``, with
-    ``l.url < r.url``.  The caller projects and dedupes (a pair
+    sharing a key group, as struct columns ``l`` and ``r`` holding the rows'
+    columns, with ``l.url < r.url``.  The caller projects and dedupes (a pair
     may share several groups).  Also returns a lazy 1-row metrics frame
     (``{kind}_total``, ``{kind}_dropped``, ``rows_in_dropped_{kind}``).
-    The same three sums also fill ``obs`` when given: it rides the size
-    table, so they are counted while the join's own job builds that cache,
-    with no job of their own (read them with ``plans.metrics.observed``).
+    The same three sums also fill ``obs`` when given: it rides the keyed
+    pass, so they are counted by the join's own job, with no job of their
+    own (read them with ``plans.metrics.observed``).
 
     Skew story (explicit, per the north rule): boilerplate-heavy corpora
     produce mega-groups — a single band key shared by thousands of pages —
-    which would turn the self-join into an O(group²) hot task.  We therefore
-    (1) count group sizes with one cached aggregation (one row per distinct
-    key; metrics and keep reuse it), (2) DROP groups larger than ``cap``
-    (counted in the metrics, never silent — recall accounting includes
-    them) along with groups of 1, which cannot pair, (3) prune ``rows`` to
-    the kept keys with a semi-join and repartition on the key to 2x the
-    session's parallelism — the rows are tiny in BYTES but the join emits
-    O(group²) rows, so AQE's byte-based coalescing alone would run it on
-    1-2 tasks (measured: a 2-task 4.7 s IVF stage at sf0.1) — and (4) leave
-    AQE skew-join splitting on as the second line of defense.
-
-    Caller contract: the size table and both join sides each read ``rows``
-    (under AQE the cached size table's scan sits below each side's key
-    exchange, so the sides share no exchange).  When ``rows`` come from a
-    Python UDF, hand in a frame derived from a cached one, so the UDF runs
-    once per row and each read is a codegen'd scan or explode.
+    which would turn the pairing into an O(group²) hot task.  One keyed pass
+    over ``rows`` therefore (1) repartitions on the keys to 2x the session's
+    parallelism — the rows are tiny in BYTES but the pass emits O(group²)
+    rows, so AQE's byte-based coalescing alone would run it on 1-2 tasks
+    (measured: a 2-task 4.7 s IVF stage at sf0.1) — and, with windows over
+    the keys that reuse that partitioning and one sort, numbers and counts
+    each group's rows; (2) DROPS groups larger than ``cap`` (counted in the
+    metrics, never silent — recall accounting includes them): a window
+    collects a group's rows into a list only while the group holds 2 to
+    ``cap`` rows, so no list ever holds more than ``cap`` rows and a
+    mega-group costs one task O(group) through the window's spillable
+    buffer; (3) pairs each row with the rows of its group's list whose url
+    is greater.  ``rows`` is read once, through one exchange, with no join,
+    no aggregate and no cache, so a Python UDF upstream runs once per row.
+    (A ``groupBy`` collecting the lists allocated ~1.5x the bytes: its
+    object aggregate falls back to sorting past 128 groups per task.)
+    Null keys never match, as in an equi-join.
     """
-    sized = rows.groupBy(*keys).agg(F.count("*").alias("_n"))
-    over = F.col("_n") > cap
-    stats = [
-        F.count("*").cast("long").alias(f"{kind}_total"),
-        F.sum(over.cast("long")).alias(f"{kind}_dropped"),
-        F.sum(F.when(over, F.col("_n")).otherwise(0))
-        .cast("long")
-        .alias(f"rows_in_dropped_{kind}"),
-    ]
-    if obs is not None:
-        sized = sized.observe(obs, *stats)
-    sized = track_cache(sized)
-    metrics = sized.agg(*stats)
-    keep = sized.filter((F.col("_n") > 1) & ~over).select(*keys)
     n_parts = rows.sparkSession.sparkContext.defaultParallelism * 2
-    joinable = rows.join(keep, keys, "left_semi").repartition(n_parts, *keys)
-    left, right = joinable.alias("l"), joinable.alias("r")
-    on = [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
-    joined = left.join(right, on=on + [F.col("l.url") < F.col("r.url")])
+    group = Window.partitionBy(*keys)
+    pairable = F.col("_n").between(2, cap)
+    for k in keys:
+        pairable &= F.col(k).isNotNull()
+    counted = (
+        rows.repartition(n_parts, *keys)
+        .withColumn("_i", F.row_number().over(group.orderBy("url")))
+        .withColumn("_n", F.count("*").over(group))
+        .withColumn(
+            "_m", F.collect_list(F.when(pairable, F.struct(*rows.columns))).over(group)
+        )
+    )
+    first, over = F.col("_i") == 1, F.col("_n") > cap
+    stats = [
+        F.count_if(first).alias(f"{kind}_total"),
+        F.count_if(first & over).alias(f"{kind}_dropped"),
+        F.count_if(over).alias(f"rows_in_dropped_{kind}"),
+    ]
+    metrics = counted.agg(*stats)
+    if obs is not None:
+        counted = counted.observe(obs, *stats)
+    joined = (
+        counted.filter(pairable)
+        .select(F.struct(*rows.columns).alias("l"), "_m")
+        .select(
+            "l", F.explode(F.filter("_m", lambda x: x.url > F.col("l.url"))).alias("r")
+        )
+    )
     return joined, metrics
 
 

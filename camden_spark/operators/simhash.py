@@ -3,12 +3,14 @@
 Two docs within Hamming distance ``radius`` of each other on a 64-bit SimHash
 must agree EXACTLY on at least one of ``blocks`` bit-blocks when
 ``blocks > radius`` (pigeonhole).  So: split the 64-bit signature into
-``blocks`` equal blocks, equi-join per block, then verify with the builtin
-``bit_count(a ^ b) <= radius`` — all JVM-side, no UDF anywhere.
+``blocks`` equal blocks, pair the docs sharing a block value, then verify
+with the builtin ``bit_count(a ^ b) <= radius`` — all JVM-side, no UDF
+anywhere.
 
-The block join is ``operators/lsh.capped_key_join`` (its docstring has the
-skew story): block-value groups above ``max_simhash_group`` (e.g. the
-all-zeros block from boilerplate) are dropped and counted.
+The block pairing is ``operators/lsh.capped_key_join``, one keyed pass (its
+docstring has the skew story): block-value groups above
+``max_simhash_group`` (e.g. the all-zeros block from boilerplate) are
+dropped and counted.
 """
 
 from __future__ import annotations

@@ -4,9 +4,10 @@ Stage layout:
 
 1. **Fingerprint** — vectorized pandas UDF adds a ``fingerprints`` column of
    winnowed rolling-hash values (functions/substr.py).  Arrow batches only.
-2. **Candidate join** — explode fingerprints, equi-self-join on the value
-   through ``operators/lsh.capped_key_join`` (its docstring has the skew
-   story: mega-group capping + explicit key repartition).
+2. **Candidate join** — explode fingerprints and pair the rows sharing a
+   value in one keyed pass, ``operators/lsh.capped_key_join`` (its
+   docstring has the skew story: explicit key repartition, a window count
+   per group, mega-group capping).
 3. **Verify** — ``applyInPandas`` over candidate pairs computes the TRUE
    longest common substring with the suffix-array + Kasai LCP kernel; pairs
    with overlap ≥ cfg.min_overlap_chars survive.  Runs ONLY on candidate
@@ -31,7 +32,6 @@ from pyspark.sql.types import (
 
 from camden_spark.config import DedupConfig
 from camden_spark.operators.lsh import capped_key_join, pair_urls
-from camden_spark.plans.caches import track_cache
 from camden_spark.functions.substr import (
     batch_winnow,
     longest_common_substring,
@@ -98,9 +98,11 @@ def verify_pairs_substr(
     across partitions by pair hash and verified batch-wise with
     ``mapInPandas`` — each Arrow batch loops pairs in numpy-backed suffix-array
     code (no global structure, memory bounded by batch).
+
+    ``pairs`` is read three times (both url prunes and the text join), so
+    callers hand in a materialized frame (``materialize_barrier``).
     """
     cfg = cfg or DedupConfig()
-    pairs = track_cache(pairs)  # consumed 3x below (url set x2 + the join)
     # prune the corpus to candidate urls before shuffling text bodies
     texts = pages.select("url", F.col(text_col).alias("_t")).join(
         pair_urls(pairs), "url", "left_semi"

@@ -64,7 +64,7 @@ def _estimated_scan_partitions(df: DataFrame) -> int:
     decide the fan-out.  Returns -1 when unknown (in-memory source, or files
     we cannot stat, e.g. object-store URIs): callers must then leave the
     source partitioning alone rather than risk a full-corpus shuffle."""
-    from urllib.parse import urlparse
+    from urllib.parse import unquote, urlparse
 
     try:
         files = df.inputFiles()
@@ -79,9 +79,9 @@ def _estimated_scan_partitions(df: DataFrame) -> int:
         parsed = urlparse(f)
         if parsed.scheme not in ("", "file"):
             return -1  # remote store: trust the scan's own splitting
-        path = parsed.path or f
+        # inputFiles() returns percent-encoded URIs (a space reads %20)
         try:
-            size = os.path.getsize(path)
+            size = os.path.getsize(unquote(parsed.path))
         except OSError:
             return -1
         total += max(1, -(-size // mpb))
@@ -279,8 +279,8 @@ class DedupPipeline:
             # corpus size once the mega-band cap kicks in).  They remain
             # singletons unless the exact stage clustered them byte-identical.
             # warm, for the same concurrent-branch reason as norm/exact:
-            # candidate_pairs_lsh's band-size-count and band-join branches
-            # both scan sig, and simhash scans it again
+            # the LSH and SimHash branches both read sig, on concurrent
+            # pool threads
             sig = warm_cache(
                 staged("signatures", build_sig, upstream=["exact"])
             )
@@ -303,11 +303,8 @@ class DedupPipeline:
             return candidate_pairs_simhash(sig, cfg, skew["simhash"])[0]
 
         def build_substr() -> DataFrame:
-            # warm: the self-join scans fp on BOTH sides plus the
-            # group-sizing branch — cold-cache branch race otherwise
-            fp = warm_cache(
-                with_fingerprints(distinct_pages, cfg).select("url", "fingerprints")
-            )
+            # no cache: the candidate join reads fp once
+            fp = with_fingerprints(distinct_pages, cfg).select("url", "fingerprints")
             cand, _ = candidate_pairs_substr(fp, cfg, skew["substr"])
             # barrier, as in build_lsh: the verify reads the candidate set
             # three times (both url prunes and the text join).  Pairs LSH

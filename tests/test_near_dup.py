@@ -919,6 +919,32 @@ def test_capped_group_is_dropped_and_counted(spark, op, build, cap_field, kind):
     assert ("y1", "y2") in found
 
 
+@pytest.mark.parametrize(
+    "op,build",
+    [
+        (candidate_pairs_lsh, _capped_lsh_input),
+        (candidate_pairs_simhash, _capped_simhash_input),
+        (candidate_pairs_substr, _capped_substr_input),
+    ],
+    ids=["lsh", "simhash", "substr"],
+)
+def test_candidate_join_is_one_keyed_pass(spark, op, build):
+    """A candidate operator pairs its key groups in one keyed pass: the
+    final plan holds no Join node, and calling the operator caches
+    nothing."""
+    from camden_spark.plans import caches
+    from tools.plan_audit import plan_text
+
+    rows = build(spark)
+    before = len(caches._ENTRIES)
+    pairs, _ = op(rows, CFG)
+    assert len(caches._ENTRIES) == before
+    assert ("y1", "y2") in {(r["url_a"], r["url_b"]) for r in pairs.collect()}
+    text = plan_text(pairs)
+    assert "isFinalPlan=true" in text
+    assert "Join" not in text, text
+
+
 def test_pipeline_reports_skew_metrics_of_every_candidate_join(spark, pages_df):
     """Each candidate join's skew counts land in ``res.metrics`` by the time
     ``run()`` returns (they ride the branches' own jobs), and a cap small

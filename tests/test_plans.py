@@ -408,10 +408,10 @@ def test_ann_near_dup_finds_planted(spark):
 @pytest.mark.parametrize("operator", ["ivf", "srp", "media"])
 def test_operator_evaluates_udf_once(spark, operator):
     """Each near-dup operator's Python UDF has one evaluation node in the
-    final plan: its output is cached before the size table and both join
-    sides read it.  The embedding inputs are unioned with planted twins,
-    the shape of ``embedding_near_dup_lsh``, because a union copies
-    projections into its branches."""
+    final plan, with no cache: ``capped_key_join`` reads its rows once.
+    The embedding inputs are unioned with planted twins, the shape of
+    ``embedding_near_dup_lsh``, because a union copies projections into
+    its branches."""
     import pandas as pd
 
     from camden_spark.datagen import generate_media
@@ -550,6 +550,10 @@ def test_spread_input_sizes_to_session_cores(spark, tmp_path):
         assert spread_input(big) is big
     finally:
         spark.conf.set(key, prev)
+    # inputFiles() percent-encodes the path: a space must not hide the size
+    spaced = _one_file_parquet(spark.range(1000), str(tmp_path / "a b"))
+    assert "%20" in spaced.inputFiles()[0]
+    assert spread_input(spaced).rdd.getNumPartitions() == n
 
 
 def test_pipeline_resplits_one_file_input_to_session_cores(

@@ -3,7 +3,8 @@
 with generated inputs: algebraic guarantees must hold for ARBITRARY text,
 not just the seeded corpus.
 
-Pure numpy/python — no SparkSession, so this file runs in seconds.
+Pure numpy/python except the ``capped_key_join`` property, which runs small
+frames on the session's Spark.
 """
 
 from __future__ import annotations
@@ -168,3 +169,62 @@ def test_union_find_kernel_equals_reference(case):
     out = pd.concat(list(_union_find(iter(batches))), ignore_index=True)
     assert out["url"].is_unique
     assert dict(zip(out["url"], out["cluster_id"])) == _reference_components(edges)
+
+
+@st.composite
+def _keyed_rows(draw):
+    """``(rows, cap)``: (url, key, payload) rows in key groups of 1 to
+    ``cap + 3`` rows, urls drawn from a small pool so a url repeats within
+    and across groups."""
+    cap = draw(st.integers(1, 4))
+    sizes = draw(st.lists(st.integers(1, cap + 3), min_size=1, max_size=6))
+    urls = st.sampled_from(["a", "b", "c", "d", "e", "f", "é"])
+    rows = [
+        (draw(urls), key, draw(st.integers(0, 3)))
+        for key, size in enumerate(sizes)
+        for _ in range(size)
+    ]
+    return draw(st.permutations(rows)), cap
+
+
+@settings(max_examples=20, deadline=None)
+@given(_keyed_rows())
+def test_capped_key_join_equals_brute_force(spark, case):
+    """``capped_key_join`` emits exactly the pair multiset of a brute-force
+    pairing of every key group of at most ``cap`` rows (``l.url < r.url``,
+    duplicate rows included), and both its metrics frame and its
+    Observation carry the group counts of that pairing."""
+    from collections import Counter, defaultdict
+
+    from pyspark.sql import Observation
+
+    from camden_spark.operators.lsh import capped_key_join
+    from camden_spark.plans.metrics import observed
+
+    rows, cap = case
+    groups = defaultdict(list)
+    for url, key, payload in rows:
+        groups[key].append((url, payload))
+    want = Counter(
+        (ua, ub, pa, pb)
+        for members in groups.values()
+        if len(members) <= cap
+        for ua, pa in members
+        for ub, pb in members
+        if ua < ub
+    )
+    over = [len(m) for m in groups.values() if len(m) > cap]
+    want_metrics = {
+        "g_total": len(groups),
+        "g_dropped": len(over),
+        "rows_in_dropped_g": sum(over),
+    }
+    df = spark.createDataFrame(rows, "url string, key long, payload long")
+    obs = Observation("prop_capped_key_join")
+    joined, metrics = capped_key_join(df, ["key"], cap, "g", obs)
+    got = Counter(
+        map(tuple, joined.select("l.url", "r.url", "l.payload", "r.payload").collect())
+    )
+    assert got == want
+    assert observed(obs) == want_metrics
+    assert metrics.first().asDict() == want_metrics
